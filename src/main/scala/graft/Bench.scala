@@ -41,44 +41,7 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
 
-  private type QueryFn =
-    (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame
-
-  /** window-insensitive per-run counters (r18 verdict task 2): every
-    * r18 keep/revert adjudication leaned on summed executor task time
-    * and stage counts (FloorProbe/StageCensus machinery) because wall
-    * totals on this host swing ±50% with external load; the bench now
-    * rides the same counters per query so the driver's artifacts carry
-    * them without forensic reconstruction. Counters are read via a
-    * settle-poll (the async listener bus drains after the action
-    * returns — the StageCensus lesson), OUTSIDE the wall-clock region.
-    */
-  private class RunCounter extends org.apache.spark.scheduler.SparkListener {
-    private val stagesN = new java.util.concurrent.atomic.AtomicInteger
-    private val taskMs = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      stagesN.incrementAndGet(); ()
-    }
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      if (t.taskInfo != null)
-        taskMs.addAndGet(t.taskInfo.finishTime - t.taskInfo.launchTime)
-      ()
-    }
-    def snapshot: (Int, Long) = (stagesN.get, taskMs.get)
-    /** poll until two consecutive reads agree (bounded ~1s) */
-    def settled(): (Int, Long) = {
-      var prev = snapshot
-      var spins = 0
-      Thread.sleep(50)
-      var cur = snapshot
-      while (cur != prev && spins < 20) {
-        prev = cur; Thread.sleep(50); cur = snapshot; spins += 1
-      }
-      cur
-    }
-  }
+  import SparkEntry.QueryFn
 
   /** rewrite each sf table as a multi-file parquet copy; returns the
     * staged dir. Events' ns-as-long column passes through as written
@@ -219,7 +182,7 @@ object Bench {
     * previously hardcoded 32, silently mismatching hosts with a
     * different core count or an explicit SPARK_GRAFT_CPUS override)
     */
-  private def benchCores: Int =
+  private[graft] def benchCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
@@ -356,12 +319,8 @@ object Bench {
 
     // optional regex filter for local experiments: SPARK_GRAFT_ONLY=q01|q25;
     // the amplified mode defaults to its headline doc-pipeline set
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .orElse(amplify.map(_ => AmplifySet)).map(_.r)
-    def selected(p: ((String, QueryFn)) => Boolean): Seq[(String, QueryFn)] =
-      SparkEntry.queries.toSeq.filter(p)
-        .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
-        .sortBy(_._1)
+    val selection = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")
+      .orElse(amplify.map(_ => AmplifySet)).getOrElse(""))
 
     // sf-proportional media table (r13 verdict task 7): staged once
     // (untimed) when a selected query reads it — sf×100k images, ×k in
@@ -370,9 +329,7 @@ object Bench {
     // cost grows with real content diversity and the twin pays the same
     // candidate volume). Unstaged runs (SPARK_GRAFT_STAGE=0) keep the
     // fixture fallback — the run dir is the read-only sf dir.
-    val mediaSelected = SparkEntry.queries.keys.exists(n =>
-      MediaNames.findFirstIn(n).isDefined &&
-        only.forall(_.findFirstIn(n).isDefined))
+    val mediaSelected = selection.exists { case (n, _) => MediaNames.findFirstIn(n).isDefined }
     if (mediaSelected && runDir != sfDir)
       ensureMedia(spark, runDir, mediaN(sfDir) * math.max(1, amplify.getOrElse(1)))
 
@@ -416,23 +373,31 @@ object Bench {
       else "timed_under_load"
     sampleLoad()
 
-    val counter = new RunCounter
-    spark.sparkContext.addSparkListener(counter)
+    val metrics = new QueryMetrics
+    spark.sparkContext.addSparkListener(metrics)
+    val incomplete = scala.collection.mutable.ListBuffer[String]()
 
-    /** wall seconds + window-insensitive (stages, task-time s) deltas */
-    def runOnce(fn: QueryFn, clear: Boolean = true): (Double, Int, Double) = {
+    /** window-insensitive per-run counters: keep/revert adjudications
+      * lean on summed executor task time and stage counts (`graft.Trace
+      * census` machinery) because wall totals on a shared host swing ±50%
+      * with external load; the bench rides the same counters per query so
+      * its artifacts carry them without forensic reconstruction. Each run
+      * is its own [[QueryMetrics]] group; its metrics are read after the
+      * group completes (bounded wait, a run that times out is listed in
+      * `metrics_incomplete`), OUTSIDE the wall-clock region.
+      */
+    def runOnce(name: String, fn: QueryFn, clear: Boolean = true): QueryMetrics.Run = {
       // drop persisted intermediates (x03's candidate set, x06's bucket
       // table): they exist for intra-query branch reuse, and Spark's
       // CacheManager would otherwise hand them to the NEXT run by plan
       // identity — every timed run must pay the full compute, like the
       // DuckDB baseline does
       if (clear) spark.catalog.clearCache()
-      val (s0, t0ms) = counter.snapshot
-      val t0 = System.nanoTime()
-      fn(spark, runDir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val (s1, t1ms) = counter.settled()
-      (wall, s1 - s0, (t1ms - t0ms) / 1000.0)
+      val run = metrics.measure(spark.sparkContext, s"bench:$name") {
+        fn(spark, runDir).write.format("noop").mode("overwrite").save()
+      }
+      if (!run.complete) incomplete += name
+      run
     }
 
     val failed = scala.collection.mutable.ListBuffer[(String, String)]()
@@ -470,10 +435,15 @@ object Bench {
     val sfMins = scala.collection.mutable.LinkedHashMap[String, Double]()
     val mTimings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val mMins = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // window-insensitive per-query metrics (r18 verdict task 2): min
-    // summed-task-time and min stage count across the timed sweeps
-    val taskTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val stageCounts = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // every timed run of each live query, both sections: its wall feeds
+    // the median/min maps, its totals the window-insensitive per-query
+    // metrics
+    val runs = scala.collection.mutable.LinkedHashMap[String,
+      scala.collection.mutable.ListBuffer[QueryMetrics.Run]]()
+    def fail(name: String, e: Throwable): Unit = {
+      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+      failed += name -> msg.linesIterator.take(1).mkString.take(200)
+    }
     val amp = amplify.getOrElse(0)
     var passes = 0 // completed warm-up/sweep passes across both sections
     def emitPartial(): Unit = {
@@ -498,66 +468,48 @@ object Bench {
         outMed: scala.collection.mutable.LinkedHashMap[String, Double],
         outMin: scala.collection.mutable.LinkedHashMap[String, Double],
         clear: Boolean = true): Unit = {
-      val samples = scala.collection.mutable.LinkedHashMap[String,
-        scala.collection.mutable.ListBuffer[Double]]()
       qs.foreach { case (name, fn) =>
         // warm-up: JIT + parquet footer cache + codegen cache; its time
         // rides as the provisional partial-output entry
         try {
-          val (t, _, _) = runOnce(fn, clear)
-          samples(name) = scala.collection.mutable.ListBuffer()
+          val t = runOnce(name, fn, clear).wallS
+          runs(name) = scala.collection.mutable.ListBuffer()
           outMed(name) = t
           outMin(name) = t
-        } catch {
-          case e: Throwable =>
-            val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-            failed += name -> msg.linesIterator.take(1).mkString.take(200)
-        }
+        } catch { case e: Throwable => fail(name, e) }
       }
       passes += 1
       emitPartial()
       // sweep runs are guarded too (r4 advice): a query that passed
       // warm-up but throws transiently mid-sweep is reported in `failed`
       // and dropped, instead of crashing the bench before bench_out.json
-      val alive = scala.collection.mutable.LinkedHashSet[String]() ++ samples.keys
       (1 to 3).foreach { _ =>
         qs.foreach { case (name, fn) =>
-          if (alive(name)) {
-            try {
-              val (t, st, tt) = runOnce(fn, clear)
-              samples(name) += t
-              // min across sweeps: stage counts are deterministic (AQE
-              // decisions aside); task time is the window-insensitive
-              // floor the adjudications use
-              if (!stageCounts.contains(name) || st < stageCounts(name))
-                stageCounts(name) = st.toDouble
-              if (!taskTimes.contains(name) || tt < taskTimes(name))
-                taskTimes(name) = tt
-            } catch {
+          if (runs.contains(name)) {
+            try runs(name) += runOnce(name, fn, clear)
+            catch {
               case e: Throwable =>
-                val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-                failed += name -> msg.linesIterator.take(1).mkString.take(200)
-                alive -= name
-                samples.remove(name)
+                fail(name, e)
+                runs.remove(name)
                 outMed.remove(name)
                 outMin.remove(name)
-                stageCounts.remove(name)
-                taskTimes.remove(name)
             }
           }
         }
         sampleLoad()
-        samples.foreach { case (name, runs) =>
-          val s = runs.sorted
-          outMed(name) = s(s.size / 2)
-          outMin(name) = s.head
+        qs.foreach { case (name, _) =>
+          runs.get(name).foreach { rs =>
+            val s = rs.map(_.wallS).sorted
+            outMed(name) = s(s.size / 2)
+            outMin(name) = s.head
+          }
         }
         passes += 1
         emitPartial()
       }
     }
 
-    timeAll(selected { case (n, _) => !n.startsWith("m") }, sfTimings, sfMins)
+    timeAll(selection.filterNot(_._1.startsWith("m")), sfTimings, sfMins)
 
     // the m-suite runs over a SESSION-CACHED fixture catalog (r7 verdict
     // task 7): the base metadata frames (constant-size golden fixtures)
@@ -569,7 +521,7 @@ object Bench {
     // so each timed run still executes its full plan; only the
     // KB-sized parquet inputs come from memory instead of re-reading
     // footers ~90 times.
-    val mQueries = selected { case (n, _) => n.startsWith("m") }
+    val mQueries = selection.filter(_._1.startsWith("m"))
     val fixtureFrames = if (mQueries.nonEmpty) {
       val c = meta.FixtureCatalog.default
       val frames = Seq(c.listing(spark), c.tableMeta(spark),
@@ -653,6 +605,14 @@ object Bench {
       ((mGuard == "ok" && mFloorRatio <= 1.3) ||
         (mGuard == "n/a" && noMQueriesExist)) &&
       loadGate == "ok" && failed.isEmpty
+    // min across sweeps: stage counts are deterministic (AQE decisions
+    // aside); task time and CPU time are the window-insensitive floors
+    // the adjudications use
+    def minOf(f: QueryMetrics.Totals => Double) =
+      runs.map { case (name, rs) => name -> rs.map(r => f(r.totals)).min }
+    val stageCounts = minOf(_.stages.toDouble)
+    val taskTimes = minOf(_.taskWallS)
+    val cpuTimes = minOf(_.cpuS)
     // window-insensitive totals ride the FINAL line (r18 verdict task
     // 2): stage counts are deterministic across windows and task time
     // is far less window-bound than wall, so a "0.59× total" window is
@@ -662,7 +622,7 @@ object Bench {
     val gateKeys =
       s""""load_gate":${jstr(loadGate)},"start_load":${r3(startLoad)},"quiet_wait_s":$quietWaitedS,"canonical":$canonical,$wiKeys"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(sfTimings)},"queries_min":${jmap(sfMins)},"m_queries":${jmap(mTimings)},"m_queries_min":${jmap(mMins)},"task_time_s":${jmapR(taskTimes)},"stages":${jmapI(stageCounts)},"m_total":${mTimings.values.sum},"m_guard":${jstr(mGuard)},$gateKeys,"total_min":${sfMins.values.sum},"staged":$doStage,"amplify":$amp,"load_avg":$loads,"failed":$jfails,"n_ok":${sfTimings.size + mTimings.size},"n_failed":${failed.size},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(sfTimings)},"queries_min":${jmap(sfMins)},"m_queries":${jmap(mTimings)},"m_queries_min":${jmap(mMins)},"task_time_s":${jmapR(taskTimes)},"stages":${jmapI(stageCounts)},"cpu_s":${jmapR(cpuTimes)},"metrics_incomplete":${incomplete.map(jstr).mkString("[", ",", "]")},"unmapped":${metrics.unmapped},"m_total":${mTimings.values.sum},"m_guard":${jstr(mGuard)},$gateKeys,"total_min":${sfMins.values.sum},"staged":$doStage,"amplify":$amp,"load_avg":$loads,"failed":$jfails,"n_ok":${sfTimings.size + mTimings.size},"n_failed":${failed.size},"sf":${jstr(sfDir)}}"""
     val jsonShort =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${jmapR(sfTimings)},"m_total":${r3(mTimings.values.sum)},"m_guard":${jstr(mGuard)},$gateKeys,"total_min":${r3(sfMins.values.sum)},"staged":$doStage,"amplify":$amp,"load_avg":$loads,"failed":$jfails,"n_ok":${sfTimings.size + mTimings.size},"n_failed":${failed.size},"sf":${jstr(sfDir)}}"""
     // the 175-query map outgrew the stdout tail the driver keeps — the

@@ -21,9 +21,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q05_region_revenue")(spark, "/root/testdata/sf0.001")
 
+  type QueryFn = (SparkSession, String) => DataFrame
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  def queries: Map[String, QueryFn] =
     packs.flatMap(_.queries).toMap
+
+  /** the queries whose name matches `regex`, sorted by name */
+  def select(regex: String): Seq[(String, QueryFn)] = {
+    val r = regex.r
+    queries.toSeq.filter { case (n, _) => r.findFirstIn(n).isDefined }.sortBy(_._1)
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.

@@ -47,7 +47,7 @@ object GraftSession {
       // writer — nPartitions spill files opened per MAP task — which a
       // real deployment (thousands of partitions) never uses. Forcing
       // the production writer cut the 48-query sub-second sweep 23%
-      // wall / 34% summed task time (measured, FloorProbe); this aligns
+      // wall / 34% summed task time (measured, graft.Trace census); this aligns
       // local execution with the at-scale code path rather than tuning
       // for the bench.
       .config("spark.shuffle.sort.bypassMergeThreshold", "0")

@@ -503,7 +503,7 @@ object Similarity {
     // pruning makes the copies non-identical, so exchange reuse never
     // fires; x79's plan scanned its stored communities artifact 6×).
     // Two longs per corpus row, MEMORY_AND_DISK; caller clears cache.
-    // Measured (FloorProbe, stage counts are deterministic and window-
+    // Measured (graft.Trace census, stage counts are deterministic and window-
     // insensitive): x72 32→27 stages, x78 77→53, x79 43→39, with
     // matching task-time drops in-window — the one persist candidate of
     // the r18 audit where AQE's runtime stage reuse does NOT already

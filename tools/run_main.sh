@@ -1,6 +1,9 @@
 #!/bin/bash
-# Run a graft main class with the same JVM options sbt's forked run uses,
-# without sbt's project lock (lets a bench and a verify run side-by-side).
+# Run a graft main class (graft.Bench, graft.Verify, graft.MediaBench, or the
+# graft.Trace census|jobs|phases|explain diagnostics) with the same JVM
+# options sbt's forked run uses, without sbt's project lock (lets a bench
+# and a verify run side-by-side). Example:
+#   tools/run_main.sh graft.Trace census '^q0' <sfDir>
 # Paths resolve from the script's own location / env (r14 advice) so the
 # script survives a different checkout dir or Spark install.
 REPO_ROOT="$(cd "$(dirname "$0")/.." && pwd)"
