@@ -29,7 +29,10 @@ import graft.SparkEntry.{select, QueryFn}
   */
 object Trace {
 
-  final case class Phases(name: String, buildS: Double, planS: Double, exec: Run)
+  /** `run` times build, plan and execution together */
+  final case class Phases(name: String, buildS: Double, planS: Double, run: Run) {
+    def execS: Double = run.wallS - buildS - planS
+  }
 
   private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
@@ -70,7 +73,7 @@ object Trace {
         buildS = (t1 - t0) / 1e9; planS = (System.nanoTime() - t1) / 1e9
         noop(df)
       }
-      Phases(name, buildS, planS, r.copy(wallS = r.wallS - buildS - planS))
+      Phases(name, buildS, planS, r)
     }.head
 
   def explain(spark: SparkSession, qs: Seq[(String, QueryFn)], dir: String): Seq[(String, String)] =
@@ -122,9 +125,9 @@ object Trace {
         val ps = phases(spark, metrics, select(args(1)), dir)
         println(f"${"query"}%-28s ${"build_s"}%8s ${"plan_s"}%8s ${"exec_s"}%8s $Cols")
         ps.foreach(p => println(f"${p.name}%-28s ${p.buildS}%8.3f ${p.planS}%8.3f " +
-          f"${p.exec.wallS}%8.3f ${cols(p.exec.totals)}"))
+          f"${p.execS}%8.3f ${cols(p.run.totals)}"))
         println(f"${"TOTAL"}%-28s ${ps.map(_.buildS).sum}%8.3f ${ps.map(_.planS).sum}%8.3f " +
-          f"${ps.map(_.exec.wallS).sum}%8.3f ${total(ps.map(_.exec), metrics)}")
+          f"${ps.map(_.execS).sum}%8.3f ${total(ps.map(_.run), metrics)}")
       case "explain" =>
         explain(spark, select(args(1)), dir).foreach { case (n, p) => println(s"\n===== $n =====\n$p") }
       case m => sys.error(s"unknown mode $m; $usage")

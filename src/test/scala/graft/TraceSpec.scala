@@ -37,7 +37,7 @@ class TraceSpec extends SparkSpec {
     val ps = withMetrics(Trace.phases(spark, _, qs, "-"))
     assert(ps.map(_.name) == names)
     ps.foreach { p =>
-      assert(p.buildS >= 0 && p.planS > 0 && p.exec.totals.jobs >= 1, p.name)
+      assert(p.buildS >= 0 && p.planS > 0 && p.run.totals.jobs >= 1 && p.execS > 0, p.name)
     }
   }
 
