@@ -319,12 +319,14 @@ class Engine(spark: SparkSession, catalog: MetaCatalog,
 
   /** Cache contract (r11 advice): the dedup/graph/budget operators
     * persist intermediates at MEMORY_AND_DISK for intra-query branch
-    * reuse, and those blocks stay registered until the caller drops
-    * them — a long-lived session should call [[releaseCaches]] (or
-    * `spark.catalog.clearCache()`) between pipeline invocations once
-    * the returned frames are materialized; streaming/CC parquet spills
-    * are reclaimed by [[graft.stream.StreamOps.cleanupSpillDirs]] under
-    * the same "frames materialized first" rule.
+    * reuse through [[graft.core.CacheScope.keep]]. A caller that opens
+    * a [[graft.core.CacheScope]] around a pipeline invocation and
+    * closes it once the returned frames are materialized releases
+    * exactly that invocation's blocks. Without a scope the blocks stay
+    * registered until this scope-less fallback drops the whole session
+    * cache; it also reclaims streaming/CC parquet spills via
+    * [[graft.stream.StreamOps.cleanupSpillDirs]] under the same "frames
+    * materialized first" rule.
     */
   def releaseCaches(): Unit = {
     spark.catalog.clearCache()

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -229,8 +231,8 @@ object MediaBench {
     // every clip all-intra H.264 (r18): the dedicated decode-throughput
     // point for the spec codec (the default mix carries 1-in-19)
     val avcAll = sys.env.get("SPARK_GRAFT_MEDIA_AVC").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = core.GraftSession.builder("graft-media-bench", cpus)
+    val spark = core.GraftSession.builder("graft-media-bench",
+        Bench.benchCores.toString)
       // harness-only maxResultSize raise — see the Bench.main note
       .config("spark.driver.maxResultSize", "8g")
       .getOrCreate()
@@ -367,12 +369,12 @@ object MediaBench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     sampleLoad()
 
-    def timeOnce(fn: () => Unit): Double = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      fn()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def timeOnce(fn: () => Unit): Double =
+      Using.resource(core.CacheScope.open()) { _ =>
+        val t0 = System.nanoTime()
+        fn()
+        (System.nanoTime() - t0) / 1e9
+      }
     // optional phase filter (SPARK_GRAFT_MEDIA_PHASES regex): the 1M+
     // points run extraction + the wide-band probe only — the 8×8-bit
     // geometry is BY DESIGN out of regime there (~8·n²/256 candidates)

@@ -1,9 +1,12 @@
 package graft
 
+import scala.util.Using
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.QueryMetrics.{Run, Totals}
+import graft.core.CacheScope
 import graft.SparkEntry.{select, QueryFn}
 
 /** Per-query forensics. Each mode selects queries by a name regex, runs
@@ -47,10 +50,8 @@ object Trace {
     Seq.fill(n)(pass())
   }
 
-  private def measure(spark: SparkSession, metrics: QueryMetrics, name: String)(body: => Unit): Run = {
-    spark.catalog.clearCache()
-    metrics.measure(spark.sparkContext, s"trace:$name")(body)
-  }
+  private def measure(spark: SparkSession, metrics: QueryMetrics, name: String)(body: => Unit): Run =
+    Using.resource(CacheScope.open())(_ => metrics.measure(spark.sparkContext, s"trace:$name")(body))
 
   /** the sweep with the least total wall */
   def census(spark: SparkSession, metrics: QueryMetrics, qs: Seq[(String, QueryFn)],

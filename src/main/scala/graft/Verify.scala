@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.Using
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   */
@@ -22,14 +24,14 @@ object Verify {
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
     selected.foreach { case (name, fn) =>
-      // per-query cache scope (r18 ADVICE item 1): in-function persists
-      // (comm/ue/perComm, CC edge caches) rely on the caller-clears
-      // contract; Bench.runOnce clears per run, and without the same
-      // clear here a full verify accumulates every query's cached
-      // blocks for the whole ~181-query session
-      spark.catalog.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // one CacheScope per query (r18 ADVICE item 1): closing it after
+      // the write releases the query's in-function persists (comm/ue/
+      // perComm, CC edge caches), so a full verify never holds more than
+      // one query's cached blocks
+      try Using.resource(core.CacheScope.open()) { _ =>
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

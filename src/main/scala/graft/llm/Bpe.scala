@@ -2,7 +2,8 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.CacheScope
 
 /** Byte-pair-encoding tokenizer training (Sennrich et al. 2016) — the
   * third leg of the tokenizer-prep stool next to the vocabulary-coverage
@@ -108,12 +109,12 @@ object Bpe {
     * Round N's argmax is also round N's materializer: dict N caches on
     * that collect, and only THEN does dict N−1 unpersist — one job per
     * round, never a dedicated `count()`, and the live set stays at two
-    * vocab-sized tables with O(1) recompute depth. Caller runs
-    * `spark.catalog.clearCache()` when done.
+    * vocab-sized tables with O(1) recompute depth. The open
+    * [[graft.core.CacheScope]] releases the last one.
     */
   def bpeTrain(docs: DataFrame, nMerges: Int): DataFrame = {
     val spark = docs.sparkSession
-    var dict = initDict(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    var dict = CacheScope.keep(initDict(docs))
     var prev: DataFrame = null
     val merges = scala.collection.mutable.ArrayBuffer.empty[
       (Long, String, String, String, Long)]
@@ -132,10 +133,9 @@ object Bpe {
         merges += ((round.toLong, l, r, merged, cnt))
         val pat = "(?<= )" + java.util.regex.Pattern.quote(pair) + "(?= )"
         val rep = java.util.regex.Matcher.quoteReplacement(merged)
-        val next = dict.withColumn("seq",
+        val next = CacheScope.keep(dict.withColumn("seq",
           trim(regexp_replace(concat(lit(" "), col("seq"), lit(" ")),
-            lit(pat), lit(rep))))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+            lit(pat), lit(rep)))))
         prev = dict
         dict = next
         round += 1

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Deduplication operators (SURVEY §2.11 X5): exact, MinHash+LSH banded
   * near-dup, n-gram Jaccard verification, and SimHash — every candidate
   * generation is BUCKETED (hash-groupBy or band-bucket equi-join); there
@@ -382,8 +384,7 @@ object Dedup {
     // keeps every loop iteration's plan O(1) (the r12 plan-audit
     // lesson) and its real file stats drive the materialization-regime
     // choice below.
-    val edgesCached = edgesRaw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edgesCached = CacheScope.keep(edgesRaw)
     // shared tail: singleton docs (in no surviving edge) label to
     // themselves (sizes, when wanted, ride [[clustersFromPairs]]'s wrap)
     def finish(labels: DataFrame, vertIds: DataFrame): DataFrame = {
@@ -613,15 +614,13 @@ object Dedup {
     * [[candidatePairs]] cap; benchmark-sized eval sets do not.
     *
     * Cache contract: the shared band table stays persisted until the
-    * caller runs `spark.catalog.clearCache()` — same convention as
-    * [[graft.llm.Similarity.quantizedTopK]]'s one-shot form (the bench
-    * clears per run).
+    * open [[graft.core.CacheScope]] closes — same convention as
+    * [[graft.llm.Similarity.quantizedTopK]]'s one-shot form.
     */
   def fuzzyDecontam(docs: DataFrame, evalMod: Long = 10): DataFrame = {
     // one signature pass feeds both sides of the band join — branch
     // materialized once (no subplan reuse across DataFrame branches)
-    val bb = bandsInRow(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bb = CacheScope.keep(bandsInRow(docs))
     val ev = bb.filter(col("doc_id") % evalMod === 0)
       .select(col("band"), col("bh"), col("doc_id").as("eval_id"))
     val hits = bb.filter(col("doc_id") % evalMod =!= 0)
@@ -660,7 +659,7 @@ object Dedup {
     * [[fuzzyDecontam]] discipline, no force-broadcast), and the in-batch
     * check is a per-bucket min-id window on the bands' own shuffle — no
     * self-join, so a degenerate bucket costs O(bucket), not O(bucket²).
-    * Caller runs `spark.catalog.clearCache()` when done (the
+    * The open CacheScope releases the batch bands (the
     * [[fuzzyDecontam]] convention).
     */
   def incrementalDedup(corpus: DataFrame, batch: DataFrame): DataFrame =
@@ -681,8 +680,7 @@ object Dedup {
     */
   def incrementalDedupWithIndex(corpusKeys: DataFrame,
       batch: DataFrame): DataFrame = {
-    val nb = bandsInRow(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nb = CacheScope.keep(bandsInRow(batch))
     val vsCorpus = nb.join(corpusKeys, Seq("band", "bh"), "left_semi")
       .select(col("doc_id")).distinct()
     val wb = org.apache.spark.sql.expressions.Window
@@ -717,13 +715,12 @@ object Dedup {
     * exactly the full-corpus collision outcome for sample pairs; pairs
     * where either doc has no shingles (<3 tokens) have no defined J and
     * are excluded. The shingle table persists — three branches (sizes +
-    * both sides of the intersection self-join) read it; caller runs
-    * `spark.catalog.clearCache()` (the [[fuzzyDecontam]] convention).
+    * both sides of the intersection self-join) read it; the open
+    * CacheScope releases it (the [[fuzzyDecontam]] convention).
     */
   def lshRecallAudit(docs: DataFrame, sampleMod: Long = 20): DataFrame = {
     val sample = docs.filter(col("doc_id") % sampleMod === 0)
-    val dsh = shingles(sample)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val dsh = CacheScope.keep(shingles(sample))
     val sz = dsh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     // audit-sized all-pairs base (see scaladoc) — broadcastable by size
     val pairsBase = sz.select(col("doc_id").as("doc_a"), col("sz").as("sz_a"))
@@ -885,9 +882,9 @@ object Dedup {
     // ONE corpus md5 pass: the persisted distinct-fp frame feeds both
     // the bitmap build (positions are fp-dedup-invariant) and the
     // exact-check join — the corpus text is scanned and hashed once,
-    // not twice (caller releases the cache per the Engine contract)
-    val fps = corpus.select(md5(col("text")).as("fp")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // not twice (the open CacheScope releases it)
+    val fps = CacheScope.keep(
+      corpus.select(md5(col("text")).as("fp")).distinct())
     val words = bloomBitmapOfFps(fps, mBits, kHashes)
     val corpusFps = fps.withColumn("dup", lit(true))
     val gated = batch

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryPack
-import graft.core.Tables
+import graft.core.{CacheScope, Tables}
 
 /** LLM-data-pipeline query surface (SURVEY §2.11 X3-X6 + multimodal):
   * dedup (exact / MinHash-LSH / SimHash / Jaccard), similarity search
@@ -279,10 +279,9 @@ object LlmQueries extends QueryPack {
       val changed = Dedup.snapshotDiff(d, crawlNext(d))
         .filter(col("status") === "changed")
         .select(col("doc_id").as("vec_id"))
-      val corpus = e.join(changed, Seq("vec_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val batch = e.join(changed, Seq("vec_id"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val corpus =
+        CacheScope.keep(e.join(changed, Seq("vec_id"), "left_anti"))
+      val batch = CacheScope.keep(e.join(changed, Seq("vec_id"), "left_semi"))
       val graph = ArtifactStore.cached(s, dir, "corpus_graph",
           s"k5.b$LshBands.w$LshBits") {
         Similarity.knnGraph(corpus, k = 5, nBands = LshBands,

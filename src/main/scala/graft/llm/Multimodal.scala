@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Multimodal-column handling (north star: images/audio/video ride along
   * a 100 TB pipeline as opaque binary columns + typed metadata).
   *
@@ -1018,8 +1020,7 @@ object Multimodal {
     * now pays the same single decode as the stored-artifact path.
     */
   def mediaDedupKeep(media: DataFrame): DataFrame = {
-    val x = mediaExtractAll(media)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val x = CacheScope.keep(mediaExtractAll(media))
     mediaDedupKeepFrom(
       x.select(col("media_id"), col("kind")),
       x.select(col("media_id"), col("kind"), col("phash64")),
@@ -1065,8 +1066,7 @@ object Multimodal {
     // stages through the stored-artifact plan — the demo path previously
     // decoded every payload up to 4× (the quality gate's own pass + the
     // three per-modality extract scans)
-    val x = mediaExtractAll(media)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val x = CacheScope.keep(mediaExtractAll(media))
     mediaCurationFunnelFrom(
       x.select(col("media_id"), col("kind"), col("dec_width"),
         col("dec_height"), col("dec_brightness"), col("dec_duration_ms"),
@@ -1100,10 +1100,10 @@ object Multimodal {
     // key of all four stage-2 inputs, and each reference re-ran the
     // whole [stats scan → verdict → filter] chain as its own broadcast
     // build (the funnel ran ~40 single-stage extract-cache scans per
-    // execution). One media_id column, MEMORY_AND_DISK; caller clears
-    // cache (house rule).
-    val survivors = q.filter(col("keep")).select(col("media_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // execution). One media_id column, MEMORY_AND_DISK; the open
+    // CacheScope releases it.
+    val survivors =
+      CacheScope.keep(q.filter(col("keep")).select(col("media_id")))
     // the four survivor-JOINED frames measured persisted and REVERTED
     // (r19 A/B): jobs 211→154 but wall WORSE in both pairs (10.1→12.4,
     // 11.7→12.6 s) — four materialization barriers serialize a DAG
@@ -1264,8 +1264,7 @@ object Multimodal {
     */
   def mediaCurationFunnelAuto(media: DataFrame,
       budgetPairs: Long = 200000000L): DataFrame = {
-    val x = mediaExtractAll(media)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val x = CacheScope.keep(mediaExtractAll(media))
     val imgHash = x.select(col("media_id"), col("kind"), col("phash64"))
     val (nBands, tau) = autoBandGeometry(imgHash, "phash64", budgetPairs)
     // the selected geometry rides on every output row (r16 ADVICE):
@@ -1407,9 +1406,9 @@ object Multimodal {
     // copy prunes `rep` away, turning the agg into a plain distinct),
     // so the copies can never canonicalize equal and each re-ran the
     // full-volume exchange. Two longs per distinct hash,
-    // MEMORY_AND_DISK; caller clears cache (house rule).
-    val reps = h.groupBy(col("h")).agg(min(col("media_id")).as("rep"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // MEMORY_AND_DISK; the open CacheScope releases it.
+    val reps =
+      CacheScope.keep(h.groupBy(col("h")).agg(min(col("media_id")).as("rep")))
     val stars = h.join(reps, Seq("h"))
       .filter(col("media_id") =!= col("rep"))
       .select(col("rep").as("id_a"), col("media_id").as("id_b"))

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Deterministic hash-based sampling and dataset splitting — the
   * training-data-pipeline staples a 100 TB corpus needs to be
   * REPRODUCIBLE: a document's split/sample membership depends only on
@@ -154,14 +156,13 @@ object Sampling {
     * PERSISTED, and `n_min` (one long) collects at construction; the
     * accept pass is then one broadcast join of the tiny count table
     * onto the corpus + a pure-map predicate — one corpus shuffle-free
-    * pass, no window, no global sort. Caller runs
-    * `spark.catalog.clearCache()` when done (the
-    * [[graft.llm.Dedup.fuzzyDecontam]] convention).
+    * pass, no window, no global sort. The open CacheScope releases
+    * the count table (the [[graft.llm.Dedup.fuzzyDecontam]]
+    * convention).
     */
   def temperatureResample(docs: DataFrame): DataFrame = {
-    val counts = docs.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_source"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = CacheScope.keep(docs.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_source")))
     val nMin = counts.agg(min(col("n_source"))).head().getLong(0)
     docs.join(broadcast(counts), Seq("source"))
       .select(col("doc_id"), col("source"), col("n_source"),
@@ -192,12 +193,11 @@ object Sampling {
     * re-evaluates it interpreted per row (measured 5.2 s vs 0.9 s exec
     * at sf0.1); a window `max() OVER ()` or broadcast cross join is
     * worse still (single-partition collapse / codegen-hostile BNLJ).
-    * Caller runs `spark.catalog.clearCache()` when done — the
+    * The open CacheScope releases it — the
     * [[graft.llm.Dedup.fuzzyDecontam]] convention.
     */
   def dsirResample(docs: DataFrame): DataFrame = {
-    val w = TextOps.dsirWeights(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val w = CacheScope.keep(TextOps.dsirWeights(docs))
     val wMax = w.agg(max(col("dsir_score"))).head().getDouble(0)
     w.withColumn("u",
         hashU32(col("doc_id"), "dsir").cast("double") / lit(4294967296.0))
@@ -260,11 +260,10 @@ object Sampling {
       nBuckets: Int = 1024): DataFrame = {
     require(Integer.bitCount(nBuckets) == 1, "nBuckets must be a power of 2")
     val shift = 32 - Integer.numberOfTrailingZeros(nBuckets)
-    val t = docs.select(col("doc_id"),
+    val t = CacheScope.keep(docs.select(col("doc_id"),
         hashU32(col("doc_id"), "shard").as("u32"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .withColumn("bucket", shiftright(col("u32"), shift).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("bucket", shiftright(col("u32"), shift).cast("int")))
     val sums: Array[(Int, Long)] = t.groupBy(col("bucket"))
       .agg(sum(col("n_tokens")).as("s")).collect()
       .map(r => (r.getInt(0), r.getLong(1)))
@@ -328,13 +327,12 @@ object Sampling {
     // qualityScore-join composition re-scanned the corpus and shuffled
     // 2× corpus rows on doc_id for nothing)
     val scoreCol = TextOps.qualityScoreCols(col("text"))._3
-    val s = docs
+    val s = CacheScope.keep(docs
       .select(col("doc_id"), scoreCol.as("quality_score"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
       .withColumn("bucket",
         least(lit(nBuckets - 1), greatest(lit(0),
-          floor(col("quality_score") * nBuckets).cast("int"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          floor(col("quality_score") * nBuckets).cast("int")))))
     // per-bucket token totals AND max doc_id in one pass: the boundary
     // cell's maxId (for the refinement's id-range width) rides the
     // level-1 collect instead of costing its own job
@@ -419,8 +417,7 @@ object Sampling {
     val spark = cellIn.sparkSession
     import spark.implicits._
     val grpCap = 2 * nBuckets
-    var cell = cellIn
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var cell = CacheScope.keep(cellIn)
     var (cellLo, cellHi) = (lo, hi)
     var above = aboveIn
     var parts = List.empty[DataFrame]
@@ -438,7 +435,7 @@ object Sampling {
     // the previous level's cell is superseded once THIS level's grouped
     // collect has materialized from the new cell's cache — unpersist it
     // then (r12 advice): a deep refinement otherwise accumulates cached
-    // copies of every shrinking cell until Engine.releaseCaches. The
+    // copies of every shrinking cell until its CacheScope closes. The
     // wholesale `parts` built from it recompute through the caller's
     // persisted projection (one filter chain) at assembly time.
     var superseded: DataFrame = null
@@ -504,8 +501,7 @@ object Sampling {
         parts ::= cell.filter(subCol < b2)
           .select(col("doc_id"), lit(false).as("bkept"))
         superseded = cell
-        cell = cell.filter(subCol === b2)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        cell = CacheScope.keep(cell.filter(subCol === b2))
         cellLo = cellLo + b2 * width
         cellHi = cellLo + width
       }

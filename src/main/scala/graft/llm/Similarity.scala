@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Similarity search over embeddings (SURVEY §2.11 X3/X4).
   *
   * Numeric discipline: embeddings are float32 at rest; every vector is
@@ -155,8 +157,9 @@ object Similarity {
     * `buckets` the long-form (vec_id, band, bucket) hyperplane-sign
     * table. Build once, run [[lshNearDup(idx:VecBandIndex*]] (or probe
     * ad-hoc batches against `buckets`) any number of times, `close()`
-    * when done — the handle OWNS both cached blocks; nothing leaks cache
-    * by default. The one-shot [[lshNearDup(embeddings:DataFrame*]]
+    * when done — the handle OWNS both cached blocks, and builds through
+    * [[graft.core.CacheScope.keep]], so an open scope also releases
+    * them. The one-shot [[lshNearDup(embeddings:DataFrame*]]
     * remains truly persist-free (its bucket table is consumed inline).
     */
   final case class VecBandIndex(vecs: DataFrame, buckets: DataFrame)
@@ -170,15 +173,14 @@ object Similarity {
 
   /** build the band index once: at deployment scale this is "write the
     * bucket table next to the corpus"; locally both frames persist
-    * MEMORY_AND_DISK until `close()`.
+    * MEMORY_AND_DISK until `close()` or the open CacheScope closes.
     */
   def buildVecBandIndex(embeddings: DataFrame, nBands: Int = 4,
       bitsPerBand: Int = 16, dim: Int = 64): VecBandIndex = {
     graft.functions.CosineSim.register(embeddings.sparkSession)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = embeddings.select(col("vec_id"),
-      asDouble(col("embedding")).as("v")).persist(lvl)
-    VecBandIndex(e, vecBuckets(e, nBands, bitsPerBand, dim).persist(lvl))
+    val e = CacheScope.keep(embeddings.select(col("vec_id"),
+      asDouble(col("embedding")).as("v")))
+    VecBandIndex(e, CacheScope.keep(vecBuckets(e, nBands, bitsPerBand, dim)))
   }
 
   /** [[lshNearDup]] over a built [[VecBandIndex]] — same capped pair
@@ -434,26 +436,16 @@ object Similarity {
     */
   def communityQuality(embeddings: DataFrame, minCos: Double = 0.3,
       k: Int = 5, nBands: Int = 4, bitsPerBand: Int = 16, dim: Int = 64,
-      maxBucket: Int = Dedup.MaxBucket, maxIter: Int = 25): DataFrame =
-    communityQualityManaged(embeddings, minCos, k, nBands, bitsPerBand,
-      dim, maxBucket, maxIter).df
-
-  /** [[communityQuality]] returning the ownership handle over its
-    * internal persists (the full edge set + the callee's)
-    */
-  def communityQualityManaged(embeddings: DataFrame, minCos: Double = 0.3,
-      k: Int = 5, nBands: Int = 4, bitsPerBand: Int = 16, dim: Int = 64,
-      maxBucket: Int = Dedup.MaxBucket, maxIter: Int = 25): ManagedFrame = {
+      maxBucket: Int = Dedup.MaxBucket, maxIter: Int = 25): DataFrame = {
     val g = knnGraph(embeddings, k, nBands, bitsPerBand, dim, maxBucket)
     // full undirected ranked edge set (cos rides along: identical for
     // both directions of a pair, so max() is pure dedup), shared by the
     // strong-edge CC input and the metric aggregations (persist: two
-    // consumers; caller clears cache)
-    val ue = g
+    // consumers; the open CacheScope releases it)
+    val ue = CacheScope.keep(g
       .select(least(col("src"), col("dst")).as("doc_a"),
         greatest(col("src"), col("dst")).as("doc_b"), col("cos"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(max(col("cos")).as("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("doc_a"), col("doc_b")).agg(max(col("cos")).as("cos")))
     val strong = ue.filter(col("cos") >= minCos)
       .select(col("doc_a"), col("doc_b"))
     // labels-only CC (r19): community_size in the OUTPUT is re-derived
@@ -464,10 +456,7 @@ object Similarity {
         embeddings.select(col("vec_id").as("doc_id")), strong, maxIter)
       .select(col("doc_id").as("vec_id"),
         col("cluster_id").as("community_id"))
-    val inner =
-      communityQualityWithManaged(ue.select(col("doc_a"), col("doc_b")),
-        comm)
-    ManagedFrame(inner.df, ue +: inner.caches)
+    communityQualityWith(ue.select(col("doc_a"), col("doc_b")), comm)
   }
 
   /** [[communityQuality]] off STORED artifacts — the production entry
@@ -478,23 +467,8 @@ object Similarity {
     * after an incremental ingest costs only the metric joins, never a
     * graph or CC rebuild.
     */
-  /** a result frame plus the intra-query persists backing it — the
-    * [[VecIndex]] ownership discipline applied to the metric pipelines
-    * (r18 verdict task 5): `close()` releases exactly this call's
-    * cached blocks, so a long-lived library consumer no longer depends
-    * on session-wide `clearCache` (the bench/verify harnesses clear per
-    * query either way). Plans already derived from `df` keep working
-    * after close — they just stop hitting cache.
-    */
-  final case class ManagedFrame(df: DataFrame, caches: Seq[DataFrame])
-      extends AutoCloseable {
-    override def close(): Unit =
-      caches.foreach(_.unpersist(blocking = true))
-  }
-
-  /** [[communityQualityWith]] returning the ownership handle */
-  def communityQualityWithManaged(graph: DataFrame,
-      communities: DataFrame): ManagedFrame = {
+  def communityQualityWith(graph: DataFrame,
+      communities: DataFrame): DataFrame = {
     // r18 optimization: `comm` is referenced three times (both edge-side
     // tag joins + the community-size base) and the callers hand it
     // non-trivial subtrees — x72 the CC output, x78/x79 the
@@ -502,15 +476,16 @@ object Similarity {
     // (zero ReusedExchange in the formatted plans: per-reference column
     // pruning makes the copies non-identical, so exchange reuse never
     // fires; x79's plan scanned its stored communities artifact 6×).
-    // Two longs per corpus row, MEMORY_AND_DISK; caller clears cache.
+    // Two longs per corpus row, MEMORY_AND_DISK; the open CacheScope
+    // releases it.
     // Measured (graft.Trace census, stage counts are deterministic and window-
     // insensitive): x72 32→27 stages, x78 77→53, x79 43→39, with
     // matching task-time drops in-window — the one persist candidate of
     // the r18 audit where AQE's runtime stage reuse does NOT already
     // dedupe the work (the copies differ by pruning, and what re-runs
     // is the full union/CC subtree, not a cheap projection).
-    val comm = communities.select(col("vec_id"), col("community_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val comm = CacheScope.keep(
+      communities.select(col("vec_id"), col("community_id")))
     val tagged = graph.select(col("doc_a"), col("doc_b"))
       .join(comm.select(col("vec_id").as("doc_a"),
         col("community_id").as("comm_a")), Seq("doc_a"))
@@ -529,11 +504,10 @@ object Similarity {
         struct(col("comm_b").as("community_id"),
           (col("comm_a") === col("comm_b")).as("internal")))).as("s"))
       .select(col("s.community_id"), col("s.internal"))
-    val perComm = sides.groupBy(col("community_id"))
+    val perComm = CacheScope.keep(sides.groupBy(col("community_id"))
       .agg((sum(when(col("internal"), 1L).otherwise(0L)) / 2)
           .cast("long").as("n_internal"),
-        sum(when(col("internal"), 0L).otherwise(1L)).as("n_cut"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(when(col("internal"), 0L).otherwise(1L)).as("n_cut")))
     val mTot = perComm
       .agg((sum(col("n_internal")) +
         (sum(col("n_cut")) / 2).cast("long")).as("m"))
@@ -543,7 +517,7 @@ object Similarity {
     val mD = col("m").cast("double")
     val volD = col("volume").cast("double")
     val minSide = least(volD, lit(2d) * mD - volD)
-    val out = base
+    base
       .join(perComm, Seq("community_id"), "left")
       .select(col("community_id"), col("community_size"),
         coalesce(col("n_internal"), lit(0L)).as("n_internal"),
@@ -561,15 +535,7 @@ object Similarity {
           .otherwise(lit(0d)).as("modularity"),
         when(minSide > 0d, col("n_cut").cast("double") / minSide)
           .otherwise(lit(0d)).as("conductance"))
-    ManagedFrame(out, Seq(comm, perComm))
   }
-
-  /** [[communityQualityWithManaged]] without the handle — the
-    * caller-clears-cache contract (harnesses clear per query)
-    */
-  def communityQualityWith(graph: DataFrame,
-      communities: DataFrame): DataFrame =
-    communityQualityWithManaged(graph, communities).df
 
   /** INCREMENTAL community assignment — the vector-graph member of the
     * incremental-ingest family (x50 band-key gate, x60 snapshot diff,
@@ -644,14 +610,7 @@ object Similarity {
     */
   private[llm] def probeVerified(corpus: DataFrame, batch: DataFrame,
       minCos: Double, nBands: Int, bitsPerBand: Int, dim: Int,
-      maxBucket: Int = Dedup.MaxBucket): DataFrame =
-    probeVerifiedTracked(corpus, batch, minCos, nBands, bitsPerBand, dim,
-      maxBucket)._1
-
-  /** [[probeVerified]] plus the internal persists, for Managed callers */
-  private[llm] def probeVerifiedTracked(corpus: DataFrame, batch: DataFrame,
-      minCos: Double, nBands: Int, bitsPerBand: Int, dim: Int,
-      maxBucket: Int = Dedup.MaxBucket): (DataFrame, Seq[DataFrame]) = {
+      maxBucket: Int = Dedup.MaxBucket): DataFrame = {
     graft.functions.CosineSim.register(corpus.sparkSession)
     // r18 fusion: vectors ride the band rows from the projection
     // ([[vecBucketsV]]) on BOTH sides — the former plan joined them
@@ -666,11 +625,9 @@ object Similarity {
     // so it spills, never OOMs) won EVERY interleaved A/B pair:
     // sf0.1 x57+x73+x78+x79 task time 306/162/233 → 253/87/97 s,
     // ×10 x57+x73 117/117/137 → 50/61/56 s, ×10 x78+x79 quiet pair
-    // 292 → 174 s. Caller clears cache; Managed callers own it via
-    // [[probeVerifiedTracked]].
-    val cbr = vecBucketsV(corpus.select(col("vec_id"),
-      asDouble(col("embedding")).as("v")), nBands, bitsPerBand, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // 292 → 174 s. The open CacheScope releases it.
+    val cbr = CacheScope.keep(vecBucketsV(corpus.select(col("vec_id"),
+      asDouble(col("embedding")).as("v")), nBands, bitsPerBand, dim))
     // bucket sizes via a map-side-combinable AGG joined back (the r15
     // hammingNearDupFrom surgery — a whole-partition count WINDOW would
     // shuffle AND SORT every corpus band row); the size table is
@@ -691,13 +648,12 @@ object Similarity {
     val bq = vecBucketsV(batch.select(col("vec_id"),
         asDouble(col("embedding")).as("v")), nBands, bitsPerBand, dim)
       .withColumnRenamed("v", "qv")
-    val out = bq.join(groups, Seq("band", "bucket"))
+    bq.join(groups, Seq("band", "bucket"))
       .select(col("vec_id"), col("qv"), explode(col("cs")).as("c"))
       .select(col("vec_id"), col("c.cand_id").as("cand_id"),
         call_function("cosine_sim", col("qv"), col("c.cvv")).as("cos"))
       .filter(col("cos") >= minCos)
       .groupBy(col("vec_id"), col("cand_id")).agg(max(col("cos")).as("cos"))
-    (out, Seq(cbr))
   }
 
   /** the incremental graph-maintenance cycle END-TO-END (r11 verdict
@@ -726,37 +682,25 @@ object Similarity {
   def graphRefreshCycle(oldDocs: DataFrame, newDocs: DataFrame,
       embeddings: DataFrame, minCos: Double = 0.3, k: Int = 5,
       nBands: Int = 4, bitsPerBand: Int = 16, dim: Int = 64,
-      maxBucket: Int = Dedup.MaxBucket, maxIter: Int = 25): DataFrame =
-    graphRefreshCycleManaged(oldDocs, newDocs, embeddings, minCos, k,
-      nBands, bitsPerBand, dim, maxBucket, maxIter).df
-
-  /** [[graphRefreshCycle]] returning the ownership handle (the split
-    * roots + edge set + the callees')
-    */
-  def graphRefreshCycleManaged(oldDocs: DataFrame, newDocs: DataFrame,
-      embeddings: DataFrame, minCos: Double = 0.3, k: Int = 5,
-      nBands: Int = 4, bitsPerBand: Int = 16, dim: Int = 64,
-      maxBucket: Int = Dedup.MaxBucket, maxIter: Int = 25): ManagedFrame = {
+      maxBucket: Int = Dedup.MaxBucket, maxIter: Int = 25): DataFrame = {
     // persist the split roots: corpus/batch are referenced by the band
     // probe, the exact-cosine verify, AND the CC vertex set — without
     // the cache boundary every reference re-expands the full-outer
     // snapshot-diff subtree (~125 copies in the formatted plan, plan
     // audit r12) and re-scans documents each time
-    val changed = Dedup.snapshotDiff(oldDocs, newDocs)
+    val changed = CacheScope.keep(Dedup.snapshotDiff(oldDocs, newDocs)
       .filter(col("status") === "changed")
-      .select(col("doc_id").as("vec_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val corpus = embeddings.join(changed, Seq("vec_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val batch = embeddings.join(changed, Seq("vec_id"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id").as("vec_id")))
+    val corpus = CacheScope.keep(
+      embeddings.join(changed, Seq("vec_id"), "left_anti"))
+    val batch = CacheScope.keep(
+      embeddings.join(changed, Seq("vec_id"), "left_semi"))
     // stored artifacts: full ranked corpus edge set + strong communities
     val g = knnGraph(corpus, k, nBands, bitsPerBand, dim, maxBucket)
-    val ue = g
+    val ue = CacheScope.keep(g
       .select(least(col("src"), col("dst")).as("doc_a"),
         greatest(col("src"), col("dst")).as("doc_b"), col("cos"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(max(col("cos")).as("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("doc_a"), col("doc_b")).agg(max(col("cos")).as("cos")))
     val strong = ue.filter(col("cos") >= minCos)
       .select(col("doc_a"), col("doc_b"))
     // labels-only CC (r19) — the size column was pruned by every
@@ -771,11 +715,9 @@ object Similarity {
         corpus.select(col("vec_id").as("doc_id")), strong, maxIter)
       .select(col("doc_id").as("vec_id"),
         col("cluster_id").as("community_id"))
-    val inner = graphRefreshCycleWithManaged(corpus, batch,
+    graphRefreshCycleWith(corpus, batch,
       ue.select(col("doc_a"), col("doc_b")), comms, minCos, nBands,
       bitsPerBand, dim)
-    ManagedFrame(inner.df,
-      Seq(changed, corpus, batch, ue) ++ inner.caches)
   }
 
   /** [[graphRefreshCycle]] off STORED artifacts — the production entry
@@ -789,23 +731,11 @@ object Similarity {
     */
   def graphRefreshCycleWith(corpus: DataFrame, batch: DataFrame,
       graph: DataFrame, communities: DataFrame, minCos: Double = 0.3,
-      nBands: Int = 4, bitsPerBand: Int = 16, dim: Int = 64): DataFrame =
-    graphRefreshCycleWithManaged(corpus, batch, graph, communities,
-      minCos, nBands, bitsPerBand, dim).df
-
-  /** [[graphRefreshCycleWith]] returning the ownership handle (the
-    * delta-probe persist + the metric callee's)
-    */
-  def graphRefreshCycleWithManaged(corpus: DataFrame, batch: DataFrame,
-      graph: DataFrame, communities: DataFrame, minCos: Double = 0.3,
-      nBands: Int = 4, bitsPerBand: Int = 16,
-      dim: Int = 64): ManagedFrame = {
+      nBands: Int = 4, bitsPerBand: Int = 16, dim: Int = 64): DataFrame = {
     val comms = communities.select(col("vec_id"), col("community_id"))
     // delta probe: two consumers (donation + edge append)
-    val (probe, probeCaches) = probeVerifiedTracked(corpus, batch, minCos,
-      nBands, bitsPerBand, dim)
-    val verified = probe
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val verified = CacheScope.keep(probeVerified(corpus, batch, minCos,
+      nBands, bitsPerBand, dim))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("cos").desc, col("cand_id").asc)
     val best = verified.withColumn("rn", row_number().over(w))
@@ -827,8 +757,7 @@ object Similarity {
         greatest(col("vec_id"), col("cand_id")).as("doc_b"))
     val graphPlus = graph.select(col("doc_a"), col("doc_b"))
       .unionByName(newEdges).distinct()
-    val inner = communityQualityWithManaged(graphPlus, merged)
-    ManagedFrame(inner.df, (verified +: probeCaches) ++ inner.caches)
+    communityQualityWith(graphPlus, merged)
   }
 
   /** capped-bucket diagnostic for [[lshNearDup]]: (band, bucket, bsz)
@@ -939,11 +868,10 @@ object Similarity {
     * Cache contract (r7 verdict task 5): the explicit
     * [[buildQuantizedIndex]]/[[quantizedTopK(idx:VecIndex*]] pair is the
     * library contract — the caller owns the [[VecIndex]] handle and
-    * `close()`s it when done; nothing leaks cache by default. This
-    * one-shot overload exists for the driver's single-query entry (x19):
-    * it builds the index inline and LEAVES IT CACHED so repeated
-    * queries of the plan reuse it; a one-shot caller that is done must
-    * `spark.catalog.clearCache()` (the bench builds/closes explicitly).
+    * `close()`s it when done. This one-shot overload exists for the
+    * driver's single-query entry (x19): it builds the index inline and
+    * drops the handle, so the index stays cached until the open
+    * [[graft.core.CacheScope]] closes.
     */
   def quantizedTopK(embeddings: DataFrame, nQueries: Int,
       k: Int): DataFrame =
@@ -966,12 +894,11 @@ object Similarity {
   def buildQuantizedIndex(embeddings: DataFrame): VecIndex = {
     graft.functions.CosineSim.register(embeddings.sparkSession)
     graft.functions.CosineSimI8.register(embeddings.sparkSession)
-    VecIndex(embeddings.select(col("vec_id"),
+    VecIndex(CacheScope.keep(embeddings.select(col("vec_id"),
         asDouble(col("embedding")).as("v"))
       .withColumn("ma", maxAbs(col("v")))
       .select(col("vec_id"), col("v"),
-        quantizeInt8(col("v"), col("ma")).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        quantizeInt8(col("v"), col("ma")).as("c"))))
   }
 
   /** top-k over a built [[VecIndex]]: int8 scoring ranks, exact float
@@ -1215,8 +1142,8 @@ object Similarity {
     * (or the 8-centroid demo geometry), so x34 results are unchanged.
     *
     * Cache contract: the assignment table stays persisted until the
-    * caller runs `spark.catalog.clearCache()` — same convention as
-    * [[quantizedTopK]]'s one-shot form (the bench clears per run).
+    * open [[graft.core.CacheScope]] closes — same convention as
+    * [[quantizedTopK]]'s one-shot form.
     */
   def semDedup(embeddings: DataFrame, initIds: Seq[Long],
       tau: Double = 0.3, maxCluster: Int = Dedup.MaxBucket): DataFrame = {
@@ -1232,8 +1159,7 @@ object Similarity {
     * at as many `tau` settings as curation needs (the assignment — the
     * corpus-scan-heavy part — is shared), `close()` when done. The
     * one-shot [[semDedup(embeddings:DataFrame*]] builds inline and
-    * LEAVES the assignment cached (its documented contract); callers
-    * owning the handle leak nothing.
+    * leaves the assignment to the open scope.
     */
   final case class SemIndex(assigned: DataFrame) extends AutoCloseable {
     override def close(): Unit = { assigned.unpersist(blocking = true); () }
@@ -1245,9 +1171,8 @@ object Similarity {
   def buildSemIndex(embeddings: DataFrame, cents: DataFrame): SemIndex = {
     graft.functions.CosineSim.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    SemIndex(assign1nn(e, cents)
-      .select(col("vec_id"), col("v"), col("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SemIndex(CacheScope.keep(assign1nn(e, cents)
+      .select(col("vec_id"), col("v"), col("cid"))))
   }
 
   /** the kmeansAtScale → semDedup composition (r8 verdict "What's wrong
@@ -1255,7 +1180,7 @@ object Similarity {
     * k-means, THEN run the within-cluster near-dup scan — the one-liner
     * a production curation pipeline should call so it never ships
     * unrefined clusters. The returned assignment reflects the CONVERGED
-    * centroids; caller runs `spark.catalog.clearCache()` (or uses
+    * centroids; the open [[graft.core.CacheScope]] releases it (or use
     * [[buildSemIndex]] + [[semDedup(idx:SemIndex*]] directly for the
     * owned-handle form).
     */
@@ -1526,9 +1451,7 @@ object Similarity {
   def buildPqIndex(embeddings: DataFrame, initIds: Seq[Long],
       nSub: Int = 4, dim: Int = 64, iters: Int = 2): PqIndex = {
     val cb = pqCodebook(embeddings, initIds, nSub, dim, iters)
-    val codes = pqEncode(embeddings, cb, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    PqIndex(cb, codes, dim)
+    PqIndex(cb, CacheScope.keep(pqEncode(embeddings, cb, dim)), dim)
   }
 
   def savePqIndex(idx: PqIndex, path: String): Unit = {
@@ -1553,9 +1476,8 @@ object Similarity {
       .mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
     val dim = spark.read.parquet(s"$path/meta.parquet")
       .head().getInt(0)
-    val codes = spark.read.parquet(s"$path/codes.parquet")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    PqIndex(cb, codes, dim)
+    PqIndex(cb, CacheScope.keep(spark.read.parquet(s"$path/codes.parquet")),
+      dim)
   }
 
   /** ADC top-k against a built/loaded index for an arbitrary query
@@ -1823,8 +1745,8 @@ object Similarity {
     * Scale: one corpus scan for the broadcast-centroid 1-NN assignment
     * (the [[kmeansAtScale]] assignment discipline), one centroid-sized
     * count agg (map-side combined), a 1-row totals broadcast. The tiny
-    * count table persists (totals + output both read it); caller runs
-    * `spark.catalog.clearCache()`.
+    * count table persists (totals + output both read it) until the open
+    * [[graft.core.CacheScope]] closes.
     */
   def embeddingDrift(embeddings: DataFrame, initIds: Seq[Long],
       isA: Column = col("vec_id") % 2 === 0): DataFrame = {
@@ -1832,11 +1754,10 @@ object Similarity {
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val cents = e.filter(col("vec_id").isin(initIds: _*))
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val tc = assign1nn(e, cents)
+    val tc = CacheScope.keep(assign1nn(e, cents)
       .groupBy(col("cid"))
       .agg(sum(when(isA, 1L).otherwise(0L)).as("c_a"),
-        sum(when(isA, 0L).otherwise(1L)).as("c_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(when(isA, 0L).otherwise(1L)).as("c_b")))
     val totals = tc.agg(sum(col("c_a")).as("n_a"), sum(col("c_b")).as("n_b"))
     val t = (col("c_a") + col("c_b")).cast("double")
     val dA = col("c_a").cast("double") - col("e_a")

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Mergeable frequency sketches for corpus-scale token statistics.
   *
   * Count-Min (Cormode & Muthukrishnan 2005) is THE mergeable shape for
@@ -51,21 +53,19 @@ object Sketches {
     * exact counts anyway, so it hashes each distinct token once.
     *
     * Cache contract: the hashed-vocabulary table stays persisted until
-    * the caller runs `spark.catalog.clearCache()` — same convention as
-    * [[graft.llm.Similarity.quantizedTopK]]'s one-shot form (the bench
-    * clears per run).
+    * the open [[graft.core.CacheScope]] closes — same convention as
+    * [[graft.llm.Similarity.quantizedTopK]]'s one-shot form.
     */
   def cmsHeavyHitters(docs: DataFrame,
       phiDen: Long = DefaultPhiDen): DataFrame = {
-    val exact = docs
+    val exact = CacheScope.keep(docs
       .select(explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("true_cnt"))
       // one digest per distinct token; two u32 halves seed the KM family
       .withColumn("mh", md5(concat(lit("cms:"), col("tok"))))
       .select(col("tok"), col("true_cnt"),
         conv(substring(col("mh"), 1, 8), 16, 10).cast("long").as("u1"),
-        conv(substring(col("mh"), 9, 8), 16, 10).cast("long").as("u2"))
-      .persist()
+        conv(substring(col("mh"), 9, 8), 16, 10).cast("long").as("u2")))
     val cells = exact.select(col("tok"), col("true_cnt"),
         explode(array((0 until CmsDepth).map { r =>
           val h = pmod(col("u1") + lit((r + 1).toLong) * col("u2"),

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Text-analysis operators for a training-data pipeline (SURVEY §2.11 X6):
   * tokenization, token statistics, language-ID heuristic, quality scoring,
   * and document fingerprinting — all built-in column expressions (codegen,
@@ -102,17 +104,16 @@ object TextOps {
     * and at corpus scale `minCount = 5` bounds nothing). The rank
     * window then orders only the ≤ topK survivors — same
     * `(combined desc, tok asc)` tie-break, bit-identical output. The
-    * merged count table persists — totals and ranking both read it.
-    * Caller runs `spark.catalog.clearCache()`.
+    * merged count table persists — totals and ranking both read it —
+    * until the open [[graft.core.CacheScope]] closes.
     */
   def corpusDrift(docsA: DataFrame, docsB: DataFrame, topK: Int = 100,
       minCount: Long = 5L): DataFrame = {
     val ca = tokens(docsA).groupBy(col("tok")).agg(count(lit(1)).as("c_a"))
     val cb = tokens(docsB).groupBy(col("tok")).agg(count(lit(1)).as("c_b"))
-    val tc = ca.join(cb, Seq("tok"), "full_outer")
+    val tc = CacheScope.keep(ca.join(cb, Seq("tok"), "full_outer")
       .select(col("tok"), coalesce(col("c_a"), lit(0L)).as("c_a"),
-        coalesce(col("c_b"), lit(0L)).as("c_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        coalesce(col("c_b"), lit(0L)).as("c_b")))
     val totals = tc.agg(sum(col("c_a")).as("n_a"), sum(col("c_b")).as("n_b"))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy((col("c_a") + col("c_b")).desc, col("tok").asc)
@@ -490,14 +491,13 @@ object TextOps {
     * (the x45 lesson). The self-join on token produces at most
     * `vocab × sources²` rows (each token appears once per source) —
     * never corpus-sized. Source count is assumed small (dozens);
-    * output is the source-pair triangle. Caller runs
-    * `spark.catalog.clearCache()` when done.
+    * output is the source-pair triangle. The open CacheScope releases
+    * the vocabulary table.
     */
   def sourceOverlap(docs: DataFrame): DataFrame = {
-    val st = docs
+    val st = CacheScope.keep(docs
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val sizes = st.groupBy(col("source")).agg(count(lit(1)).as("n_vocab"))
     val inter = st.as("a")
       .join(st.as("b"),
@@ -538,13 +538,12 @@ object TextOps {
     * the same `(count desc, token asc)` tie-break makes the pre-cut
     * bit-identical to ranking the full table, and the cumulative sum
     * at rank r ≤ topK only ever reads rows with rank ≤ r — all
-    * survivors. Caller runs `spark.catalog.clearCache()` when done.
+    * survivors. The open CacheScope releases the count table.
     */
   def vocabCoverage(docs: DataFrame, topK: Int = 200,
       minCount: Long = 2L): DataFrame = {
-    val counts = tokens(docs).groupBy(col("tok"))
-      .agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = CacheScope.keep(tokens(docs).groupBy(col("tok"))
+      .agg(count(lit(1)).as("c")))
     val total = counts.agg(sum(col("c")).as("total"))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("c").desc, col("tok").asc)
@@ -832,8 +831,7 @@ object TextOps {
     */
   def winnowPairs(docs: DataFrame, k: Int = 5, w: Int = 16,
       maxDf: Int = 64, minShared: Int = 2): DataFrame = {
-    val fps = winnowFingerprints(docs, k, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = CacheScope.keep(winnowFingerprints(docs, k, w))
     val keep = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select(col("fp"))
     val buckets = fps.join(keep, Seq("fp"))

@@ -3,6 +3,8 @@ package graft.rel
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Scale utilities (SURVEY §7.4): the join/aggregation shapes that keep
   * working when one key is hot or both sides are fact-sized.
   *
@@ -74,9 +76,9 @@ object Scale {
       probs: Seq[Double], nBuckets: Int = 1024): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val vals = df.select(col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull && !isnan(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val vals = CacheScope.keep(df
+      .select(col(valueCol).cast("double").as("v"))
+      .filter(col("v").isNotNull && !isnan(col("v"))))
     val st = vals.agg(count(lit(1)).as("n"), min(col("v")).as("lo"),
       max(col("v")).as("hi")).collect()(0)
     val n = st.getLong(0)
@@ -216,11 +218,10 @@ object Scale {
       nBuckets: Int = 1024): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val vals = df
+    val vals = CacheScope.keep(df
       .select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("double").as("v"))
-      .filter(col("v").isNotNull && !isnan(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .filter(col("v").isNotNull && !isnan(col("v"))))
     val gstats: Array[(String, Long, Double, Double)] = vals
       .groupBy(col("g")).agg(count(lit(1)).as("n"), min(col("v")).as("lo"),
         max(col("v")).as("hi"))

@@ -1088,29 +1088,4 @@ class PipelineOpsSpec extends SparkSpec {
       Seq("doc_id", "cluster_id"))
     spark.catalog.clearCache()
   }
-
-  test("Managed handles release exactly their persists (r18 verdict 5)") {
-    // one-shot library call: materialize the result, close the handle,
-    // and nothing stays registered in the block manager — no
-    // session-wide clearCache needed
-    spark.catalog.clearCache()
-    val embs = embDf(Seq(
-      0L -> Seq(1f, 0f, 0f, 0f), 1L -> Seq(0.99f, 0.14f, 0f, 0f),
-      2L -> Seq(0f, 1f, 0f, 0f), 3L -> Seq(0f, 0.99f, 0.14f, 0f),
-      4L -> Seq(0f, 0f, 1f, 0f), 5L -> Seq(0f, 0f, 0f, 1f)))
-    val handle = Similarity.communityQualityManaged(embs, minCos = 0.3,
-      k = 3, nBands = 4, bitsPerBand = 8, dim = 4)
-    assert(handle.df.count() >= 1)
-    assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
-      "the call should have live intra-query persists before close")
-    handle.close()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "close() must release every cache the call registered")
-    // the unmanaged form still works after a handle's close (lineage
-    // recomputes), and the session-wide contract still applies to it
-    assert(Similarity.communityQuality(embs, minCos = 0.3, k = 3,
-      nBands = 4, bitsPerBand = 8, dim = 4).count() >= 1)
-    spark.catalog.clearCache()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-  }
 }
