@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.util.Using
 
+import org.apache.spark.sql.DataFrame
+
 /** Per-round benchmark main.
   *
   * Fixes from round-1 verdict:
@@ -166,17 +168,26 @@ object Bench {
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
     // _p2: staged content is a pure function of (sfDir, THIS recipe) —
     // the partition-count rule changed, so the dir name versions with it
-    val out =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bench_staged/${tag}_p2"
+    stageTables(spark, sfDir,
+      s"${System.getProperty("java.io.tmpdir")}/graft_bench_staged/${tag}_p2")(
+      (_, df) => df)
+  }
+
+  /** the staging loop both layouts share: every table of `sfDir` through
+    * `transform`, counted, repartitioned by [[stageParts]] and written
+    * under `out` with [[stagedAtomically]]'s temp-dir + atomic-rename
+    */
+  private def stageTables(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String, out: String)(
+      transform: (String, DataFrame) => DataFrame): String =
     stagedAtomically(out) { tmpDir =>
       core.Tables.names.foreach { t =>
-        val df = spark.read.parquet(s"$sfDir/$t.parquet")
+        val df = transform(t, spark.read.parquet(s"$sfDir/$t.parquet"))
         val rows = df.count()
         df.repartition(stageParts(rows)).write.mode("overwrite")
           .parquet(s"$tmpDir/$t.parquet")
       }
     }
-  }
 
   /** the executor parallelism this process runs at — the same
     * env-derived value [[core.GraftSession]]'s `local[N]` master uses,
@@ -247,45 +258,34 @@ object Bench {
       sfDir: String, k: Int): String = {
     import org.apache.spark.sql.functions.col
     val tag = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    // _v2: the staged content is a pure function of (sfDir, k, THIS
-    // recipe) — the r12 events amplification changed the recipe, so the
-    // dir name versions with it rather than trusting stale markers
-    val out =
-      s"${System.getProperty("java.io.tmpdir")}/graft_bench_amplified/${tag}_x${k}_v3"
-    // the amplified copy is a pure function of (sfDir, k) — reuse an
-    // existing staging unless SPARK_GRAFT_RESTAGE=1 (staging ×30 costs
-    // minutes); same temp-dir + atomic-rename discipline as stage()
-    stagedAtomically(out) { tmpDir =>
-      core.Tables.names.foreach { t =>
-        val df = spark.read.parquet(s"$sfDir/$t.parquet")
-        val amped = t match {
-          case "documents" =>
-            (0 until k).map(j => df.withColumn("doc_id",
-              col("doc_id") * k + j)).reduce(_ union _)
-          case "embeddings" =>
-            (0 until k).map(j => df.withColumn("vec_id",
-              col("vec_id") * k + j)).reduce(_ union _)
-          case "lineitem" =>
-            // q13's input; percentiles/stats need no key rekeying — a
-            // plain k-fold union scales the sort/histogram work k×
-            (0 until k).map(_ => df).reduce(_ union _)
-          case "events" =>
-            // the streaming section's input (r11 verdict task 7):
-            // re-key user_id (and event_id) so the corpus gains k×
-            // users with the same per-user event pattern —
-            // sessionization, windows, and the stream-stream join all
-            // scale k× while per-user semantics (and the DuckDB twin's
-            // work) stay faithful
-            (0 until k).map(j => df
-              .withColumn("user_id", col("user_id") * k + j)
-              .withColumn("event_id", col("event_id") * k + j))
-              .reduce(_ union _)
-          case _ => df
-        }
-        val rows = amped.count()
-        amped.repartition(stageParts(rows)).write.mode("overwrite")
-          .parquet(s"$tmpDir/$t.parquet")
-      }
+    // the staged content is a pure function of (sfDir, k, THIS recipe):
+    // the dir name versions with the recipe (the r12 events
+    // amplification made it _v3) and an existing staging is reused
+    // unless SPARK_GRAFT_RESTAGE=1 (staging ×30 costs minutes)
+    stageTables(spark, sfDir,
+      s"${System.getProperty("java.io.tmpdir")}/graft_bench_amplified/${tag}_x${k}_v3") {
+      case ("documents", df) =>
+        (0 until k).map(j => df.withColumn("doc_id",
+          col("doc_id") * k + j)).reduce(_ union _)
+      case ("embeddings", df) =>
+        (0 until k).map(j => df.withColumn("vec_id",
+          col("vec_id") * k + j)).reduce(_ union _)
+      case ("lineitem", df) =>
+        // q13's input; percentiles/stats need no key rekeying — a
+        // plain k-fold union scales the sort/histogram work k×
+        (0 until k).map(_ => df).reduce(_ union _)
+      case ("events", df) =>
+        // the streaming section's input (r11 verdict task 7):
+        // re-key user_id (and event_id) so the corpus gains k×
+        // users with the same per-user event pattern —
+        // sessionization, windows, and the stream-stream join all
+        // scale k× while per-user semantics (and the DuckDB twin's
+        // work) stay faithful
+        (0 until k).map(j => df
+          .withColumn("user_id", col("user_id") * k + j)
+          .withColumn("event_id", col("event_id") * k + j))
+          .reduce(_ union _)
+      case (_, df) => df
     }
   }
 

@@ -165,10 +165,10 @@ class Engine(spark: SparkSession, catalog: MetaCatalog,
     graft.llm.Multimodal.videoNearDupFrom(frameHashes, minSim)
   def mediaDedupKeep(media: DataFrame): DataFrame =
     graft.llm.Multimodal.mediaDedupKeep(media)
-  def mediaDedupKeepFrom(idsKinds: DataFrame, imgHash: DataFrame,
-      audFp: DataFrame, vidHash: DataFrame): DataFrame =
-    graft.llm.Multimodal.mediaDedupKeepFrom(idsKinds, imgHash, audFp,
-      vidHash)
+  /** the keep gate off the stored `mediaExtractAll` artifact (decode
+    * stats plus all three hash columns, one row per file) */
+  def mediaDedupKeepFrom(extract: DataFrame): DataFrame =
+    graft.llm.Multimodal.mediaDedupKeepFrom(extract)
   def sceneChanges(media: DataFrame): DataFrame =
     graft.llm.Multimodal.sceneChanges(media)
   def mediaQualityGate(media: DataFrame): DataFrame =

@@ -276,13 +276,6 @@ object MediaBench {
           payload("images").unionByName(payload("audio"))
             .unionByName(payload("video")))
         .write.mode("overwrite").parquet(s"$hdir/extract_all.parquet")))
-    // the keep gate's vertex set, derived from the stored artifacts
-    // (kind rides in img/aud hashes; video's is implied)
-    def keepIds(): DataFrame = hashes("img_hash")
-      .select(col("media_id"), col("kind"))
-      .unionAll(hashes("aud_fp").select(col("media_id"), col("kind")))
-      .unionAll(hashes("vid_hash").select(col("media_id")).distinct()
-        .withColumn("kind", lit("video")))
 
     // near-dup search FROM the stored artifacts (the DuckDB-twinned
     // phase) — noop sink, full compute per run
@@ -316,27 +309,25 @@ object MediaBench {
       "nd_aud_auto" -> (() => Multimodal.hammingNearDupAuto(
           hashes("aud_fp"), "audiofp64", 3, 4)
         .write.format("noop").mode("overwrite").save()),
-      // the cross-modal keep gate (x86) from the three stored artifacts:
+      // the cross-modal keep gate (x86) from the stored fused extract:
       // pair generation + the large-star/small-star CC + one verdict per
       // file — the phase whose relational twin pays a recursive closure
-      "nd_keep" -> (() => Multimodal.mediaDedupKeepFrom(keepIds(),
-          hashes("img_hash"), hashes("aud_fp"), hashes("vid_hash"))
+      "nd_keep" -> (() => Multimodal.mediaDedupKeepFrom(
+          hashes("extract_all"))
         .write.format("noop").mode("overwrite").save()),
-      // the x91 curation funnel off the four stored artifacts: quality
-      // projection → survivor semi-join → cross-modal keep gate → the
+      // the x91 curation funnel off the stored fused extract: quality
+      // projection → survivor filter → cross-modal keep gate → the
       // per-(stage, kind) attrition rollup (the DuckDB twin runs the
       // same CASE + survivor-restricted recursive-CTE closure)
       "funnel" -> (() => Multimodal.mediaCurationFunnelFrom(
-          hashes("stats"), hashes("img_hash"), hashes("aud_fp"),
-          hashes("vid_hash"))
+          hashes("extract_all"))
         .write.format("noop").mode("overwrite").save()),
       // the funnel at the WIDE image geometry (4×16-bit, τ=3) — the
       // documented 8-band saturation remedy measured on the composition,
       // not just on nd_img: past ~300k surviving images this is the
       // production geometry (r15, the funnel-ladder knee)
       "funnel_wide" -> (() => Multimodal.mediaCurationFunnelFrom(
-          hashes("stats"), hashes("img_hash"), hashes("aud_fp"),
-          hashes("vid_hash"), imgTau = 3, imgBands = 4)
+          hashes("extract_all"), imgTau = 3, imgBands = 4)
         .write.format("noop").mode("overwrite").save()),
       // r16 (r15 verdict task 6): the AUTO-selected geometry — the
       // x93 policy measured at the ladder corpora, so the auto pick can
@@ -344,11 +335,10 @@ object MediaBench {
       // point (the selection agg rides inside the timed run — it IS
       // part of the auto funnel's cost)
       "funnel_auto" -> (() => {
-        val (nBands, tau) = Multimodal.autoBandGeometry(
-          hashes("img_hash"), "phash64")
-        Multimodal.mediaCurationFunnelFrom(
-          hashes("stats"), hashes("img_hash"), hashes("aud_fp"),
-          hashes("vid_hash"), imgTau = tau, imgBands = nBands)
+        val x = hashes("extract_all")
+        val (nBands, tau) = Multimodal.autoBandGeometry(x, "phash64")
+        Multimodal.mediaCurationFunnelFrom(x, imgTau = tau,
+            imgBands = nBands)
           .write.format("noop").mode("overwrite").save()
       }),
       // the st22 streaming perceptual gate at amplified upload volume:
@@ -417,17 +407,14 @@ object MediaBench {
       "nd_vid" -> (() =>
         Multimodal.videoNearDupFrom(hashes("vid_hash")).count()),
       // for the keep gate, "pairs" reports the files DROPPED
-      "nd_keep" -> (() => Multimodal.mediaDedupKeepFrom(keepIds(),
-          hashes("img_hash"), hashes("aud_fp"), hashes("vid_hash"))
-        .filter(!col("keep")).count()),
+      "nd_keep" -> (() => Multimodal.mediaDedupKeepFrom(
+          hashes("extract_all")).filter(!col("keep")).count()),
       // for the funnel, total files dropped across both stages
       "funnel" -> (() => Multimodal.mediaCurationFunnelFrom(
-          hashes("stats"), hashes("img_hash"), hashes("aud_fp"),
-          hashes("vid_hash"))
+          hashes("extract_all"))
         .agg(sum(col("n_in") - col("n_kept"))).head().getLong(0)),
       "funnel_wide" -> (() => Multimodal.mediaCurationFunnelFrom(
-          hashes("stats"), hashes("img_hash"), hashes("aud_fp"),
-          hashes("vid_hash"), imgTau = 3, imgBands = 4)
+          hashes("extract_all"), imgTau = 3, imgBands = 4)
         .agg(sum(col("n_in") - col("n_kept"))).head().getLong(0)))
       .filter(p => keepPhase(p._1)).map { case (k, f) => k -> f() }
     // recall on the PLANTED variant pairs (id−1, id) for id ≡ 4 (mod 5):
@@ -442,15 +429,9 @@ object MediaBench {
     // may survive BOTH stages (a video variant drops at quality —
     // 2.5 s < MinClipMs; image/audio variants drop at dedup)
     def funnelRecall(imgTau: Int, imgBands: Int): Double = {
-      val q = Multimodal.mediaQualityGateFrom(hashes("stats"))
-      val surv = q.filter(col("keep")).select(col("media_id"))
       val kept = Multimodal.mediaDedupKeepFrom(
-        hashes("stats").join(surv, Seq("media_id"))
-          .select(col("media_id"), col("kind")),
-        hashes("img_hash").join(surv, Seq("media_id")),
-        hashes("aud_fp").join(surv, Seq("media_id")),
-        hashes("vid_hash").join(surv, Seq("media_id")),
-        imgTau, imgBands)
+          Multimodal.qualitySurvivors(hashes("extract_all")), imgTau,
+          imgBands)
         .filter(col("keep") && col("media_id") % 5 === 4).count()
       val planted = n / 5 + math.max(8L, n / 4) * audX / 5 +
         math.max(8L, n / 8) * vidX / 5
@@ -476,8 +457,8 @@ object MediaBench {
         Multimodal.videoNearDupFrom(hashes("vid_hash")),
         math.max(8L, n / 8) * vidX / 5)),
       // keep-gate recall: every planted variant must be DROPPED
-      "nd_keep" -> (() => Multimodal.mediaDedupKeepFrom(keepIds(),
-          hashes("img_hash"), hashes("aud_fp"), hashes("vid_hash"))
+      "nd_keep" -> (() => Multimodal.mediaDedupKeepFrom(
+          hashes("extract_all"))
         .filter(col("media_id") % 5 === 4 && !col("keep")).count().toDouble /
         (n / 5 + math.max(8L, n / 4) * audX / 5 +
           math.max(8L, n / 8) * vidX / 5)),

@@ -77,9 +77,12 @@ object Trace {
       Phases(name, buildS, planS, r)
     }.head
 
+  /** each plan is built in its own [[CacheScope]], so it cannot pick up
+    * frames an earlier query kept */
   def explain(spark: SparkSession, qs: Seq[(String, QueryFn)], dir: String): Seq[(String, String)] =
     qs.map { case (name, fn) =>
-      name -> (try fn(spark, dir).queryExecution.explainString(FormattedMode)
+      name -> (try Using.resource(CacheScope.open())(_ =>
+          fn(spark, dir).queryExecution.explainString(FormattedMode))
         catch { case e: Exception => s"explain failed: ${e.getMessage}" })
     }
 

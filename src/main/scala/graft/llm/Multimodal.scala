@@ -592,14 +592,6 @@ object Multimodal {
       }).toDF()
   }
 
-  /** [[videoPhash]]-shaped (media_id, frame_idx, fphash64) rows off a
-    * [[mediaExtractAll]] frame — a projection, no re-decode
-    */
-  private def vidHashOf(extract: DataFrame): DataFrame =
-    extract.filter(col("fr_phash64").isNotNull)
-      .select(col("media_id"),
-        posexplode(col("fr_phash64")).as(Seq("frame_idx", "fphash64")))
-
   /** metadata extraction: magic-based container sniffing, byte size, and
     * content hash as pure expressions over the binary column; REAL
     * decoded width/height/brightness for PNG and JPEG rows and
@@ -961,19 +953,20 @@ object Multimodal {
   def mediaQualityGate(media: DataFrame): DataFrame =
     qualityVerdict(decodeMedia(media))
 
-  /** [[mediaQualityGate]] over a stored [[mediaDecodeStats]] artifact —
-    * the production shape: the decode pass ran once at extraction time,
-    * the gate itself is one codegen projection over payload-free stats
+  /** [[mediaQualityGate]] over a stored [[mediaDecodeStats]] (or
+    * [[mediaExtractAll]]) artifact — the production shape: the decode
+    * pass ran once at extraction time, the gate itself is one codegen
+    * projection over payload-free stats
     */
   def mediaQualityGateFrom(stats: DataFrame): DataFrame =
     qualityVerdict(stats)
 
   /** the x88 first-failing-rule CASE, over any frame carrying the
-    * decoded-stat columns (same projection whether they were decoded
-    * in-flight or read back from the stats artifact)
+    * decoded-stat columns (same expression whether they were decoded
+    * in-flight or read back from a stored artifact)
     */
-  private def qualityVerdict(decoded: DataFrame): DataFrame = {
-    val reason = when(col("dec_brightness").isNull &&
+  private val qualityReason =
+    when(col("dec_brightness").isNull &&
         col("dec_amp_mean").isNull && col("dec_duration_ms").isNull,
         "undecodable")
       .when(col("kind") === "image" &&
@@ -988,16 +981,23 @@ object Multimodal {
       .when(col("kind") === "video" && col("dec_duration_ms") < MinClipMs,
         "too_short")
       .otherwise("pass")
-    decoded.withColumn("reason", reason)
+
+  private def qualityVerdict(decoded: DataFrame): DataFrame =
+    decoded.withColumn("reason", qualityReason)
       .select(col("media_id"), col("kind"), col("reason"),
         (col("reason") === "pass").as("keep"))
-  }
+
+  /** the rows of a [[mediaExtractAll]] frame that pass the quality gate,
+    * all columns kept: the funnel's dedup-stage input
+    */
+  private[graft] def qualitySurvivors(extract: DataFrame): DataFrame =
+    extract.filter(qualityReason === "pass")
 
   /** payload-free decode-stats artifact (the quality gate's stored
     * input): one shuffle-free decode pass, then only the per-file stat
     * columns — at 100 TB the payload stays in the lake and this
-    * kilobytes-per-million-files table is what the gate, the funnel,
-    * and the ingest reports actually read
+    * kilobytes-per-million-files table is what the gate and the ingest
+    * reports actually read
     */
   def mediaDecodeStats(media: DataFrame): DataFrame =
     decodeMedia(media).select(col("media_id"), col("kind"),
@@ -1015,40 +1015,38 @@ object Multimodal {
     * This is the ingest decision a media pipeline actually ships — one
     * keep/drop per file, not three per-modality pair listings.
     *
-    * r15: the three per-modality extract scans fused into ONE decode
-    * pass ([[mediaExtractAll]], persisted payload-free) — the demo path
-    * now pays the same single decode as the stored-artifact path.
+    * One fused decode pass ([[mediaExtractAll]], persisted payload-free)
+    * feeds all three legs.
     */
-  def mediaDedupKeep(media: DataFrame): DataFrame = {
-    val x = CacheScope.keep(mediaExtractAll(media))
-    mediaDedupKeepFrom(
-      x.select(col("media_id"), col("kind")),
-      x.select(col("media_id"), col("kind"), col("phash64")),
-      x.select(col("media_id"), col("kind"), col("audiofp64")),
-      vidHashOf(x))
-  }
+  def mediaDedupKeep(media: DataFrame): DataFrame =
+    mediaDedupKeepFrom(CacheScope.keep(mediaExtractAll(media)))
 
-  /** [[mediaDedupKeep]] off the three STORED hash artifacts — the
-    * production path: decode happens once, at extraction time
+  /** [[mediaDedupKeep]] off the stored [[mediaExtractAll]] artifact — the
+    * production path: decode happens once, at extraction time. Every
+    * row of `extract` is a vertex; its hash columns feed the three legs.
     */
-  def mediaDedupKeepFrom(idsKinds: DataFrame, imgHash: DataFrame,
-      audFp: DataFrame, vidHash: DataFrame,
-      imgTau: Int = 7, imgBands: Int = 8): DataFrame = {
+  def mediaDedupKeepFrom(extract: DataFrame, imgTau: Int = 7,
+      imgBands: Int = 8): DataFrame = {
     // r17: the two hamming modalities feed CC through [[hammingCcEdges]]
     // (exact-hash collapse + star edges + rep-space banded join) — same
     // components as the full pair lists, bounded on mega-cluster
     // corpora where the pair LIST is quadratic-per-bucket even under
     // the re-shard cap. The per-pair LISTINGS (x81/x83) keep their
     // full-pair contract; only the edge set CC consumes changed shape.
-    val pairs = hammingCcEdges(imgHash, "phash64", imgTau, imgBands)
-      .unionAll(hammingCcEdges(audFp, "audiofp64", 7, 8))
+    // [[videoPhash]]-shaped rows: the frame hashes ride in-row, so
+    // exploding them is a projection, no re-decode
+    val vidHash = extract.filter(col("fr_phash64").isNotNull)
+      .select(col("media_id"),
+        posexplode(col("fr_phash64")).as(Seq("frame_idx", "fphash64")))
+    val pairs = hammingCcEdges(extract, "phash64", imgTau, imgBands)
+      .unionAll(hammingCcEdges(extract, "audiofp64", 7, 8))
       .unionAll(videoNearDupFrom(vidHash).select(col("id_a"), col("id_b")))
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    val ids = idsKinds.select(col("media_id").as("doc_id"))
+    val ids = extract.select(col("media_id").as("doc_id"))
     Dedup.clustersFromPairs(ids, pairs)
       .select(col("doc_id").as("media_id"), col("cluster_id"),
         col("cluster_size"))
-      .join(idsKinds, Seq("media_id"))
+      .join(extract.select(col("media_id"), col("kind")), Seq("media_id"))
       .select(col("media_id"), col("kind"), col("cluster_id"),
         col("cluster_size"),
         (col("media_id") === col("cluster_id")).as("keep"))
@@ -1059,32 +1057,20 @@ object Multimodal {
     * stage 2 runs cross-modal dedup keep among the quality SURVIVORS
     * only (sequential semantics — a dropped file can't represent a
     * cluster), and each (stage, kind) row reports in/kept counts. The
-    * composition a media-ingest report actually shows.
+    * composition a media-ingest report actually shows. One fused decode
+    * pass (persisted payload-free) feeds both stages.
     */
-  def mediaCurationFunnel(media: DataFrame): DataFrame = {
-    // r15: ONE fused decode pass (persisted payload-free) feeds both
-    // stages through the stored-artifact plan — the demo path previously
-    // decoded every payload up to 4× (the quality gate's own pass + the
-    // three per-modality extract scans)
-    val x = CacheScope.keep(mediaExtractAll(media))
-    mediaCurationFunnelFrom(
-      x.select(col("media_id"), col("kind"), col("dec_width"),
-        col("dec_height"), col("dec_brightness"), col("dec_duration_ms"),
-        col("dec_sample_rate"), col("dec_amp_mean")),
-      x.select(col("media_id"), col("kind"), col("phash64")),
-      x.select(col("media_id"), col("kind"), col("audiofp64")),
-      vidHashOf(x))
-  }
+  def mediaCurationFunnel(media: DataFrame): DataFrame =
+    mediaCurationFunnelFrom(CacheScope.keep(mediaExtractAll(media)))
 
-  /** [[mediaCurationFunnel]] off the four STORED artifacts (decode
-    * stats + the three hash tables) — the production funnel: decode
-    * happened once at extraction; stage 1 is a projection over the
-    * stats artifact, stage 2 semi-joins each hash artifact down to the
-    * quality survivors before the pair generators run, so dedup's
-    * candidate volume shrinks with the quality cut instead of being
-    * paid on files already dropped. Per-file identical to
-    * [[mediaCurationFunnel]] (hash extraction is deterministic per
-    * payload — spec-pinned).
+  /** [[mediaCurationFunnel]] off the stored [[mediaExtractAll]] artifact
+    * — the production funnel: decode happened once at extraction; stage
+    * 1 is a projection over the artifact's stat columns, stage 2 filters
+    * the same rows down to the quality survivors before the pair
+    * generators run, so dedup's candidate volume shrinks with the
+    * quality cut instead of being paid on files already dropped.
+    * Per-file identical to [[mediaCurationFunnel]] (hash extraction is
+    * deterministic per payload — spec-pinned).
     *
     * `imgTau`/`imgBands` expose the image stage's band geometry (r15):
     * past ~300k surviving images the default 8×8-bit bands saturate
@@ -1092,32 +1078,11 @@ object Multimodal {
     * switches to 4×16-bit / τ≤3 per the [[imageNearDupFrom]] scaladoc —
     * the funnel ladder measures both geometries at the same corpus.
     */
-  def mediaCurationFunnelFrom(stats: DataFrame, imgHash: DataFrame,
-      audFp: DataFrame, vidHash: DataFrame,
-      imgTau: Int = 7, imgBands: Int = 8): DataFrame = {
-    val q = mediaQualityGateFrom(stats)
-    // persisted (r19, per-job trace): the survivor id list is the join
-    // key of all four stage-2 inputs, and each reference re-ran the
-    // whole [stats scan → verdict → filter] chain as its own broadcast
-    // build (the funnel ran ~40 single-stage extract-cache scans per
-    // execution). One media_id column, MEMORY_AND_DISK; the open
-    // CacheScope releases it.
-    val survivors =
-      CacheScope.keep(q.filter(col("keep")).select(col("media_id")))
-    // the four survivor-JOINED frames measured persisted and REVERTED
-    // (r19 A/B): jobs 211→154 but wall WORSE in both pairs (10.1→12.4,
-    // 11.7→12.6 s) — four materialization barriers serialize a DAG
-    // whose duplicated pieces are cheap broadcast-join scans once the
-    // survivor list itself is cached
-    val d = mediaDedupKeepFrom(
-      stats.join(survivors, Seq("media_id"))
-        .select(col("media_id"), col("kind")),
-      imgHash.join(survivors, Seq("media_id")),
-      audFp.join(survivors, Seq("media_id")),
-      vidHash.join(survivors, Seq("media_id")),
-      imgTau, imgBands)
-    funnelRollup(q, "quality").unionByName(funnelRollup(d, "dedup"))
-  }
+  def mediaCurationFunnelFrom(extract: DataFrame, imgTau: Int = 7,
+      imgBands: Int = 8): DataFrame =
+    funnelRollup(qualityVerdict(extract), "quality").unionByName(
+      funnelRollup(mediaDedupKeepFrom(qualitySurvivors(extract), imgTau,
+        imgBands), "dedup"))
 
   /** per-(stage, kind) in/kept attrition row */
   private def funnelRollup(gate: DataFrame, stage: String): DataFrame =
@@ -1256,7 +1221,7 @@ object Multimodal {
   }
 
   /** x93 — the curation funnel with the image band geometry picked by
-    * [[autoBandGeometry]] from the stored image-hash artifact: at tame
+    * [[autoBandGeometry]] from the extract's image-hash column: at tame
     * corpus sizes this IS [[mediaCurationFunnel]] (the ladder's widest
     * geometry fits the budget); past the knee it switches to the
     * 4×16-bit/τ≤3 production geometry instead of silently paying
@@ -1265,20 +1230,13 @@ object Multimodal {
   def mediaCurationFunnelAuto(media: DataFrame,
       budgetPairs: Long = 200000000L): DataFrame = {
     val x = CacheScope.keep(mediaExtractAll(media))
-    val imgHash = x.select(col("media_id"), col("kind"), col("phash64"))
-    val (nBands, tau) = autoBandGeometry(imgHash, "phash64", budgetPairs)
+    val (nBands, tau) = autoBandGeometry(x, "phash64", budgetPairs)
     // the selected geometry rides on every output row (r16 ADVICE):
     // past the budget knee the funnel legitimately switches to the
     // narrow geometry and its rows diverge from the wide-geometry
     // oracle — these columns turn that boundary crossing into a
     // visible, diagnosable value instead of an unexplained mismatch
-    mediaCurationFunnelFrom(
-      x.select(col("media_id"), col("kind"), col("dec_width"),
-        col("dec_height"), col("dec_brightness"), col("dec_duration_ms"),
-        col("dec_sample_rate"), col("dec_amp_mean")),
-      imgHash,
-      x.select(col("media_id"), col("kind"), col("audiofp64")),
-      vidHashOf(x), imgTau = tau, imgBands = nBands)
+    mediaCurationFunnelFrom(x, imgTau = tau, imgBands = nBands)
       .withColumn("geo_bands", lit(nBands))
       .withColumn("geo_tau", lit(tau))
   }

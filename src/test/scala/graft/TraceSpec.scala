@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
+import graft.core.CacheScope
+
 /** Each graft.Trace mode on two fixture-backed metadata queries (their
   * sfDir argument is unused). `main` is not called: it stops the session.
   */
@@ -45,5 +49,14 @@ class TraceSpec extends SparkSpec {
     val plans = Trace.explain(spark, qs, "-")
     assert(plans.map(_._1) == names)
     plans.foreach { case (n, p) => assert(p.contains("== Physical Plan =="), n) }
+  }
+
+  test("explain: frames a query keeps are released after its plan") {
+    spark.catalog.clearCache()
+    val keeps: SparkEntry.QueryFn = (s, _) =>
+      CacheScope.keep(s.range(10).toDF("id")).filter(col("id") > 3)
+    val plans = Trace.explain(spark, Seq("keeps" -> keeps), "-")
+    assert(plans.head._2.contains("InMemoryRelation"))
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

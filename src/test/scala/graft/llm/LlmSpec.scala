@@ -1863,16 +1863,22 @@ class MultimodalSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = Multimodal.mediaRows.toDS().toDF()
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3))
-    val direct = Multimodal.mediaCurationFunnel(df).collect().map(key).toSet
-    // the production path: decode once into the four artifacts, then
-    // run the funnel payload-free
-    val stored = Multimodal.mediaCurationFunnelFrom(
-      Multimodal.mediaDecodeStats(df), Multimodal.imagePhash(df),
-      Multimodal.audioFingerprint(df), Multimodal.videoPhash(df))
-      .collect().map(key).toSet
-    assert(stored == direct)
+    // the production path: decode once into the extract artifact, write
+    // it (fr_phash64 array column included), then run payload-free off
+    // the read-back
+    val dir = java.nio.file.Files.createTempDirectory("media_extract")
+      .toString + "/extract_all.parquet"
+    Multimodal.mediaExtractAll(df).write.parquet(dir)
+    val stored = spark.read.parquet(dir)
+    assert(stored.schema("fr_phash64").dataType ==
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.LongType))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toSeq).toSet
+    assert(rows(Multimodal.mediaCurationFunnelFrom(stored)) ==
+      rows(Multimodal.mediaCurationFunnel(df)))
+    assert(rows(Multimodal.mediaDedupKeepFrom(stored)) ==
+      rows(Multimodal.mediaDedupKeep(df)))
     // and the stats-artifact gate alone equals the in-flight gate
     val g1 = Multimodal.mediaQualityGate(df).collect().map(_.toSeq).toSet
     val g2 = Multimodal.mediaQualityGateFrom(Multimodal.mediaDecodeStats(df))
@@ -1901,13 +1907,9 @@ class MultimodalSpec extends SparkSpec {
     // the funnel's geometry knob: quality stage is geometry-independent,
     // and the wide dedup stage still drops every planted variant (their
     // hashes match at hamming 0, so tau=3 keeps them all)
-    val wf = Multimodal.mediaCurationFunnelFrom(
-      Multimodal.mediaDecodeStats(df), Multimodal.imagePhash(df),
-      Multimodal.audioFingerprint(df), Multimodal.videoPhash(df),
-      imgTau = 3, imgBands = 4)
-    val base = Multimodal.mediaCurationFunnelFrom(
-      Multimodal.mediaDecodeStats(df), Multimodal.imagePhash(df),
-      Multimodal.audioFingerprint(df), Multimodal.videoPhash(df))
+    val x = Multimodal.mediaExtractAll(df)
+    val wf = Multimodal.mediaCurationFunnelFrom(x, imgTau = 3, imgBands = 4)
+    val base = Multimodal.mediaCurationFunnelFrom(x)
     def stage(d: org.apache.spark.sql.DataFrame, st: String) =
       d.filter(col("stage") === st).collect()
         .map(r => (r.getString(1), r.getLong(2), r.getLong(3))).toSet
