@@ -6,42 +6,38 @@ import scala.util.Using
 
 import org.apache.spark.sql.DataFrame
 
+import graft.QueryMetrics.Run
+
 /** Per-round benchmark main.
   *
-  * Fixes from round-1 verdict:
   *   - builds the session via [[graft.core.GraftSession]] (events' nanos
-  *     timestamps + UTC come from there, not re-derived here);
+  *     timestamps + UTC come from there, not re-derived here) at
+  *     [[Bench.benchCores]];
   *   - the action is a `noop`-format write, so Catalyst cannot prune the
   *     projections/windows the way `.count()` allowed;
-  *   - every query gets one warm-up run + 3 timed runs, reporting the
-  *     median (cold-start no longer lands on whichever query runs first);
-  *     the timed runs are interleaved as whole-suite sweeps and each
-  *     query's min is reported alongside (round-4 variance hardening);
-  *   - failures are reported per-query (`"failed"` list + null-free
+  *   - timing runs through [[Sweep]]: the start-load gate, then one
+  *     warm-up run and 3 interleaved sweeps per query, each run in its own
+  *     CacheScope and QueryMetrics group. Each query reports its median
+  *     and min wall, and its min task time, stages, CPU, jobs, shuffle and
+  *     spill across sweeps;
+  *   - failures are reported per query (`"failed"` list + null-free
   *     timings) instead of being swallowed as fake timings, and the
   *     process exits nonzero if anything failed;
-  *   - the JSON line is written to `bench_out.json` AND printed on plain
-  *     stdout (build.sbt sets `run / outputStrategy := StdoutOutput` so
-  *     sbt does not decorate it into unparsability).
+  *   - the JSON lines ([[Bench.Line]]) take their keys from one ordered
+  *     list ([[Bench.Report.fields]]); bench_out.json is rewritten after
+  *     every pass, and build.sbt sets `run / outputStrategy :=
+  *     StdoutOutput` so sbt does not decorate the printed lines into
+  *     unparsability.
   *
-  * Round-3 additions (r2 verdict tasks 3+8):
-  *   - the sf tables are STAGED (untimed) into a multi-file copy under
-  *     /tmp before timing: the driver-generated parquet carries ONE row
-  *     group per table, capping every scan at one task regardless of
-  *     `maxPartitionBytes`; re-laying each table out as ~rows/10k files
-  *     (≤ cores) lets scans parallelize the way any real deployment's
-  *     layout would. Disable with SPARK_GRAFT_STAGE=0 to measure the raw
-  *     single-row-group layout.
-  *   - the fixture-backed metadata queries (m*, constant-size input) get
-  *     their own timed section (`m_queries`/`m_total`) so regressions on
-  *     the reference's core analytics path are caught round-over-round;
-  *     they stay excluded from the sf total, which tracks BASELINE.md.
+  * The sf tables are STAGED (untimed) into a multi-file copy under /tmp
+  * before timing: the driver-generated parquet carries ONE row group per
+  * table, capping every scan at one task regardless of
+  * `maxPartitionBytes`. Disable with SPARK_GRAFT_STAGE=0 to measure the
+  * raw single-row-group layout.
   *
-  * Round-10 addition (r9 verdict task 2): progressive partial output —
-  * a flushed `"partial":true` JSON line (and a bench_out.json rewrite)
-  * after the warm-up pass and after every sweep, so an external timeout
-  * can never again zero the round's artifact the way x48's regression
-  * did to BENCH_r09.
+  * The fixture-backed metadata queries (m*, constant-size input) get their
+  * own timed section (`m_queries`/`m_total`), excluded from the sf total,
+  * which tracks BASELINE.md.
   */
 object Bench {
 
@@ -189,11 +185,9 @@ object Bench {
       }
     }
 
-  /** the executor parallelism this process runs at — the same
-    * env-derived value [[core.GraftSession]]'s `local[N]` master uses,
-    * falling back to the host core count (r14 advice: the staged layout
-    * previously hardcoded 32, silently mismatching hosts with a
-    * different core count or an explicit SPARK_GRAFT_CPUS override)
+  /** the executor parallelism of the harness mains: SPARK_GRAFT_CPUS,
+    * else the host core count. Bench, Trace and MediaBench build their
+    * `local[N]` session with it, and the staged layout is cut for it.
     */
   private[graft] def benchCores: Int =
     sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
@@ -301,10 +295,128 @@ object Bench {
   private val AmplifySet =
     "^(q13|q36|q37|x02|x03|x16|x21|x22|x23|x26|x30|x33|x36|x38|x41|x43|x44|x50|x53|x56|x57|x58|x59|x61|x62|x63|x64|x65|x66|x67|x68|x69|x71|x72|x73|x74|x75|x76|x77|x78|x79|x81|x83|x85|x86|x88|x91|st07|st21)"
 
+  /** the JSON lines a run writes, each with the format its numbers take */
+  private[graft] sealed abstract class Line(val num: Double => String)
+  private[graft] object Line {
+    /** printed and written to bench_out.json after the warm-up pass and
+      * after every sweep, so a timeout at any point leaves the last
+      * completed pass's numbers (the warm-up walls stand in until the
+      * first sweep) */
+    case object Partial extends Line(Json.r3)
+    /** bench_out.json at the end: every map, full precision */
+    case object File extends Line(_.toString)
+    /** the penultimate stdout line: the per-query walls at 1 ms, because
+      * the full-precision maps outgrew the ~4 KiB output tail a driver
+      * keeps */
+    case object Stdout extends Line(Json.r3)
+    /** the last stdout line. A driver parses the last complete JSON line
+      * inside the last 2000 characters it keeps; 181 query names alone
+      * are ~3.3 KB, so this line carries headline scalars only, and its
+      * keys must not change. */
+    case object Final extends Line(Json.r3)
+  }
+
+  /** what one run measured: the warm-up or sweep runs of each live query
+    * per section, and the sweep state around them */
+  private[graft] final case class Report(sf: collection.Map[String, Seq[Run]],
+      m: collection.Map[String, Seq[Run]], failed: collection.Map[String, String],
+      leaks: Iterable[String], incomplete: Iterable[String], unmapped: Long,
+      gate: Sweep.Gate, loads: Seq[Double], passes: Int, staged: Boolean, amplify: Int,
+      sfDir: String, mSelected: Int, fullSelection: Boolean) {
+
+    private def medians(rs: collection.Map[String, Seq[Run]]) =
+      rs.toSeq.map { case (n, r) => val s = r.map(_.wallS).sorted; n -> s(s.size / 2) }
+    private def mins(rs: collection.Map[String, Seq[Run]]) = rs.toSeq.map { case (n, r) => n -> r.map(_.wallS).min }
+    // min across sweeps: stage counts are deterministic (AQE decisions
+    // aside); task time and CPU time are the window-insensitive floors a
+    // keep/revert adjudication uses, since walls on a shared host swing
+    // ±50% with external load
+    private def minOf(f: QueryMetrics.Totals => Double) =
+      (sf.toSeq ++ m.toSeq).map { case (n, rs) => n -> rs.map(r => f(r.totals)).min }
+    val mTotal: Double = medians(m).map(_._2).sum
+
+    /** the m-suite regression guard: the metadata suite is KB-sized, and
+      * its regression class (cache substitution over ballooned plans)
+      * shows as a section total far above the ~3.5 s healthy floor. A
+      * failed m query is itself the signal, so a crash-dropped query
+      * cannot let the remaining sum read as ok. */
+    val mGuard: String = {
+      val fullSuite = mSelected == SparkEntry.queries.keys.count(_.startsWith("m"))
+      val mFailed = failed.keys.exists(_.startsWith("m"))
+      if (!fullSuite || (m.isEmpty && !mFailed)) "n/a"
+      else if (mFailed) "BREACH_failures"
+      else if (mTotal <= 6.0) "ok"
+      else if (loads.isEmpty || loads.max >= 16.0) "high_load"
+      else "BREACH"
+    }
+
+    /** the host thermometer: the m-suite is constant-size, so its total
+      * gauges host contention. It read 3.3 s on every quiet window and
+      * 5.9–12.6 s on loaded ones with no m-code change. */
+    private val mFloorRatio = if (m.isEmpty) 0.0 else mTotal / 3.3
+
+    /** a run counts as a round's record only when the full default
+      * selection ran, the m-guard and thermometer read quiet (n/a passes
+      * only when no m query exists), the start-load gate ran and passed
+      * and nothing failed */
+    private val canonical = fullSelection &&
+      ((mGuard == "ok" && mFloorRatio <= 1.3) ||
+        (mGuard == "n/a" && !SparkEntry.queries.keys.exists(_.startsWith("m")))) &&
+      gate.verdict == "ok" && failed.isEmpty
+
+    /** every key in output order, the lines that carry it and its value;
+      * `num` renders the numbers that follow the line's precision */
+    private def fields(num: Double => String): Seq[(String, Set[Line], String)] = {
+      import Line._
+      val all = Set[Line](Partial, File, Stdout, Final)
+      val end = Set[Line](File, Stdout, Final)
+      val long = (v: Double) => v.toLong.toString
+      Seq(
+        ("metric", all, Json.str("total")),
+        ("value", all, num(medians(sf).map(_._2).sum)),
+        ("unit", all, Json.str("sec")),
+        ("partial", Set(Partial), "true"),
+        ("passes", Set(Partial), passes.toString),
+        ("queries", Set(Partial, File, Stdout), Json.nums(medians(sf), num)),
+        ("queries_min", Set(File), Json.nums(mins(sf), num)),
+        ("m_queries", Set(File), Json.nums(medians(m), num)),
+        ("m_queries_min", Set(File), Json.nums(mins(m), num)),
+        ("task_time_s", Set(File), Json.nums(minOf(_.taskWallS))),
+        ("stages", Set(File), Json.nums(minOf(_.stages.toDouble), long)),
+        ("cpu_s", Set(File), Json.nums(minOf(_.cpuS))),
+        ("jobs", Set(File), Json.nums(minOf(_.jobs.toDouble), long)),
+        ("shuffle_mb", Set(File),
+          Json.nums(minOf(t => (t.shuffleReadBytes + t.shuffleWriteBytes) / 1e6))),
+        ("spill_mb", Set(File), Json.nums(minOf(_.spillBytes / 1e6))),
+        ("metrics_incomplete", Set(File), Json.strs(incomplete)),
+        ("cache_leaks", Set(File), Json.strs(leaks)),
+        ("unmapped", Set(File), unmapped.toString),
+        ("m_total", all, num(mTotal)),
+        ("m_guard", end, Json.str(mGuard)),
+        ("load_gate", end, Json.str(gate.verdict)),
+        ("start_load", end, Json.r3(gate.startLoad)),
+        ("quiet_wait_s", end, gate.quietWaitS.toString),
+        ("canonical", end, canonical.toString),
+        ("task_time_total_s", end, Json.r3(minOf(_.taskWallS).map(_._2).sum)),
+        ("stages_total", end, minOf(_.stages.toDouble).map(_._2).sum.toLong.toString),
+        ("m_floor_ratio", end, Json.r3(mFloorRatio)),
+        ("total_min", all, num(mins(sf).map(_._2).sum)),
+        ("staged", all, staged.toString),
+        ("amplify", all, amplify.toString),
+        ("load_avg", all, Json.arr(loads.map(Json.r3))),
+        ("failed", all, Json.obj(failed.map { case (k, v) => k -> Json.str(v) })),
+        ("n_ok", all, (sf.size + m.size).toString),
+        ("n_failed", all, failed.size.toString),
+        ("sf", all, Json.str(sfDir)),
+        ("queries_file", Set(Final), Json.str("bench_out.json")))
+    }
+
+    def line(l: Line): String = Json.obj(fields(l.num).collect { case (k, ls, v) if ls(l) => k -> v })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = core.GraftSession.builder("graft-bench", cpus)
+    val spark = core.GraftSession.builder("graft-bench", benchCores.toString)
       // bench-only: memory-sink streams on duplication-heavy amplified
       // corpora collect ~1 GB to the driver; the ENGINE default stays at
       // 1 GB so accidental collects in operators still fail fast
@@ -335,193 +447,28 @@ object Bench {
     if (mediaSelected && runDir != sfDir)
       ensureMedia(spark, runDir, mediaN(sfDir) * math.max(1, amplify.getOrElse(1)))
 
-    // host-load telemetry (r7 verdict task 8): 1-minute load average
-    // sampled at start and after every sweep, reported in the JSON so a
-    // reviewer can separate shared-VM noise from plan regressions
-    // without re-deriving it
-    val loadSamples = scala.collection.mutable.ListBuffer[Double]()
-    def load1(): Double = java.lang.management
-      .ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-    def sampleLoad(): Unit = loadSamples += load1()
-
-    // start-load gate (r14 verdict task 1): the r14 round-close snapshot
-    // was a high-load run (load 10–19; its x90/x91 readings were 7–9×
-    // the quiet-host numbers), violating the canonical-run rule the same
-    // round had just declared. The bench now refuses to START timing on
-    // a loaded host: it waits (bounded) for the 1-minute load to fall
-    // under SPARK_GRAFT_MAX_START_LOAD (default 5.0; 0 disables), and
-    // records how it went — `load_gate` reads "ok" when timing began
-    // quiet, "timed_under_load" when the wait expired (so a reviewer
-    // knows the numbers are suspect WITHOUT re-deriving it from
-    // load_avg). Staging above is untimed, so it runs before the gate.
-    val maxStartLoad = sys.env.get("SPARK_GRAFT_MAX_START_LOAD")
-      .flatMap(_.toDoubleOption).getOrElse(5.0)
-    val maxQuietWaitS = sys.env.get("SPARK_GRAFT_QUIET_WAIT_S")
-      .flatMap(_.toIntOption).getOrElse(900)
-    var quietWaitedS = 0
-    var startLoad = load1()
-    while (maxStartLoad > 0 && startLoad > maxStartLoad &&
-        quietWaitedS < maxQuietWaitS) {
-      Console.err.println(f"[bench] start load $startLoad%.1f > " +
-        f"$maxStartLoad%.1f — waiting for a quiet host " +
-        f"(${quietWaitedS}s/${maxQuietWaitS}s)")
-      Thread.sleep(15000)
-      quietWaitedS += 15
-      startLoad = load1()
-    }
-    val loadGate =
-      if (maxStartLoad <= 0) "disabled"
-      else if (startLoad <= maxStartLoad) "ok"
-      else "timed_under_load"
-    sampleLoad()
-
+    // staging above is untimed, so it runs before the gate
+    val gate = Sweep.awaitQuiet("bench")
     val metrics = new QueryMetrics
     spark.sparkContext.addSparkListener(metrics)
-    val incomplete = scala.collection.mutable.ListBuffer[String]()
-    val leaks = scala.collection.mutable.LinkedHashSet[String]()
-
-    /** window-insensitive per-run counters: keep/revert adjudications
-      * lean on summed executor task time and stage counts (`graft.Trace
-      * census` machinery) because wall totals on a shared host swing ±50%
-      * with external load; the bench rides the same counters per query so
-      * its artifacts carry them without forensic reconstruction. Each run
-      * is its own [[QueryMetrics]] group; its metrics are read after the
-      * group completes (bounded wait, a run that times out is listed in
-      * `metrics_incomplete`), OUTSIDE the wall-clock region.
-      */
-    def runOnce(name: String, fn: QueryFn): QueryMetrics.Run = {
-      // every timed run must pay the full compute, like the DuckDB
-      // baseline does: the run's CacheScope releases the intermediates
-      // its operators persist for intra-query branch reuse (x03's
-      // candidate set, x06's bucket table), which Spark's CacheManager
-      // would otherwise hand to the NEXT run by plan identity. Cached
-      // RDDs the scope missed are released here and the query is named
-      // in `cache_leaks`.
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val run =
-        try Using.resource(core.CacheScope.open()) { _ =>
-          metrics.measure(spark.sparkContext, s"bench:$name") {
-            fn(spark, runDir).write.format("noop").mode("overwrite").save()
-          }
-        } finally {
-          val left = spark.sparkContext.getPersistentRDDs.values
-            .filterNot(r => before(r.id))
-          left.foreach(_.unpersist(blocking = true))
-          if (left.nonEmpty) leaks += name
-        }
-      if (!run.complete) incomplete += name
-      run
-    }
-
-    val failed = scala.collection.mutable.ListBuffer[(String, String)]()
-
-    // JSON helpers (shared by the partial-progress lines and the final
-    // artifact). Explicit root locale: the default-locale formatter can
-    // emit a comma decimal separator, which would break the JSON.
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jmap(m: scala.collection.Map[String, Double]): String =
-      m.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    def jmapR(m: scala.collection.Map[String, Double]): String =
-      m.map { case (k, v) => s"${jstr(k)}:${r3(v)}" }.mkString("{", ",", "}")
-    def jmapI(m: scala.collection.Map[String, Double]): String =
-      m.map { case (k, v) => s"${jstr(k)}:${v.toLong}" }.mkString("{", ",", "}")
-    def jfails: String = failed.map { case (k, m) => s"${jstr(k)}:${jstr(m)}" }
-      .mkString("{", ",", "}")
-
-    // progressive results (r9 verdict task 2): BENCH_r09 was a timeout
-    // husk (`rc: 124, parsed: null`) because the one JSON line printed
-    // at the very end of ~4 full sweeps. The bench now emits a flushed
-    // partial line (and rewrites bench_out.json) after the warm-up pass
-    // and after EVERY sweep, so a timeout at any point leaves the last
-    // completed pass's numbers: warm-up times stand in as provisional
-    // medians/mins until the first timed sweep replaces them. The final
-    // line is the same shape with "partial" absent; a driver that keeps
-    // the last parseable line gets the most-complete data either way.
-    val sfTimings = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val sfMins = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val mTimings = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val mMins = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // every timed run of each live query, both sections: its wall feeds
-    // the median/min maps, its totals the window-insensitive per-query
-    // metrics
-    val runs = scala.collection.mutable.LinkedHashMap[String,
-      scala.collection.mutable.ListBuffer[QueryMetrics.Run]]()
-    def fail(name: String, e: Throwable): Unit = {
-      val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-      failed += name -> msg.linesIterator.take(1).mkString.take(200)
-    }
-    val amp = amplify.getOrElse(0)
+    val sweep = new Sweep(spark, metrics, "bench")
+    val mQueries = selection.filter(_._1.startsWith("m"))
+    var sf, m = collection.Map.empty[String, Seq[Run]]
     var passes = 0 // completed warm-up/sweep passes across both sections
-    def emitPartial(): Unit = {
-      val loads = loadSamples.map(r3).mkString("[", ",", "]")
-      val j =
-        s"""{"metric":"total","value":${r3(sfTimings.values.sum)},"unit":"sec","partial":true,"passes":$passes,"queries":${jmapR(sfTimings)},"m_total":${r3(mTimings.values.sum)},"total_min":${r3(sfMins.values.sum)},"staged":$doStage,"amplify":$amp,"load_avg":$loads,"failed":$jfails,"n_ok":${sfTimings.size + mTimings.size},"n_failed":${failed.size},"sf":${jstr(sfDir)}}"""
-      Files.writeString(Paths.get("bench_out.json"), j + "\n")
-      println(j)
-      Console.out.flush()
-    }
-
-    // Round-4 variance hardening (r3 verdict task 2): the three timed runs
-    // of each query are INTERLEAVED as full sweeps over the whole suite
-    // (sweep 1 runs every query once, then sweep 2, then sweep 3) instead
-    // of back-to-back per query, so a transient host-load spike inflates
-    // at most one temporally-separated sample per query rather than all
-    // three; the per-query MIN rides along (`queries_min`) as the
-    // load-insensitive floor. r3's q12 5.0s/q13 3.4s/q25 2.3s/st04 2.8s
-    // driver numbers do not reproduce locally (0.52/1.33/0.26/1.21 —
-    // same commit, same staged layout): external load, not plan change.
-    def timeAll(qs: Seq[(String, QueryFn)],
-        outMed: scala.collection.mutable.LinkedHashMap[String, Double],
-        outMin: scala.collection.mutable.LinkedHashMap[String, Double]): Unit = {
-      qs.foreach { case (name, fn) =>
-        // warm-up: JIT + parquet footer cache + codegen cache; its time
-        // rides as the provisional partial-output entry
-        try {
-          val t = runOnce(name, fn).wallS
-          runs(name) = scala.collection.mutable.ListBuffer()
-          outMed(name) = t
-          outMin(name) = t
-        } catch { case e: Throwable => fail(name, e) }
-      }
-      passes += 1
-      emitPartial()
-      // sweep runs are guarded too (r4 advice): a query that passed
-      // warm-up but throws transiently mid-sweep is reported in `failed`
-      // and dropped, instead of crashing the bench before bench_out.json
-      (1 to 3).foreach { _ =>
-        qs.foreach { case (name, fn) =>
-          if (runs.contains(name)) {
-            try runs(name) += runOnce(name, fn)
-            catch {
-              case e: Throwable =>
-                fail(name, e)
-                runs.remove(name)
-                outMed.remove(name)
-                outMin.remove(name)
-            }
-          }
-        }
-        sampleLoad()
-        qs.foreach { case (name, _) =>
-          runs.get(name).foreach { rs =>
-            val s = rs.map(_.wallS).sorted
-            outMed(name) = s(s.size / 2)
-            outMin(name) = s.head
-          }
-        }
+    def report = Report(sf, m, sweep.failed, sweep.leaks, sweep.incomplete, metrics.unmapped,
+      gate, sweep.loads.toSeq, passes, doStage, amplify.getOrElse(0), sfDir, mQueries.size,
+      sys.env.get("SPARK_GRAFT_ONLY").isEmpty && amplify.isEmpty)
+    def timeAll(qs: Seq[(String, QueryFn)])(set: collection.Map[String, Seq[Run]] => Unit): Unit =
+      sweep(qs.map { case (n, fn) => n -> (() => Sweep.noop(fn(spark, runDir))) }, 3) { rs =>
+        set(rs)
         passes += 1
-        emitPartial()
+        val j = report.line(Line.Partial)
+        Files.writeString(Paths.get("bench_out.json"), j + "\n")
+        println(j)
+        Console.out.flush()
       }
-    }
 
-    timeAll(selection.filterNot(_._1.startsWith("m")), sfTimings, sfMins)
+    timeAll(selection.filterNot(_._1.startsWith("m")))(sf = _)
 
     // the m-suite runs over a SESSION-CACHED fixture catalog (r7 verdict
     // task 7): the base metadata frames (constant-size golden fixtures)
@@ -534,7 +481,6 @@ object Bench {
     // so each timed run still executes its full plan; only the
     // KB-sized parquet inputs come from memory instead of re-reading
     // footers ~90 times.
-    val mQueries = selection.filter(_._1.startsWith("m"))
     Using.resource(core.CacheScope.open()) { _ =>
       if (mQueries.nonEmpty) {
         val c = meta.FixtureCatalog.default
@@ -551,113 +497,20 @@ object Bench {
       val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.shuffle.partitions", "4")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      timeAll(mQueries, mTimings, mMins)
+      timeAll(mQueries)(m = _)
       spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
 
-    // ms-rounded variant for the stdout line: the driver keeps only a
-    // ~4 KiB tail of the run's output, and the full-precision four-map
-    // line grew past that in rounds 4-5 ("parsed": null in BENCH_r04/05).
-    // The printed line therefore carries the contract keys only (metric/
-    // value/unit/queries/sf + small scalars) at 1 ms precision (~2 KiB);
-    // bench_out.json keeps every map at full precision.
-    val total = sfTimings.values.sum
-    val loads = loadSamples.map(r3).mkString("[", ",", "]")
-    // m-suite regression guard (r10 verdict task 8): the metadata suite
-    // is KB-sized and its r8 regression class (cache-substitution over
-    // ballooned plans) shows up as a section total far above the ~3.5 s
-    // healthy floor. When the FULL m-suite ran and host load was sane,
-    // a total over 6 s marks the artifact BREACH so a silent return of
-    // that class is visible in the JSON, not just derivable from it.
-    val mGuard: String = {
-      val fullSuite =
-        mQueries.size == SparkEntry.queries.keys.count(_.startsWith("m"))
-      val saneLoad = loadSamples.nonEmpty && loadSamples.max < 16.0
-      // a FAILED m-query is itself the regression signal — "selected the
-      // full suite" must not pass for "the full suite actually timed",
-      // or a crash-dropped query lets the remaining sum read as ok
-      val mFailed = failed.exists(_._1.startsWith("m"))
-      if (!fullSuite || (mTimings.isEmpty && !mFailed)) "n/a"
-      else if (mFailed) "BREACH_failures"
-      else if (mTimings.values.sum <= 6.0) "ok"
-      else if (!saneLoad) "high_load"
-      else "BREACH"
-    }
-    if (mGuard == "BREACH")
+    val r = report
+    if (r.mGuard == "BREACH")
       Console.err.println(s"[bench] m-suite guard BREACH: " +
-        f"m_total=${mTimings.values.sum}%.2f s > 6 s at sane load")
-    // host thermometer (r18 verdict task 8 + r18 ADVICE item 2): the
-    // m-suite is constant-size (KB fixtures, pure scheduling), so its
-    // section total is a pure host-contention gauge — it read 3.3 s on
-    // every quiet r17/r18 window and 5.9–12.6 s on loaded ones with
-    // ZERO m-code change. The ratio to that quiet floor rides in the
-    // JSON so a reviewer separates window heat from plan regressions
-    // without cross-referencing OPTIMIZATION notes, and `canonical`
-    // now additionally requires the thermometer ≤ 1.3× the floor —
-    // a hot-window run can no longer self-stamp as the round's record
-    // (the r18 close regressed total_min 97.6→143.6 s at ratio 1.80
-    // yet stamped canonical:true).
-    val mFloorS = 3.3
-    val mFloorRatio =
-      if (mTimings.isEmpty) 0.0 else mTimings.values.sum / mFloorS
-    // machine-checkable canonicality (r14 verdict item 1's alternative;
-    // tightened per r15 ADVICE): a run only counts as the round's record
-    // when the FULL default query selection ran (no SPARK_GRAFT_ONLY
-    // filter, no amplified subset — a cherry-picked run must not
-    // self-stamp), the m-guard read ok (n/a passes only when the engine
-    // registers no m-queries at all), the start-load gate actually ran
-    // and passed (a disabled gate is not a pass), nothing failed, and
-    // the m-suite thermometer read quiet — a reviewer greps ONE boolean
-    // instead of re-deriving it
-    val fullSelection = sys.env.get("SPARK_GRAFT_ONLY").isEmpty &&
-      amplify.isEmpty
-    val noMQueriesExist = !SparkEntry.queries.keys.exists(_.startsWith("m"))
-    val canonical = fullSelection &&
-      ((mGuard == "ok" && mFloorRatio <= 1.3) ||
-        (mGuard == "n/a" && noMQueriesExist)) &&
-      loadGate == "ok" && failed.isEmpty
-    // min across sweeps: stage counts are deterministic (AQE decisions
-    // aside); task time and CPU time are the window-insensitive floors
-    // the adjudications use
-    def minOf(f: QueryMetrics.Totals => Double) =
-      runs.map { case (name, rs) => name -> rs.map(r => f(r.totals)).min }
-    val stageCounts = minOf(_.stages.toDouble)
-    val taskTimes = minOf(_.taskWallS)
-    val cpuTimes = minOf(_.cpuS)
-    // window-insensitive totals ride the FINAL line (r18 verdict task
-    // 2): stage counts are deterministic across windows and task time
-    // is far less window-bound than wall, so a "0.59× total" window is
-    // separable from a plan regression off the driver's artifact alone
-    val wiKeys =
-      s""""task_time_total_s":${r3(taskTimes.values.sum)},"stages_total":${stageCounts.values.sum.toLong},"m_floor_ratio":${r3(mFloorRatio)}"""
-    val gateKeys =
-      s""""load_gate":${jstr(loadGate)},"start_load":${r3(startLoad)},"quiet_wait_s":$quietWaitedS,"canonical":$canonical,$wiKeys"""
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(sfTimings)},"queries_min":${jmap(sfMins)},"m_queries":${jmap(mTimings)},"m_queries_min":${jmap(mMins)},"task_time_s":${jmapR(taskTimes)},"stages":${jmapI(stageCounts)},"cpu_s":${jmapR(cpuTimes)},"metrics_incomplete":${incomplete.map(jstr).mkString("[", ",", "]")},"cache_leaks":${leaks.map(jstr).mkString("[", ",", "]")},"unmapped":${metrics.unmapped},"m_total":${mTimings.values.sum},"m_guard":${jstr(mGuard)},$gateKeys,"total_min":${sfMins.values.sum},"staged":$doStage,"amplify":$amp,"load_avg":$loads,"failed":$jfails,"n_ok":${sfTimings.size + mTimings.size},"n_failed":${failed.size},"sf":${jstr(sfDir)}}"""
-    val jsonShort =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${jmapR(sfTimings)},"m_total":${r3(mTimings.values.sum)},"m_guard":${jstr(mGuard)},$gateKeys,"total_min":${r3(sfMins.values.sum)},"staged":$doStage,"amplify":$amp,"load_avg":$loads,"failed":$jfails,"n_ok":${sfTimings.size + mTimings.size},"n_failed":${failed.size},"sf":${jstr(sfDir)}}"""
-    // the 175-query map outgrew the stdout tail the driver keeps — the
-    // driver's BENCH_r* artifacts each retain EXACTLY the last 2000
-    // chars (incl. sbt's trailing "[success]" line) and parse the last
-    // complete JSON line inside it: BENCH_r12–r14 all read
-    // `parsed: null` off a mid-map cut of a ~4.5 KB final line, and
-    // 181 query NAMES alone are ~3.3 KB, so per-query maps can never
-    // ride the final line (r18 verdict task 1 as literally stated is
-    // physically unsatisfiable against that window). The LAST printed
-    // line therefore stays a compact headline-only record that always
-    // fits — now carrying the window-insensitive per-run totals — and
-    // the per-query maps (timings + task_time_s/stages) live in the
-    // full line above it and in the committed bench_out.json (the
-    // canonical round artifact).
-    val jsonCompact =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","m_total":${r3(mTimings.values.sum)},"m_guard":${jstr(mGuard)},$gateKeys,"total_min":${r3(sfMins.values.sum)},"staged":$doStage,"amplify":$amp,"load_avg":$loads,"failed":$jfails,"n_ok":${sfTimings.size + mTimings.size},"n_failed":${failed.size},"sf":${jstr(sfDir)},"queries_file":"bench_out.json"}"""
-
-    Files.writeString(Paths.get("bench_out.json"), json + "\n")
-    println(jsonShort)
-    println(jsonCompact)
+        f"m_total=${r.mTotal}%.2f s > 6 s at sane load")
+    Files.writeString(Paths.get("bench_out.json"), r.line(Line.File) + "\n")
+    println(r.line(Line.Stdout))
+    println(r.line(Line.Final))
     Console.out.flush()
     spark.stop()
-    if (failed.nonEmpty) sys.exit(2)
+    if (r.failed.nonEmpty) sys.exit(2)
   }
 }

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import scala.util.Using
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,9 +28,12 @@ import graft.llm.{ImageCodec, Mp4Meta, Multimodal, WavCodec}
   *     (`tools/bench_media_duck.py` runs the same banded algorithm in
   *     DuckDB SQL over the same hash parquet).
   *
-  * Timing protocol mirrors [[Bench]]: staged input, cache cleared per
-  * run, noop/parquet sink, warm-up + 3 interleaved sweeps, median + min,
-  * load-average telemetry, one JSON line.
+  * Timing shares Bench's sweep runner ([[Sweep]]): staged input, the
+  * start-load gate, warm-up + 3 interleaved sweeps, each run in its own
+  * CacheScope and QueryMetrics group, noop/parquet sink. Each phase
+  * reports its median and min wall and its min CPU time and stages; a
+  * phase that throws is listed in `failed` and the main exits nonzero.
+  * One JSON line.
   */
 object MediaBench {
 
@@ -277,58 +278,85 @@ object MediaBench {
             .unionByName(payload("video")))
         .write.mode("overwrite").parquet(s"$hdir/extract_all.parquet")))
 
-    // near-dup search FROM the stored artifacts (the DuckDB-twinned
-    // phase) — noop sink, full compute per run
-    val nearDup: Seq[(String, () => Unit)] = Seq(
-      "nd_img" -> (() => Multimodal.imageNearDupFrom(hashes("img_hash"))
-        .write.format("noop").mode("overwrite").save()),
-      "nd_aud" -> (() => Multimodal.hammingNearDupFrom(hashes("aud_fp"),
-          "audiofp64", 7, 8, llm.Dedup.MaxBucket)
-        .write.format("noop").mode("overwrite").save()),
-      "nd_vid" -> (() => Multimodal.videoNearDupFrom(hashes("vid_hash"))
-        .write.format("noop").mode("overwrite").save()),
+    val nAud = math.max(8L, n / 4) * audX
+    val nVid = math.max(8L, n / 8) * vidX
+    // recall on the PLANTED variant pairs (id−1, id) for id ≡ 4 (mod 5):
+    // the re-shard cap may drop incidental cross-texture pairs inside
+    // oversized buckets, but a planted pair's codes agree on (nearly)
+    // every band, so it gets ~8 independent chances to co-shard — this
+    // measures that claim instead of asserting it
+    def plantedOf(df: DataFrame, total: Long): Double = df
+      .filter(col("id_b") === col("id_a") + 1 && col("id_b") % 5 === 4)
+      .count().toDouble / total
+    val plantedAll = n / 5 + nAud / 5 + nVid / 5
+    // funnel recall at a given image band geometry: no planted variant
+    // may survive BOTH stages (a video variant drops at quality —
+    // 2.5 s < MinClipMs; image/audio variants drop at dedup)
+    def funnelRecall(imgTau: Int, imgBands: Int): Double = {
+      val kept = Multimodal.mediaDedupKeepFrom(
+          Multimodal.qualitySurvivors(hashes("extract_all")), imgTau,
+          imgBands)
+        .filter(col("keep") && col("media_id") % 5 === 4).count()
+      (plantedAll - kept).toDouble / plantedAll
+    }
+    // files dropped across both funnel stages
+    def funnelDropped(f: DataFrame): Long =
+      f.agg(sum(col("n_in") - col("n_kept"))).head().getLong(0)
+
+    /** a search FROM the stored artifacts (the DuckDB-twinned phase): the
+      * timed body writes `frame` to the noop sink, full compute per run;
+      * `pairs` counts it and `recall` reads it once, untimed */
+    final case class Probe(name: String, frame: () => DataFrame, pairs: DataFrame => Long,
+        recall: DataFrame => Double)
+    def nearDup(name: String, planted: Long)(frame: => DataFrame) =
+      Probe(name, () => frame, _.count(), plantedOf(_, planted))
+    val probes = Seq(
+      nearDup("nd_img", n / 5)(Multimodal.imageNearDupFrom(hashes("img_hash"))),
+      nearDup("nd_aud", nAud / 5)(Multimodal.hammingNearDupFrom(hashes("aud_fp"),
+        "audiofp64", 7, 8, llm.Dedup.MaxBucket)),
+      nearDup("nd_vid", nVid / 5)(Multimodal.videoNearDupFrom(hashes("vid_hash"))),
       // the WIDER-BAND geometry (4×16-bit, τ≤3 — recall-exact for
       // τ < nBands) the x81 scaladoc prescribes past the 8-bit bands'
       // saturation: 65536 bucket values per band, so candidate volume
       // stays linear where 8×8 goes ~n²/256 (the planted brightness
       // variants hash at hamming 0, so τ=3 loses none of them)
-      "nd_img_wide" -> (() => Multimodal.imageNearDupFrom(
-          hashes("img_hash"), tau = 3, nBands = 4)
-        .write.format("noop").mode("overwrite").save()),
+      nearDup("nd_img_wide", n / 5)(Multimodal.imageNearDupFrom(
+        hashes("img_hash"), tau = 3, nBands = 4)),
       // the same wide-band geometry on the audio fingerprints (r13
       // verdict task 4: the ≥1M-file design-scale point for nd_aud) —
       // gain-halved re-masters fingerprint at hamming 0, so τ=3 keeps
       // the planted recall while 16-bit bands keep candidates linear
-      "nd_aud_wide" -> (() => Multimodal.hammingNearDupFrom(
-          hashes("aud_fp"), "audiofp64", 3, 4, llm.Dedup.MaxBucket)
-        .write.format("noop").mode("overwrite").save()),
+      nearDup("nd_aud_wide", nAud / 5)(Multimodal.hammingNearDupFrom(
+        hashes("aud_fp"), "audiofp64", 3, 4, llm.Dedup.MaxBucket)),
       // r15 (r14 verdict item 4): the AUTO-WIDENED cap — the fixed-2000
       // re-shard dropped 8.6% of incidental pairs at 1M tone-mix WAVs;
       // autoCap widens until the candidate-work budget, so a clustered
       // corpus recovers them instead of silently losing recall
-      "nd_aud_auto" -> (() => Multimodal.hammingNearDupAuto(
-          hashes("aud_fp"), "audiofp64", 3, 4)
-        .write.format("noop").mode("overwrite").save()),
+      nearDup("nd_aud_auto", nAud / 5)(Multimodal.hammingNearDupAuto(
+        hashes("aud_fp"), "audiofp64", 3, 4)),
       // the cross-modal keep gate (x86) from the stored fused extract:
       // pair generation + the large-star/small-star CC + one verdict per
-      // file — the phase whose relational twin pays a recursive closure
-      "nd_keep" -> (() => Multimodal.mediaDedupKeepFrom(
-          hashes("extract_all"))
-        .write.format("noop").mode("overwrite").save()),
+      // file — the phase whose relational twin pays a recursive closure.
+      // Its "pairs" are the files DROPPED, its recall the share of planted
+      // variants dropped
+      Probe("nd_keep", () => Multimodal.mediaDedupKeepFrom(hashes("extract_all")),
+        _.filter(!col("keep")).count(),
+        _.filter(col("media_id") % 5 === 4 && !col("keep")).count().toDouble / plantedAll),
       // the x91 curation funnel off the stored fused extract: quality
       // projection → survivor filter → cross-modal keep gate → the
       // per-(stage, kind) attrition rollup (the DuckDB twin runs the
       // same CASE + survivor-restricted recursive-CTE closure)
-      "funnel" -> (() => Multimodal.mediaCurationFunnelFrom(
-          hashes("extract_all"))
-        .write.format("noop").mode("overwrite").save()),
+      Probe("funnel", () => Multimodal.mediaCurationFunnelFrom(hashes("extract_all")),
+        funnelDropped, _ => funnelRecall(7, 8)),
       // the funnel at the WIDE image geometry (4×16-bit, τ=3) — the
       // documented 8-band saturation remedy measured on the composition,
       // not just on nd_img: past ~300k surviving images this is the
       // production geometry (r15, the funnel-ladder knee)
-      "funnel_wide" -> (() => Multimodal.mediaCurationFunnelFrom(
-          hashes("extract_all"), imgTau = 3, imgBands = 4)
-        .write.format("noop").mode("overwrite").save()),
+      Probe("funnel_wide", () => Multimodal.mediaCurationFunnelFrom(
+          hashes("extract_all"), imgTau = 3, imgBands = 4),
+        funnelDropped, _ => funnelRecall(3, 4)))
+    val searches: Seq[(String, () => Unit)] =
+      probes.map(p => p.name -> (() => Sweep.noop(p.frame()))) ++ Seq(
       // r16 (r15 verdict task 6): the AUTO-selected geometry — the
       // x93 policy measured at the ladder corpora, so the auto pick can
       // be compared against the measured-best manual geometry at each
@@ -337,9 +365,7 @@ object MediaBench {
       "funnel_auto" -> (() => {
         val x = hashes("extract_all")
         val (nBands, tau) = Multimodal.autoBandGeometry(x, "phash64")
-        Multimodal.mediaCurationFunnelFrom(x, imgTau = tau,
-            imgBands = nBands)
-          .write.format("noop").mode("overwrite").save()
+        Sweep.noop(Multimodal.mediaCurationFunnelFrom(x, imgTau = tau, imgBands = nBands))
       }),
       // the st22 streaming perceptual gate at amplified upload volume:
       // catalog = stored hashes of the lower id half, uploads = the
@@ -354,120 +380,30 @@ object MediaBench {
         ()
       }))
 
-    val loads = scala.collection.mutable.ListBuffer[Double]()
-    def sampleLoad(): Unit = loads += java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-    sampleLoad()
-
-    def timeOnce(fn: () => Unit): Double =
-      Using.resource(core.CacheScope.open()) { _ =>
-        val t0 = System.nanoTime()
-        fn()
-        (System.nanoTime() - t0) / 1e9
-      }
     // optional phase filter (SPARK_GRAFT_MEDIA_PHASES regex): the 1M+
     // points run extraction + the wide-band probe only — the 8×8-bit
-    // geometry is BY DESIGN out of regime there (~8·n²/256 candidates)
+    // geometry is BY DESIGN out of regime there (~8·n²/256 candidates).
+    // The warm-up pass also materializes the hash artifacts the searches
+    // read.
     val phaseRe = sys.env.get("SPARK_GRAFT_MEDIA_PHASES").map(_.r)
-    def keepPhase(name: String): Boolean =
-      phaseRe.forall(_.findFirstIn(name).isDefined)
-    // warm-up pass (also materializes the hash artifacts the nd phases
-    // read), then 3 interleaved sweeps
-    val phases = (extract ++ nearDup).filter(p => keepPhase(p._1))
-    val samples = phases.map { case (name, fn) =>
-      name -> scala.collection.mutable.ListBuffer(timeOnce(fn))
-    }.toMap
-    sampleLoad()
-    (1 to 3).foreach { _ =>
-      phases.foreach { case (name, fn) => samples(name) += timeOnce(fn) }
-      sampleLoad()
-    }
-    val med = phases.map { case (name, _) =>
-      val timed = samples(name).drop(1).sorted
-      name -> timed(timed.size / 2)
-    }
-    val mins = phases.map { case (name, _) => name -> samples(name).min }
+    val gate = Sweep.awaitQuiet("media-bench")
+    val metrics = new QueryMetrics
+    spark.sparkContext.addSparkListener(metrics)
+    val sweep = new Sweep(spark, metrics, "media-bench")
+    val runs = sweep((extract ++ searches)
+      .filter(p => phaseRe.forall(_.findFirstIn(p._1).isDefined)), 3)()
+    def perPhase[A](f: Seq[QueryMetrics.Run] => A): Seq[(String, A)] =
+      runs.toSeq.map { case (name, rs) => name -> f(rs) }
+    val med = perPhase { rs => val s = rs.map(_.wallS).sorted; s(s.size / 2) }
 
     // corpus descriptors + result volumes (once, untimed)
     def mb(t: String): Double = payload(t)
       .agg(sum(length(col("payload")))).head().getLong(0) / 1e6
     val bytesMb = Seq("images" -> mb("images"), "audio" -> mb("audio"),
       "video" -> mb("video"))
-    val pairs = Seq[(String, () => Long)](
-      "nd_img" -> (() =>
-        Multimodal.imageNearDupFrom(hashes("img_hash")).count()),
-      "nd_img_wide" -> (() => Multimodal.imageNearDupFrom(
-        hashes("img_hash"), tau = 3, nBands = 4).count()),
-      "nd_aud" -> (() => Multimodal.hammingNearDupFrom(hashes("aud_fp"),
-        "audiofp64", 7, 8, llm.Dedup.MaxBucket).count()),
-      "nd_aud_wide" -> (() => Multimodal.hammingNearDupFrom(
-        hashes("aud_fp"), "audiofp64", 3, 4, llm.Dedup.MaxBucket).count()),
-      "nd_aud_auto" -> (() => Multimodal.hammingNearDupAuto(
-        hashes("aud_fp"), "audiofp64", 3, 4).count()),
-      "nd_vid" -> (() =>
-        Multimodal.videoNearDupFrom(hashes("vid_hash")).count()),
-      // for the keep gate, "pairs" reports the files DROPPED
-      "nd_keep" -> (() => Multimodal.mediaDedupKeepFrom(
-          hashes("extract_all")).filter(!col("keep")).count()),
-      // for the funnel, total files dropped across both stages
-      "funnel" -> (() => Multimodal.mediaCurationFunnelFrom(
-          hashes("extract_all"))
-        .agg(sum(col("n_in") - col("n_kept"))).head().getLong(0)),
-      "funnel_wide" -> (() => Multimodal.mediaCurationFunnelFrom(
-          hashes("extract_all"), imgTau = 3, imgBands = 4)
-        .agg(sum(col("n_in") - col("n_kept"))).head().getLong(0)))
-      .filter(p => keepPhase(p._1)).map { case (k, f) => k -> f() }
-    // recall on the PLANTED variant pairs (id−1, id) for id ≡ 4 (mod 5):
-    // the re-shard cap may drop incidental cross-texture pairs inside
-    // oversized buckets, but a planted pair's codes agree on (nearly)
-    // every band, so it gets ~8 independent chances to co-shard — this
-    // measures that claim instead of asserting it
-    def plantedOf(df: DataFrame, total: Long): Double = df
-      .filter(col("id_b") === col("id_a") + 1 && col("id_b") % 5 === 4)
-      .count().toDouble / total
-    // funnel recall at a given image band geometry: no planted variant
-    // may survive BOTH stages (a video variant drops at quality —
-    // 2.5 s < MinClipMs; image/audio variants drop at dedup)
-    def funnelRecall(imgTau: Int, imgBands: Int): Double = {
-      val kept = Multimodal.mediaDedupKeepFrom(
-          Multimodal.qualitySurvivors(hashes("extract_all")), imgTau,
-          imgBands)
-        .filter(col("keep") && col("media_id") % 5 === 4).count()
-      val planted = n / 5 + math.max(8L, n / 4) * audX / 5 +
-        math.max(8L, n / 8) * vidX / 5
-      (planted - kept).toDouble / planted
-    }
-    val recall = Seq[(String, () => Double)](
-      "nd_img" -> (() => plantedOf(
-        Multimodal.imageNearDupFrom(hashes("img_hash")), n / 5)),
-      "nd_img_wide" -> (() => plantedOf(Multimodal.imageNearDupFrom(
-        hashes("img_hash"), tau = 3, nBands = 4), n / 5)),
-      "nd_aud" -> (() => plantedOf(
-        Multimodal.hammingNearDupFrom(hashes("aud_fp"),
-          "audiofp64", 7, 8, llm.Dedup.MaxBucket),
-        math.max(8L, n / 4) * audX / 5)),
-      "nd_aud_wide" -> (() => plantedOf(
-        Multimodal.hammingNearDupFrom(hashes("aud_fp"),
-          "audiofp64", 3, 4, llm.Dedup.MaxBucket),
-        math.max(8L, n / 4) * audX / 5)),
-      "nd_aud_auto" -> (() => plantedOf(
-        Multimodal.hammingNearDupAuto(hashes("aud_fp"), "audiofp64", 3, 4),
-        math.max(8L, n / 4) * audX / 5)),
-      "nd_vid" -> (() => plantedOf(
-        Multimodal.videoNearDupFrom(hashes("vid_hash")),
-        math.max(8L, n / 8) * vidX / 5)),
-      // keep-gate recall: every planted variant must be DROPPED
-      "nd_keep" -> (() => Multimodal.mediaDedupKeepFrom(
-          hashes("extract_all"))
-        .filter(col("media_id") % 5 === 4 && !col("keep")).count().toDouble /
-        (n / 5 + math.max(8L, n / 4) * audX / 5 +
-          math.max(8L, n / 8) * vidX / 5)),
-      // funnel recall: no planted variant may survive BOTH stages (a
-      // video variant drops at quality — 2.5 s < MinClipMs; image/audio
-      // variants drop at dedup)
-      "funnel" -> (() => funnelRecall(7, 8)),
-      "funnel_wide" -> (() => funnelRecall(3, 4)))
-      .filter(p => keepPhase(p._1)).map { case (k, f) => k -> f() }
+    val live = probes.filter(p => runs.contains(p.name))
+    val pairs = live.map(p => p.name -> p.pairs(p.frame()))
+    val recall = live.map(p => p.name -> p.recall(p.frame()))
 
     // r15 (r14 verdict item 4): the measured recall-vs-cap CURVE for the
     // audio hamming join — the x52-S-curve discipline applied to the
@@ -482,10 +418,7 @@ object MediaBench {
           val df = Multimodal.hammingNearDupFrom(hashes("aud_fp"),
             "audiofp64", 3, 4, cap)
           val p = df.count()
-          val rec = df.filter(col("id_b") === col("id_a") + 1 &&
-            col("id_b") % 5 === 4).count().toDouble /
-            (math.max(8L, n / 4) * audX / 5)
-          (cap, p, rec)
+          (cap, p, plantedOf(df, nAud / 5))
         }
       } else Seq.empty
     // -1 when a phase filter skipped audio extraction and no artifact
@@ -499,28 +432,37 @@ object MediaBench {
       Multimodal.autoBandGeometry(hashes("img_hash"), "phash64"))
       .map { case (b, t) => s"${b}x$t" }.getOrElse("n/a")
 
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jm(m: Seq[(String, Double)]): String =
-      m.map { case (k, v) => s""""$k":${r3(v)}""" }.mkString("{", ",", "}")
-    val j = s"""{"metric":"media_bench","value":${r3(med.map(_._2).sum)},""" +
-      s""""unit":"sec","n":$n,"queries":${jm(med)},""" +
-      s""""queries_min":${jm(mins)},""" +
-      s""""pairs":${pairs.map { case (k, v) => s""""$k":$v""" }
-        .mkString("{", ",", "}")},""" +
-      s""""planted_recall":${jm(recall)},""" +
-      s""""auto_cap_aud":$audAutoCap,"mega":$mega,""" +
-      s""""auto_geo":"$autoGeo",""" +
-      (if (capCurve.nonEmpty)
-        s""""cap_curve_aud":${capCurve.map { case (c, p, r) =>
-          s""""$c":{"pairs":$p,"recall":${r3(r)}}""" }
-          .mkString("{", ",", "}")},"""
-      else "") +
-      s""""bytes_mb":${jm(bytesMb)},""" +
-      s""""load_avg":${loads.map(r3).mkString("[", ",", "]")},""" +
-      s""""hash_dir":"$hdir"}"""
+    val j = Json.obj(Seq(
+      "metric" -> Json.str("media_bench"),
+      "value" -> Json.r3(med.map(_._2).sum),
+      "unit" -> Json.str("sec"),
+      "n" -> n.toString,
+      "queries" -> Json.nums(med),
+      "queries_min" -> Json.nums(perPhase(_.map(_.wallS).min)),
+      // min across sweeps, as in Bench: the window-insensitive evidence a
+      // wall-time A/B on a loaded host cannot give
+      "cpu_s" -> Json.nums(perPhase(_.map(_.totals.cpuS).min)),
+      "stages" -> Json.obj(perPhase(_.map(_.totals.stages).min.toString)),
+      "pairs" -> Json.obj(pairs.map { case (k, v) => k -> v.toString }),
+      "planted_recall" -> Json.nums(recall),
+      "auto_cap_aud" -> audAutoCap.toString,
+      "mega" -> mega.toString,
+      "auto_geo" -> Json.str(autoGeo)) ++
+      (if (capCurve.isEmpty) Nil
+      else Seq("cap_curve_aud" -> Json.obj(capCurve.map { case (c, p, r) =>
+        c.toString -> Json.obj(Seq("pairs" -> p.toString, "recall" -> Json.r3(r))) }))) ++ Seq(
+      "bytes_mb" -> Json.nums(bytesMb),
+      "cache_leaks" -> Json.strs(sweep.leaks),
+      "metrics_incomplete" -> Json.strs(sweep.incomplete),
+      "failed" -> Json.obj(sweep.failed.map { case (k, v) => k -> Json.str(v) }),
+      "load_gate" -> Json.str(gate.verdict),
+      "start_load" -> Json.r3(gate.startLoad),
+      "quiet_wait_s" -> gate.quietWaitS.toString,
+      "load_avg" -> Json.arr(sweep.loads.map(Json.r3)),
+      "hash_dir" -> Json.str(hdir)))
     Files.writeString(Paths.get("media_bench_out.json"), j + "\n")
     println(j)
     spark.stop()
+    if (sweep.failed.nonEmpty) sys.exit(2)
   }
 }

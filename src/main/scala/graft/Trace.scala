@@ -2,16 +2,17 @@ package graft
 
 import scala.util.Using
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.QueryMetrics.{Run, Totals}
 import graft.core.CacheScope
 import graft.SparkEntry.{select, QueryFn}
 
-/** Per-query forensics. Each mode selects queries by a name regex, runs
-  * each once to warm JIT, codegen and footer caches, then measures with a
-  * cleared cache into a `noop` sink, each run its own [[QueryMetrics]] group:
+/** Per-query forensics. Each mode selects queries by a name regex; the
+  * measuring modes time them through [[Sweep]] (a warm-up pass, then
+  * sweeps into a `noop` sink, each run its own [[CacheScope]] and
+  * [[QueryMetrics]] group; a query that throws is reported and dropped):
   *
   *   - `census <regex> [sfDir] [k=v…]`: wall, jobs, stages, tasks, CPU, run
   *     and task time, shuffle and spill MB per query, best of 3 sweeps, so
@@ -37,45 +38,34 @@ object Trace {
     def execS: Double = run.wallS - buildS - planS
   }
 
-  private def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-
-  /** a warm pass over `qs`, then `n` measured passes; a query that throws
-    * is reported and left out of the pass */
-  private def passes[A](qs: Seq[(String, QueryFn)], n: Int)(f: (String, QueryFn) => A): Seq[Seq[A]] = {
-    def pass(): Seq[A] = qs.flatMap { case (name, fn) =>
-      try Some(f(name, fn))
-      catch { case e: Exception => Console.err.println(s"[trace] $name failed: ${e.getMessage}"); None }
-    }
-    pass()
-    Seq.fill(n)(pass())
-  }
-
-  private def measure(spark: SparkSession, metrics: QueryMetrics, name: String)(body: => Unit): Run =
-    Using.resource(CacheScope.open())(_ => metrics.measure(spark.sparkContext, s"trace:$name")(body))
-
-  /** the sweep with the least total wall */
+  /** the sweep with the least total wall, of 3 */
   def census(spark: SparkSession, metrics: QueryMetrics, qs: Seq[(String, QueryFn)],
-      dir: String): Seq[(String, Run)] =
-    passes(qs, 3)((n, fn) => n -> measure(spark, metrics, n)(noop(fn(spark, dir))))
+      dir: String): Seq[(String, Run)] = {
+    val runs = new Sweep(spark, metrics, "trace")(
+      qs.map { case (n, fn) => n -> (() => Sweep.noop(fn(spark, dir))) }, 3)()
+    (0 until 3).map(i => runs.toSeq.map { case (n, rs) => n -> rs(i) })
       .minBy(_.map(_._2.wallS).sum)
+  }
 
   def jobs(spark: SparkSession, metrics: QueryMetrics, name: String, dir: String): Run =
     census(spark, metrics, Seq(name -> SparkEntry.queries(name)), dir).head._2
 
   def phases(spark: SparkSession, metrics: QueryMetrics, qs: Seq[(String, QueryFn)],
-      dir: String): Seq[Phases] =
-    passes(qs, 1) { (name, fn) =>
-      var buildS, planS = 0.0
-      val r = measure(spark, metrics, name) {
+      dir: String): Seq[Phases] = {
+    // the last run of each body, the measured one, leaves its split here
+    val split = scala.collection.mutable.Map.empty[String, (Double, Double)]
+    val runs = new Sweep(spark, metrics, "trace")(qs.map { case (name, fn) =>
+      name -> { () =>
         val t0 = System.nanoTime()
         val df = fn(spark, dir)
         val t1 = System.nanoTime()
         df.queryExecution.executedPlan
-        buildS = (t1 - t0) / 1e9; planS = (System.nanoTime() - t1) / 1e9
-        noop(df)
+        split(name) = ((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9)
+        Sweep.noop(df)
       }
-      Phases(name, buildS, planS, r)
-    }.head
+    }, 1)()
+    runs.toSeq.map { case (name, rs) => val (b, p) = split(name); Phases(name, b, p, rs.head) }
+  }
 
   /** each plan is built in its own [[CacheScope]], so it cannot pick up
     * frames an earlier query kept */

@@ -12,10 +12,7 @@ object GraftSession {
     * master threads and shuffle parallelism — on a real cluster the same
     * code runs with `spark.sql.shuffle.partitions` sized to the cluster.
     */
-  def builder(
-      appName: String = "hielospark",
-      cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-  ): SparkSession.Builder =
+  def builder(appName: String, cores: String): SparkSession.Builder =
     SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -64,10 +61,4 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS) which Spark cannot represent;
       // read as long nanos and convert once at ingest (Tables.load).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-  def local(appName: String = "hielospark"): SparkSession = {
-    val s = builder(appName).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 }

@@ -1,6 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -503,6 +505,14 @@ object Multimodal {
       width: Option[Int], height: Option[Int],
       duration_ms: Option[Long], sample_rate: Option[Int])
 
+  /** `f` over each partition of `media`'s [[MediaIn]] columns: the typed
+    * seam every payload decode pass runs through */
+  private def mapMediaIn[T <: Product : TypeTag](media: DataFrame)(
+      f: Iterator[MediaIn] => Iterator[T]): Dataset[T] =
+    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
+        col("height"), col("duration_ms"), col("sample_rate"))
+      .as(Encoders.product[MediaIn]).mapPartitions(f)(Encoders.product[T])
+
   /** [[MediaIn]] + decoded stats (image fields None for non-image
     * payloads, audio fields None for non-WAV payloads)
     */
@@ -522,20 +532,16 @@ object Multimodal {
     * [[decodeFeatures]].
     */
   def decodeMedia(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.map { m =>
-        val d = ImageCodec.decode(m.payload)
-        val a = WavCodec.decode(m.payload)
-        val v = Mp4Meta.decode(m.payload)
-        MediaDec(m.media_id, m.kind, m.payload, m.width, m.height,
-          m.duration_ms, m.sample_rate, d.map(_._1), d.map(_._2),
-          d.map(_._3),
-          a.map(_.durationMs).orElse(v.map(_.durationMs)),
-          a.map(_.sampleRate), a.map(_.meanAbs))
-      }).toDF()
+    mapMediaIn(media)(_.map { m =>
+      val d = ImageCodec.decode(m.payload)
+      val a = WavCodec.decode(m.payload)
+      val v = Mp4Meta.decode(m.payload)
+      MediaDec(m.media_id, m.kind, m.payload, m.width, m.height,
+        m.duration_ms, m.sample_rate, d.map(_._1), d.map(_._2),
+        d.map(_._3),
+        a.map(_.durationMs).orElse(v.map(_.durationMs)),
+        a.map(_.sampleRate), a.map(_.meanAbs))
+    }).toDF()
   }
 
   /** [[mediaExtractAll]]'s payload-free output row: the decode stats
@@ -570,26 +576,22 @@ object Multimodal {
     * hashes replay [[videoPhash]]'s demux + [[PHash.ofLuma]] in order.
     */
   def mediaExtractAll(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.map { m =>
-        val img = ImageCodec.decodeImage(m.payload)
-        val d = img.map(i => (i.getWidth, i.getHeight,
-          ImageCodec.brightness(i)))
-        val a = WavCodec.decode(m.payload)
-        val v = Mp4Meta.decode(m.payload)
-        val samples = WavCodec.decodeSamples(m.payload)
-        val vt = anyVideoTrack(m.payload)
-        MediaExtractRow(m.media_id, m.kind,
-          d.map(_._1), d.map(_._2), d.map(_._3),
-          a.map(_.durationMs).orElse(v.map(_.durationMs)),
-          a.map(_.sampleRate), a.map(_.meanAbs),
-          img.map(PHash.ofImage),
-          samples.flatMap { case (rate, ss) => AudioFp.ofSamples(ss, rate) },
-          vt.map(t => t.frames.map(fr => PHash.ofLuma(fr, t.width, t.height))))
-      }).toDF()
+    mapMediaIn(media)(_.map { m =>
+      val img = ImageCodec.decodeImage(m.payload)
+      val d = img.map(i => (i.getWidth, i.getHeight,
+        ImageCodec.brightness(i)))
+      val a = WavCodec.decode(m.payload)
+      val v = Mp4Meta.decode(m.payload)
+      val samples = WavCodec.decodeSamples(m.payload)
+      val vt = anyVideoTrack(m.payload)
+      MediaExtractRow(m.media_id, m.kind,
+        d.map(_._1), d.map(_._2), d.map(_._3),
+        a.map(_.durationMs).orElse(v.map(_.durationMs)),
+        a.map(_.sampleRate), a.map(_.meanAbs),
+        img.map(PHash.ofImage),
+        samples.flatMap { case (rate, ss) => AudioFp.ofSamples(ss, rate) },
+        vt.map(t => t.frames.map(fr => PHash.ofLuma(fr, t.width, t.height))))
+    }).toDF()
   }
 
   /** metadata extraction: magic-based container sniffing, byte size, and
@@ -646,19 +648,15 @@ object Multimodal {
     * — the honest "needs a codec library" boundary).
     */
   def videoFrames(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.flatMap { m =>
-        anyVideoTrack(m.payload).iterator.flatMap { vt =>
-          vt.frames.iterator.zipWithIndex.map { case (fr, i) =>
-            VideoFrameRow(m.media_id, m.kind, i, vt.frameTsMs(i),
-              vt.width, vt.height,
-              fr.map(_ & 0xff).sum.toDouble / fr.length)
-          }
+    mapMediaIn(media)(_.flatMap { m =>
+      anyVideoTrack(m.payload).iterator.flatMap { vt =>
+        vt.frames.iterator.zipWithIndex.map { case (fr, i) =>
+          VideoFrameRow(m.media_id, m.kind, i, vt.frameTsMs(i),
+            vt.width, vt.height,
+            fr.map(_ & 0xff).sum.toDouble / fr.length)
         }
-      }).toDF()
+      }
+    }).toDF()
   }
 
   /** codec dispatch off the stsd sample entry via the shipped decoder
@@ -677,19 +675,15 @@ object Multimodal {
     * `mapPartitions` decode seam.
     */
   def mjpegFrames(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.flatMap { m =>
-        Mp4Meta.decodeMjpegFrames(m.payload).iterator.flatMap { vt =>
-          vt.frames.iterator.zipWithIndex.map { case (fr, i) =>
-            (m.media_id, i, vt.frameTsMs(i), vt.width, vt.height,
-              fr.map(_ & 0xff).sum.toDouble / fr.length,
-              PHash.ofLuma(fr, vt.width, vt.height))
-          }
+    mapMediaIn(media)(_.flatMap { m =>
+      Mp4Meta.decodeMjpegFrames(m.payload).iterator.flatMap { vt =>
+        vt.frames.iterator.zipWithIndex.map { case (fr, i) =>
+          (m.media_id, i, vt.frameTsMs(i), vt.width, vt.height,
+            fr.map(_ & 0xff).sum.toDouble / fr.length,
+            PHash.ofLuma(fr, vt.width, vt.height))
         }
-      }).toDF("media_id", "frame_idx", "frame_ts_ms", "fr_width",
+      }
+    }).toDF("media_id", "frame_idx", "frame_ts_ms", "fr_width",
         "fr_height", "luma_mean", "fphash64")
   }
 
@@ -700,19 +694,15 @@ object Multimodal {
     * Same shuffle-free `mapPartitions` decode seam.
     */
   def avcFrames(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.flatMap { m =>
-        Mp4Meta.decodeAvcFrames(m.payload).iterator.flatMap { vt =>
-          vt.frames.iterator.zipWithIndex.map { case (fr, i) =>
-            (m.media_id, i, vt.frameTsMs(i), vt.width, vt.height,
-              fr.map(_ & 0xff).sum.toDouble / fr.length,
-              PHash.ofLuma(fr, vt.width, vt.height))
-          }
+    mapMediaIn(media)(_.flatMap { m =>
+      Mp4Meta.decodeAvcFrames(m.payload).iterator.flatMap { vt =>
+        vt.frames.iterator.zipWithIndex.map { case (fr, i) =>
+          (m.media_id, i, vt.frameTsMs(i), vt.width, vt.height,
+            fr.map(_ & 0xff).sum.toDouble / fr.length,
+            PHash.ofLuma(fr, vt.width, vt.height))
         }
-      }).toDF("media_id", "frame_idx", "frame_ts_ms", "fr_width",
+      }
+    }).toDF("media_id", "frame_idx", "frame_ts_ms", "fr_width",
         "fr_height", "luma_mean", "fphash64")
   }
 
@@ -725,12 +715,7 @@ object Multimodal {
     * this frame rather than re-decoding.
     */
   def imagePhash(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.map(m =>
-        (m.media_id, m.kind, PHash.ofBytes(m.payload))))
+    mapMediaIn(media)(_.map(m => (m.media_id, m.kind, PHash.ofBytes(m.payload))))
       .toDF("media_id", "kind", "phash64")
   }
 
@@ -777,12 +762,7 @@ object Multimodal {
     * decode-pass contract as [[imagePhash]]; null for non-WAV payloads
     */
   def audioFingerprint(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.map(m =>
-        (m.media_id, m.kind, AudioFp.ofBytes(m.payload))))
+    mapMediaIn(media)(_.map(m => (m.media_id, m.kind, AudioFp.ofBytes(m.payload))))
       .toDF("media_id", "kind", "audiofp64")
   }
 
@@ -792,17 +772,13 @@ object Multimodal {
     * the materialized frame-hash artifact video near-dedup runs off
     */
   def videoPhash(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.flatMap { m =>
-        anyVideoTrack(m.payload).iterator.flatMap { vt =>
-          vt.frames.iterator.zipWithIndex.map { case (fr, i) =>
-            (m.media_id, i, PHash.ofLuma(fr, vt.width, vt.height))
-          }
+    mapMediaIn(media)(_.flatMap { m =>
+      anyVideoTrack(m.payload).iterator.flatMap { vt =>
+        vt.frames.iterator.zipWithIndex.map { case (fr, i) =>
+          (m.media_id, i, PHash.ofLuma(fr, vt.width, vt.height))
         }
-      }).toDF("media_id", "frame_idx", "fphash64")
+      }
+    }).toDF("media_id", "frame_idx", "fphash64")
   }
 
   /** video near-dup pairs by frame-hash containment: two clips pair when
@@ -873,15 +849,11 @@ object Multimodal {
     * every decode op.
     */
   def pngTextChunks(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.flatMap { m =>
-        PngChunks.textChunks(m.payload).zipWithIndex.map {
-          case ((k, v), i) => (m.media_id, i, k, v)
-        }
-      }).toDF("media_id", "chunk_idx", "keyword", "value")
+    mapMediaIn(media)(_.flatMap { m =>
+      PngChunks.textChunks(m.payload).zipWithIndex.map {
+        case ((k, v), i) => (m.media_id, i, k, v)
+      }
+    }).toDF("media_id", "chunk_idx", "keyword", "value")
   }
 
   /** text-chunk STRIP audit (x90) — the provenance-hygiene pass: every
@@ -892,17 +864,13 @@ object Multimodal {
     * through untouched (0 removed, digest = content digest).
     */
   def stripTextAudit(media: DataFrame): DataFrame = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.map { m =>
-        val stripped = PngChunks.stripText(m.payload)
-        (m.media_id, m.kind,
-          PngChunks.textChunkCount(m.payload).toLong,
-          (m.payload.length - stripped.length).toLong,
-          md5OfHex(stripped))
-      }).toDF("media_id", "kind", "n_text_chunks", "bytes_removed",
+    mapMediaIn(media)(_.map { m =>
+      val stripped = PngChunks.stripText(m.payload)
+      (m.media_id, m.kind,
+        PngChunks.textChunkCount(m.payload).toLong,
+        (m.payload.length - stripped.length).toLong,
+        md5OfHex(stripped))
+    }).toDF("media_id", "kind", "n_text_chunks", "bytes_removed",
         "stripped_md5")
   }
 
@@ -1400,19 +1368,15 @@ object Multimodal {
     */
   def resizeImages(media: DataFrame, targetW: Int,
       targetH: Int): Dataset[ResizedImage] = {
-    val s = media.sparkSession
-    import s.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("width"),
-        col("height"), col("duration_ms"), col("sample_rate")).as[MediaIn]
-      .mapPartitions(_.flatMap { m =>
-        if (!ImageCodec.isPng(m.payload) && !ImageCodec.isJpeg(m.payload))
-          Iterator.empty
-        else ImageCodec.decodeImage(m.payload).iterator.map { img =>
-          val rs = ImageCodec.resizeNearest(img, targetW, targetH)
-          ResizedImage(m.media_id, m.kind, ImageCodec.encode(rs),
-            targetW, targetH, ImageCodec.brightness(rs))
-        }
-      })
+    mapMediaIn(media)(_.flatMap { m =>
+      if (!ImageCodec.isPng(m.payload) && !ImageCodec.isJpeg(m.payload))
+        Iterator.empty
+      else ImageCodec.decodeImage(m.payload).iterator.map { img =>
+        val rs = ImageCodec.resizeNearest(img, targetW, targetH)
+        ResizedImage(m.media_id, m.kind, ImageCodec.encode(rs),
+          targetW, targetH, ImageCodec.brightness(rs))
+      }
+    })
   }
 
   /** batch-wise decode over a typed Dataset — the `mapPartitions` seam
