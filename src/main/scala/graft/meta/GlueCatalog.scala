@@ -2,8 +2,6 @@ package graft.meta
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import Model._
 import GlueWire.GlueTableFx
 
@@ -15,21 +13,28 @@ import GlueWire.GlueTableFx
   *   - the Iceberg TableMetadata file at a `metadata_location`
   *     (S3 GetObject in a deployment)
   *
-  * — as `Option[String]` (`None` = not found). Wire-format parse
-  * ([[GlueWire]] for the Glue shapes, [[RestWire.parseTableMetadata]]
-  * for the metadata file — byte-shared with the REST path), the
-  * reference's probe classification composed with the Iceberg-on-Glue
-  * `table_type=ICEBERG` convention, and the [[MetaCatalog]] surface all
-  * live here. Only glue-typed registry entries contribute (the mirror
-  * of [[RestHttpCatalog]]'s rest-only rule).
+  * — as `Option[String]` (`None` = not found). The walk, its
+  * wire-format parse ([[GlueWire]] for the Glue shapes,
+  * [[RestWire.parseTableMetadata]] for the metadata file — byte-shared
+  * with the REST path) and the Iceberg-on-Glue `table_type=ICEBERG`
+  * convention live here; the probe classification and the
+  * [[MetaCatalog]] surface live in [[WalkedCatalog]]. Only glue-typed
+  * registry entries contribute (the mirror of [[RestHttpCatalog]]'s
+  * rest-only rule).
+  *
+  * The walk runs in the calling JVM, not in Spark tasks, memoized per
+  * instance. GetDatabases pages serially and first, which also resolves
+  * the signing credentials once. The two per-item phases then fan out
+  * ([[Paging.fanOut]], at most 8 requests in flight): the per-database
+  * GetTables, each paging its own NextToken chain in order, and the
+  * per-table metadata GETs. Results keep input order, so rows, request
+  * counts and error messages are those of a serial walk.
   *
   * Reference: `/root/reference/src/catalog.rs:188-246` (Glue client
   * construction: warehouse required, region defaulted us-east-1 —
   * [[GlueWire.effectiveProps]]) and `:342-375` (probe classification).
   */
-abstract class GlueClientCatalog extends MetaCatalog {
-
-  protected def registry: Seq[ConfigFx]
+abstract class GlueClientCatalog extends WalkedCatalog {
 
   // ---- the transport seam: one method per Glue read --------------------
   // The two listing reads take the page's continuation token (None =
@@ -43,14 +48,8 @@ abstract class GlueClientCatalog extends MetaCatalog {
       nextToken: Option[String]): Option[String]
   protected def metadataDoc(cfg: ConfigFx, location: String): Option[String]
 
-  private case class Parsed(
-      listing: Seq[ListingFx], meta: Seq[TableMetaFx],
-      schemas: Seq[SchemaFx], specs: Seq[SpecFx], snaps: Seq[SnapshotFx],
-      configs: Seq[ConfigFx])
-
-  private lazy val parsed: Parsed = {
-    val configs = registry
-    val acc = configs.filter(_.catalog_type == "glue").map { cfg =>
+  protected def walk(cfg: ConfigFx): Seq[((String, String), Option[Loaded])] =
+    if (cfg.catalog_type != "glue") Seq.empty else {
       // construction-time validation, reference parity (warehouse
       // required; region defaulting happens here even though the file
       // transport never signs a request)
@@ -59,51 +58,20 @@ abstract class GlueClientCatalog extends MetaCatalog {
       val dbs = Paging.collect(s"$cat GetDatabases",
         databasesDoc(cfg, _), GlueWire.parseDatabases,
         GlueWire.parseNextToken)
-      val tables: Seq[GlueTableFx] = dbs.flatMap { db =>
+      val tables: Seq[GlueTableFx] = Paging.fanOut(dbs) { db =>
         Paging.collect(s"$cat GetTables($db)",
           tablesDoc(cfg, db, _), GlueWire.parseTables,
           GlueWire.parseNextToken)
-      }
+      }.flatten
       // the probe: an Iceberg pointer whose metadata file loads
       // classifies "iceberg"; a non-pointer entry or a dangling pointer
       // classifies "unknown"
-      val loaded = tables.flatMap { t =>
-        (for {
-          _ <- Some(()).filter(_ => t.isIcebergPointer)
-          loc <- t.metadataLocation
-          body <- metadataDoc(cfg, loc)
-        } yield (t.database, t.name) ->
-          RestWire.parseTableMetadata(cat, t.database, t.name, body)).toSeq
-      }.toMap
-      val listing = tables.map { t =>
-        ListingFx(cat, cfg.catalog_type, t.database, t.name,
-          if (loaded.contains((t.database, t.name))) "iceberg"
-          else "unknown")
-      }
-      val l = loaded.values.toSeq
-      (listing, l.map(_._1), l.flatMap(_._2), l.flatMap(_._3),
-        l.flatMap(_._4))
+      tables.map(t => (t.database, t.name)).zip(Paging.fanOut(tables) { t =>
+        t.metadataLocation.filter(_ => t.isIcebergPointer)
+          .flatMap(metadataDoc(cfg, _))
+          .map(RestWire.parseTableMetadata(cat, t.database, t.name, _))
+      })
     }
-    Parsed(acc.flatMap(_._1), acc.flatMap(_._2), acc.flatMap(_._3),
-      acc.flatMap(_._4), acc.flatMap(_._5), configs)
-  }
-
-  private def ds[T <: Product : scala.reflect.runtime.universe.TypeTag](
-      spark: SparkSession, rows: Seq[T]): DataFrame =
-    spark.createDataFrame(rows)
-
-  override def listing(spark: SparkSession): DataFrame =
-    ds(spark, parsed.listing)
-  override def tableMeta(spark: SparkSession): DataFrame =
-    ds(spark, parsed.meta)
-  override def snapshots(spark: SparkSession): DataFrame =
-    Normalize.snapshots(ds(spark, parsed.snaps))
-  override def schemaVersions(spark: SparkSession): DataFrame =
-    ds(spark, parsed.schemas)
-  override def partitionSpecs(spark: SparkSession): DataFrame =
-    ds(spark, parsed.specs)
-  override def appConfig(spark: SparkSession): DataFrame =
-    ds(spark, parsed.configs)
 }
 
 /** [[GlueClientCatalog]] over response payloads on disk — the wire

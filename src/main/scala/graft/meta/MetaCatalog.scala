@@ -22,6 +22,73 @@ trait MetaCatalog {
   def appConfig(spark: SparkSession): DataFrame
 }
 
+/** The half of a catalog CLIENT that does not depend on the wire
+  * format, shared by [[RestClientCatalog]] and [[GlueClientCatalog]]
+  * (one copy, as with [[HttpRetry]]): each supplies its registry and
+  * one catalog's walk, and this class turns the walks into the
+  * [[MetaCatalog]] frames. The walk is the reference's probe
+  * (`src/catalog.rs:342-375`): every listed identifier, in listing
+  * order, with the metadata its load request found — none classifies
+  * "unknown", a loaded one "iceberg".
+  *
+  * Parsing runs in the calling JVM, not in Spark tasks (catalog
+  * metadata is KB-sized, mirroring the reference's in-memory client
+  * structs, `src/iceberg_adapter.rs:11-65`), and the walks run once per
+  * instance, memoized like the reference's catalog cache.
+  */
+private[meta] abstract class WalkedCatalog extends MetaCatalog {
+  import Model._
+
+  /** a parsed LoadTableResponse or TableMetadata file */
+  protected type Loaded = (TableMetaFx, Seq[SchemaFx], Seq[SpecFx],
+    Seq[SnapshotFx])
+
+  /** the connection registry this client serves (reference `AppConfig`) */
+  protected def registry: Seq[ConfigFx]
+
+  /** one catalog's (namespace, table) identifiers in listing order, each
+    * with its parsed metadata, or None when the probe found none
+    */
+  protected def walk(cfg: ConfigFx): Seq[((String, String), Option[Loaded])]
+
+  /** every catalog's listing rows and loaded tables, walked once. The
+    * memo locks its own holder, not this catalog: a lazy val of the
+    * transport first read on a walk worker locks the catalog, and the
+    * walk would hold that lock while it waits for the worker.
+    */
+  private object memo {
+    lazy val walked: (Seq[ListingFx], Seq[Loaded]) = {
+      val walks = registry.map { cfg =>
+        val probed = walk(cfg)
+        val byKey = probed.collect { case (k, Some(l)) => k -> l }.toMap
+        (probed.map { case (k @ (ns, t), _) =>
+          ListingFx(cfg.name, cfg.catalog_type, ns, t,
+            if (byKey.contains(k)) "iceberg" else "unknown")
+        }, byKey.values.toSeq)
+      }
+      (walks.flatMap(_._1), walks.flatMap(_._2))
+    }
+  }
+  private def loaded: Seq[Loaded] = memo.walked._2
+
+  private def ds[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      spark: SparkSession, rows: Seq[T]): DataFrame =
+    spark.createDataFrame(rows)
+
+  override def listing(spark: SparkSession): DataFrame =
+    ds(spark, memo.walked._1)
+  override def tableMeta(spark: SparkSession): DataFrame =
+    ds(spark, loaded.map(_._1))
+  override def snapshots(spark: SparkSession): DataFrame =
+    Normalize.snapshots(ds(spark, loaded.flatMap(_._4)))
+  override def schemaVersions(spark: SparkSession): DataFrame =
+    ds(spark, loaded.flatMap(_._2))
+  override def partitionSpecs(spark: SparkSession): DataFrame =
+    ds(spark, loaded.flatMap(_._3))
+  override def appConfig(spark: SparkSession): DataFrame =
+    ds(spark, registry)
+}
+
 /** Fixture-backed catalog over the parquet written by [[FixtureGen]].
   *
   * Reads are MEMOIZED per (session, table): the reference app memoizes

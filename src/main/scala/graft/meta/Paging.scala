@@ -1,5 +1,7 @@
 package graft.meta
 
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
 /** Listing pagination shared by the catalog clients (r16 verdict task
   * 1): both live transports page — AWS Glue caps GetDatabases/GetTables
   * at 100 entries and continues via `NextToken`; the Iceberg REST spec
@@ -11,6 +13,8 @@ package graft.meta
   *
   * Driver-side by design: catalog listings are KB-sized control-plane
   * metadata (same rationale as the parse layer — see [[RestWire]]).
+  * [[fanOut]] runs a walk's independent per-item reads side by side;
+  * each [[collect]] chain stays sequential inside its own call.
   */
 private[meta] object Paging {
 
@@ -56,5 +60,40 @@ private[meta] object Paging {
         s"$what: listing exceeded $MaxPages pages — refusing to loop")
     }
     out.result()
+  }
+
+  /** calls of one [[fanOut]] in flight at once: enough to overlap the
+    * round trips of a thousand-table walk, few enough that one client
+    * never holds more than a handful of connections to its server
+    */
+  private val MaxInFlight = 8
+
+  /** `xs.map(f)` with up to [[MaxInFlight]] calls in flight, on daemon
+    * threads named `graft-catalog-walk`. Results keep input order. After
+    * a failure no further call starts, the calls in flight finish, and
+    * the exception is rethrown as `f` threw it; when several calls
+    * failed, the one earliest in input order wins — the error the serial
+    * map would have raised. Every worker has ended when this returns.
+    */
+  def fanOut[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    val in = xs.toIndexedSeq
+    val out = new Array[Either[Throwable, B]](in.size)
+    val next = new AtomicInteger(0)
+    val failed = new AtomicBoolean(false)
+    // a worker checks for a failure BEFORE claiming an index, so every
+    // claimed index runs: indices are claimed in order, hence every slot
+    // before the first failure is filled
+    def work(): Unit = {
+      var i = 0
+      while (!failed.get && { i = next.getAndIncrement(); i < in.size })
+        out(i) = try Right(f(in(i))) catch {
+          case e: Throwable => failed.set(true); Left(e)
+        }
+    }
+    val workers = Seq.fill(math.min(MaxInFlight, in.size))(
+      new Thread(() => work(), "graft-catalog-walk"))
+    workers.foreach { t => t.setDaemon(true); t.start() }
+    workers.foreach(_.join())
+    out.toSeq.map(_.toTry.get)
   }
 }

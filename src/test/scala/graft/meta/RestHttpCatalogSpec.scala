@@ -133,6 +133,9 @@ class RestHttpCatalogSpec extends SparkSpec with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     if (server != null) server.stop(0)
+    if (fanDirMade) Files.walk(fanDir)
+      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => Files.delete(p))
     super.afterAll()
   }
 
@@ -408,5 +411,175 @@ class RestHttpCatalogSpec extends SparkSpec with BeforeAndAfterAll {
       "uri" -> "http://127.0.0.1:9", "warehouse" -> "s3://warehouse"))))
     val e = intercept[RuntimeException](dead.listing(spark).count())
     assert(e.getMessage.contains("connection failed twice"))
+  }
+
+  // ---- the fanned-out walk --------------------------------------------
+  // A payload tree big enough that the probes overlap: 6 namespaces of 8
+  // tables, every loadable one a copy of a golden LoadTableResponse
+  // (identity comes from the request), every fifth one without a load
+  // payload, so it probes 404 and classifies "unknown".
+  private lazy val fanDir: java.nio.file.Path = {
+    val dir = Files.createTempDirectory("rest-fan")
+    def write(rel: String, b: String): Unit = {
+      val p = dir.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, b)
+      ()
+    }
+    val golden = Seq("ads.clicks", "sales.orders_hot", "sales.orders_cold")
+      .map(k => new String(body(s"c_rest/load/$k.json").get, "UTF-8"))
+    val nss = (0 until 6).map(n => s"ns$n")
+    write("catalogs.json", RestWire.catalogsJson(Seq(
+      ConfigFx("c_fan", "rest", Map("uri" -> "http://localhost:0")))))
+    write("c_fan/namespaces.json", RestWire.namespacesJson(nss))
+    for ((ns, n) <- nss.zipWithIndex) {
+      val ts = (0 until 8).map(t => s"t$t")
+      write(s"c_fan/tables/$ns.json", RestWire.tableIdentsJson(ns, ts))
+      for ((t, i) <- ts.zipWithIndex if (n * 8 + i) % 5 != 4)
+        write(s"c_fan/load/$ns.$t.json", golden((n * 8 + i) % 3))
+    }
+    fanDirMade = true
+    dir
+  }
+  private var fanDirMade = false
+
+  /** serves [[fanDir]] unprefixed over 8 handler threads, each LoadTable
+    * after a seeded delay (ns1.t2 after 300 ms), so responses land out of
+    * order; `fail` names the identifiers whose LoadTable answers 500
+    */
+  private def withFanServer(fail: Set[String] = Set.empty)(
+      f: String => Unit): Unit = {
+    val rnd = new scala.util.Random(42)
+    val delayMs = (0 until 6).flatMap(n => (0 until 8).map(t =>
+      s"ns$n.t$t" -> (if (s"ns$n.t$t" == "ns1.t2") 300L
+        else rnd.nextInt(25).toLong))).toMap
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    srv.setExecutor(pool)
+    srv.createContext("/", { (ex: HttpExchange) =>
+      val resp = ex.getRequestURI.getPath match {
+        case "/v1/namespaces" =>
+          Some(Files.readAllBytes(fanDir.resolve("c_fan/namespaces.json")))
+        case LoadRe(ns, t) =>
+          Thread.sleep(delayMs(s"$ns.$t"))
+          if (fail(s"$ns.$t")) { ex.sendResponseHeaders(500, -1); None }
+          else Some(fanDir.resolve(s"c_fan/load/$ns.$t.json"))
+            .filter(Files.exists(_)).map(Files.readAllBytes)
+        case TablesRe(ns) =>
+          Some(Files.readAllBytes(fanDir.resolve(s"c_fan/tables/$ns.json")))
+        case _ => None
+      }
+      resp match {
+        case Some(b) =>
+          ex.sendResponseHeaders(200, b.length.toLong)
+          ex.getResponseBody.write(b)
+        case None if ex.getResponseCode < 0 => ex.sendResponseHeaders(404, -1)
+        case None => ()
+      }
+      ex.close()
+    })
+    srv.start()
+    try f(s"http://127.0.0.1:${srv.getAddress.getPort}")
+    finally { srv.stop(0); pool.shutdown() }
+  }
+
+  private def fanClient(uri: String) =
+    new RestHttpCatalog(Seq(ConfigFx("c_fan", "rest", Map("uri" -> uri))))
+
+  private def walkThreads: Int = Thread.getAllStackTraces.keySet.toArray
+    .count(_.asInstanceOf[Thread].getName == "graft-catalog-walk")
+
+  test("out-of-order LoadTable responses: frames equal the payload client's row for row") {
+    val pay = new RestPayloadCatalog(fanDir.toString)
+    withFanServer() { uri =>
+      val http = fanClient(uri)
+      def same(frame: MetaCatalog => DataFrame): Unit =
+        assert(frame(http).collect().toSeq == frame(pay).collect().toSeq)
+      same(_.listing(spark))
+      same(_.tableMeta(spark))
+      same(_.snapshots(spark))
+      same(_.schemaVersions(spark))
+      same(_.partitionSpecs(spark))
+    }
+    // the listing is in walk order: namespaces, then each one's tables
+    val order = pay.listing(spark).collect()
+      .map(r => (r.getAs[String]("namespace"), r.getAs[String]("table_name")))
+    assert(order.toSeq == (0 until 6).flatMap(n => (0 until 8)
+      .map(t => (s"ns$n", s"t$t"))))
+    assert(pay.listing(spark).filter(col("table_type") === "unknown")
+      .count() == 9)
+    assert(walkThreads == 0)
+  }
+
+  test("a LoadTable that answers 500 twice mid-fan-out fails with the serial walk's error") {
+    // ns1.t2 fails after 300 ms, ns4.t1 at once: the serial walk would
+    // have stopped at ns1.t2, so its error is the one raised
+    withFanServer(fail = Set("ns1.t2", "ns4.t1")) { uri =>
+      val e = intercept[RuntimeException](fanClient(uri).listing(spark))
+      assert(e.getClass == classOf[RuntimeException])
+      assert(e.getMessage == s"GET $uri/v1/namespaces/ns1/tables/t2 -> HTTP 500")
+    }
+    assert(walkThreads == 0)
+  }
+
+  test("a transport's lazy val first read on a walk worker cannot deadlock the walk") {
+    val cat = new RestPayloadCatalog(fanDir.toString) {
+      private lazy val loadDir = "load" // first read inside the fan-out
+      override protected def loadTableDoc(cfg: ConfigFx, ns: String,
+          t: String): Option[String] =
+        payload(s"${cfg.name}/$loadDir/$ns.$t.json")
+    }
+    val count = new java.util.concurrent.atomic.AtomicLong(-1)
+    val t = new Thread(() => count.set(cat.listing(spark).count()))
+    t.setDaemon(true)
+    t.start()
+    t.join(60000)
+    assert(count.get == 48)
+  }
+
+  test("tok-1 expiring under several in-flight LoadTable probes re-mints once") {
+    val mints = new java.util.concurrent.atomic.AtomicInteger(0)
+    // every c_rest probe arrives with tok-1 before any is refused, so
+    // all of them see the expiry at once
+    val probes = new java.util.concurrent.CountDownLatch(4)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    srv.setExecutor(pool)
+    srv.createContext("/", { (ex: HttpExchange) =>
+      val path = ex.getRequestURI.getPath
+      if (path == "/v1/oauth/tokens" && ex.getRequestMethod == "POST") {
+        val b = s"""{"access_token":"tok-${mints.incrementAndGet()}"}"""
+          .getBytes("UTF-8")
+        ex.sendResponseHeaders(200, b.length.toLong)
+        ex.getResponseBody.write(b)
+      } else {
+        val ok = Option(ex.getRequestHeaders.getFirst("Authorization")) match {
+          case Some("Bearer tok-1") if LoadRe.matches(path) =>
+            probes.countDown()
+            probes.await(5, java.util.concurrent.TimeUnit.SECONDS)
+            false
+          case Some("Bearer tok-1") | Some("Bearer tok-2") => true
+          case _ => false
+        }
+        if (!ok) ex.sendResponseHeaders(401, -1)
+        else routeUnpaged(path) match {
+          case Some(b) =>
+            ex.sendResponseHeaders(200, b.length.toLong)
+            ex.getResponseBody.write(b)
+          case None => ex.sendResponseHeaders(404, -1)
+        }
+      }
+      ex.close()
+    })
+    srv.start()
+    try {
+      val c = new RestHttpCatalog(Seq(ConfigFx("c_rest", "rest", Map(
+        "uri" -> s"http://127.0.0.1:${srv.getAddress.getPort}",
+        "warehouse" -> "s3://warehouse", "credential" -> "cid:sec"))))
+      assert(rows(c.listing(spark)) ===
+        rows(fix.listing(spark).filter(col("catalog_name") === "c_rest")))
+      assert(probes.getCount == 0) // all four probes were in flight on tok-1
+      assert(mints.get() == 2)
+    } finally { srv.stop(0); pool.shutdown() }
   }
 }
