@@ -63,16 +63,6 @@ class Engine(spark: SparkSession, catalog: MetaCatalog,
   // ---- training-data pipeline (X3-X6) over caller-supplied frames ----
   def exactDupGroups(docs: DataFrame): DataFrame =
     graft.llm.Dedup.exactGroups(docs)
-  def nearDupCandidates(docs: DataFrame): DataFrame =
-    graft.llm.Dedup.candidatePairs(docs)
-  /** connectivity-only bucket min-star edges — same components as the
-    * clique at d−1 edges per bucket instead of C(d,2); the candidate
-    * feed for cluster resolution on duplication-heavy corpora
-    */
-  def nearDupEdges(docs: DataFrame): DataFrame =
-    graft.llm.Dedup.candidateEdges(docs)
-  def nearDupVerified(docs: DataFrame): DataFrame =
-    graft.llm.Dedup.jaccardOnCandidates(docs)
   def dupClusters(docs: DataFrame): DataFrame =
     graft.llm.Dedup.dupClusters(docs)
   def trainValTestSplit(docs: DataFrame): DataFrame =
@@ -205,9 +195,6 @@ class Engine(spark: SparkSession, catalog: MetaCatalog,
     graft.llm.TextOps.sourceOverlap(docs)
   def incrementalDedup(corpus: DataFrame, batch: DataFrame): DataFrame =
     graft.llm.Dedup.incrementalDedup(corpus, batch)
-  /** storable ingest index (distinct band bucket keys) for the form below */
-  def dedupBandIndex(corpus: DataFrame): DataFrame =
-    graft.llm.Dedup.bandKeyIndex(corpus)
   def incrementalDedupWithIndex(index: DataFrame, batch: DataFrame): DataFrame =
     graft.llm.Dedup.incrementalDedupWithIndex(index, batch)
   /** shannon=true adds the entropy column (libm ln production route) */

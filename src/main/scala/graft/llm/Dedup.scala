@@ -129,61 +129,24 @@ object Dedup {
     */
   val MaxBucket = 2000
 
-  /** deterministic sub-shard assignment for an oversized bucket:
-    * md5(bucketKey # rowKey) mod `nsh` — ONE definition shared by
-    * every banded candidate generator (r17 review: the incantation had
-    * grown four hand-copies, and any drift in the hash scheme would
-    * silently desync pair generation between paths)
-    */
-  def subShard(bucketKey: Column, rowKey: Column, nsh: Column): Column =
-    when(nsh <= 1, lit(0)).otherwise(
-      pmod(conv(substring(md5(concat_ws("#", bucketKey, rowKey)), 1, 7),
-        16, 10).cast("long"), nsh).cast("int"))
-
   /** candidate near-dup pairs: docs sharing any band bucket. Pair
     * generation happens INSIDE each bucket — never an all-pairs join —
-    * and is BOUNDED (r2 verdict): a bucket larger than `maxBucket` is
-    * re-sharded by a secondary md5 of (bucket, doc_id) into
-    * ceil(size/maxBucket) sub-buckets, so per-group pair work is capped at
-    * ~maxBucket² instead of Σ bucket² with no ceiling. Cross-shard pairs
-    * of a degenerate bucket are dropped — the standard recall-for-
-    * boundedness trade; near-identical docs land in MANY shared buckets,
-    * so a pair capped in one band usually survives another. Use
-    * [[oversizedBuckets]] to count/log what was capped.
-    *
-    * Pair expansion emits one row per (member, partner-array) — O(bucket)
-    * memory per row, never the O(bucket²) single-row array that made the
-    * r2 shape OOM-prone on a degenerate bucket.
+    * and is BOUNDED (r2 verdict) by the [[Banded]] cap: a bucket larger
+    * than `maxBucket` is re-sharded into ceil(size/maxBucket)
+    * sub-buckets, so per-group pair work is capped at ~maxBucket²
+    * instead of Σ bucket² with no ceiling. Use [[oversizedBuckets]] to
+    * count/log what was capped.
     */
-  /** shared LSH bucket materialization: per (band, bucket-hash,
-    * cap-shard) the sorted member list, size ≥ 2. Bucket size rides an
-    * unordered count window — the same (band, bh) shuffle the grouping
-    * needs anyway; window partitions spill, never OOM.
-    */
-  private def collidedBuckets(docs: DataFrame, maxBucket: Int): DataFrame = {
-    val bb = bandsInRow(docs)
-    val wsz = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bh"))
-    val sharded = bb
-      .withColumn("bsz", count(lit(1)).over(wsz))
-      .filter(col("bsz") > 1)
-      .withColumn("nsh",
-        ceil(col("bsz").cast("double") / maxBucket).cast("int"))
-      .withColumn("sub", subShard(col("bh"), col("doc_id"), col("nsh")))
-    sharded.groupBy(col("band"), col("bh"), col("sub"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) > 1)
-  }
-
   def candidatePairs(docs: DataFrame, maxBucket: Int = MaxBucket): DataFrame =
-    // member i pairs with every later member: slice() keeps per-row state
-    // at O(bucket ≤ maxBucket)
-    collidedBuckets(docs, maxBucket)
-      .select(posexplode(col("ds")).as(Seq("i", "doc_a")), col("ds"))
-      .select(col("doc_a"),
-        explode(slice(col("ds"), col("i") + lit(2), size(col("ds"))))
-          .as("doc_b"))
+    Banded.clique(collidedBuckets(docs, maxBucket), "doc_a", "doc_b")
       .distinct()
+
+  /** per (band, bucket-hash, cap-shard) the sorted member list, size ≥ 2;
+    * the text side sizes by the count window (see [[Banded.CountWindow]])
+    */
+  private def collidedBuckets(docs: DataFrame, maxBucket: Int): DataFrame =
+    Banded.pairGroups(bandsInRow(docs), Seq("band", "bh"), "doc_id",
+      col("doc_id"), maxBucket, Banded.CountWindow)
 
   /** CONNECTIVITY-ONLY candidate edges: each bucket member links to the
     * bucket's MIN member — d−1 edges per bucket instead of
@@ -202,20 +165,15 @@ object Dedup {
     * ([[dupClusters]]) needs only connectivity and uses this.
     */
   def candidateEdges(docs: DataFrame, maxBucket: Int = MaxBucket): DataFrame =
-    collidedBuckets(docs, maxBucket)
-      .select(element_at(col("ds"), 1).as("doc_a"),
-        explode(slice(col("ds"), lit(2), size(col("ds")))).as("doc_b"))
+    Banded.star(collidedBuckets(docs, maxBucket), "doc_a", "doc_b")
       .distinct()
 
   /** capped-bucket diagnostic: (band, bh, bsz) for every bucket whose pair
-    * generation was re-sharded by [[candidatePairs]] — count/log these so
-    * a recall trade at scale is visible, not silent.
+    * generation was re-sharded by [[candidatePairs]]
     */
   def oversizedBuckets(docs: DataFrame,
       maxBucket: Int = MaxBucket): DataFrame =
-    bandsInRow(docs)
-      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucket)
+    Banded.oversized(bandsInRow(docs), Seq("band", "bh"), maxBucket)
 
   /** duplicate-cluster resolution: connected components over the
     * candidate-pair graph, labeling every document with the MIN doc_id of

@@ -1093,14 +1093,10 @@ object Multimodal {
       budgetPairs: Long = 200000000L,
       minCap: Int = Dedup.MaxBucket,
       headroom: Double = 1.5): Int = {
-    require(64 % nBands == 0 && nBands >= 2 && nBands <= 64)
-    val bpb = 64 / nBands
-    val mask = (1L << bpb) - 1
-    val sizes = hashed.filter(col(hashCol).isNotNull)
-      .select(col(hashCol).as("h"),
-        explode(sequence(lit(0), lit(nBands - 1))).as("band"))
-      .select(col("band"), expr(s"(h >> (band * $bpb)) & ${mask}L").as("bucket"))
-      .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("d"))
+    val sizes = Banded.sizes(Banded.hammingBands(
+        hashed.filter(col(hashCol).isNotNull).select(col(hashCol).as("h")),
+        "h", nBands), Seq("band", "bucket"))
+      .withColumnRenamed("bsz", "d")
       .filter(col("d") > 1)
       // histogram, not raw buckets: collect at most 64 (log2-spaced
       // size class, count, Σd, Σd²) rows regardless of corpus size
@@ -1170,16 +1166,11 @@ object Multimodal {
     // costs the estimate nothing, exactly as it costs the execution
     // nothing; the estimate stays exact for the work the funnel pays
     val works = ladder.init.map { case (nBands, tau) =>
-      val bpb = 64 / nBands
-      val mask = (1L << bpb) - 1
-      val w = hashed.filter(col(hashCol).isNotNull)
-        .select(col(hashCol).as("h")).distinct()
-        .select(col("h"),
-          explode(sequence(lit(0), lit(nBands - 1))).as("band"))
-        .select(col("band"),
-          expr(s"(h >> (band * $bpb)) & ${mask}L").as("bucket"))
-        .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("d"))
-        .agg(sum(col("d") * (col("d") - 1) / 2).as("w"))
+      val w = Banded.sizes(Banded.hammingBands(
+          hashed.filter(col(hashCol).isNotNull)
+            .select(col(hashCol).as("h")).distinct(), "h", nBands),
+          Seq("band", "bucket"))
+        .agg(sum(col("bsz") * (col("bsz") - 1) / 2).as("w"))
         .collect()(0)
       ((nBands, tau), Option(w.get(0)).fold(0.0)(_.toString.toDouble))
     }
@@ -1217,51 +1208,19 @@ object Multimodal {
     */
   def hammingNearDupFrom(hashed: DataFrame, hashCol: String, tau: Int,
       nBands: Int, maxBucket: Int): DataFrame = {
-    require(64 % nBands == 0 && nBands >= 2 && nBands <= 64,
-      s"nBands must divide 64 (got $nBands)")
+    val bands = Banded.hammingBands(hashed.filter(col(hashCol).isNotNull)
+      .select(col("media_id"), col(hashCol).as("phash64")), "phash64", nBands)
     require(tau < nBands,
       s"band recall is only exact for tau < nBands (got tau=$tau, nBands=$nBands)")
-    val bpb = 64 / nBands
-    val mask = (1L << bpb) - 1
-    val h = hashed.filter(col(hashCol).isNotNull)
-      .select(col("media_id"), col(hashCol).as("phash64"))
-    // arithmetic >> then mask: the sign-extension bits of a negative
-    // hash land outside the band mask
-    val bands = h.select(col("media_id"), col("phash64"),
-        explode(sequence(lit(0), lit(nBands - 1))).as("band"))
-      .withColumn("bucket",
-        expr(s"(phash64 >> (band * $bpb)) & ${mask}L"))
-    // bucket sizes via a map-side-combinable AGG joined back (r15): the
-    // former per-partition count WINDOW shuffled AND SORTED every band
-    // row before the sub grouping's shuffle. The size table is bounded
-    // by the band VALUE SPACE (≤ nBands·2^(64/nBands) rows — 2048 for
-    // 8×8-bit, 256k for 4×16-bit), so for bpb ≤ 16 it broadcasts BY
-    // CONSTRUCTION (a safe static hint, unlike the corpus-scaled sides
-    // noStaticBroadcast exists for) and the full band table crosses the
-    // wire exactly once, unsorted, straight into the sub grouping. The
-    // band projection computes twice (a shift+mask over the hash
-    // artifact — free), which is why the TEXT side's collidedBuckets
-    // keeps its window: its band rows carry 128 minhash md5s per doc.
-    val bsz = bands.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > 1)
-    val bszSide = if (bpb <= 16) broadcast(bsz) else bsz
-    val sharded = bands.join(bszSide, Seq("band", "bucket"))
-      .withColumn("nsh",
-        ceil(col("bsz").cast("double") / maxBucket).cast("int"))
-      .withColumn("sub",
-        Dedup.subShard(col("bucket"), col("media_id"), col("nsh")))
-    val buckets = sharded.groupBy(col("band"), col("bucket"), col("sub"))
-      .agg(sort_array(collect_list(struct(col("media_id"),
-        col("phash64")))).as("vs"))
-      .filter(size(col("vs")) > 1)
-    buckets
-      .select(posexplode(col("vs")).as(Seq("i", "a")), col("vs"))
+    // sizes by the map-side agg + broadcast (see [[Banded.SizeJoin]]):
+    // the size table is bounded by the band value space (≤ 2048 rows for
+    // 8×8-bit, 256k for 4×16-bit)
+    val buckets = Banded.pairGroups(bands, Seq("band", "bucket"), "media_id",
+      struct(col("media_id"), col("phash64")), maxBucket,
+      Banded.SizeJoin(64 / nBands))
+    Banded.clique(buckets, "a", "b")
       .select(col("a.media_id").as("id_a"), col("a.phash64").as("ph_a"),
-        explode(slice(col("vs"), col("i") + lit(2), size(col("vs"))))
-          .as("b"))
-      .select(col("id_a"), col("ph_a"), col("b.media_id").as("id_b"),
-        col("b.phash64").as("ph_b"))
+        col("b.media_id").as("id_b"), col("b.phash64").as("ph_b"))
       // r18: τ-filter BEFORE the cross-band dedup — bit_count is a
       // projection, so filtering first means the distinct's exchange
       // shuffles only τ-matches instead of every candidate pair.

@@ -6,6 +6,11 @@
 #   tools/run_main.sh graft.Trace census '^q0' <sfDir>
 # Paths resolve from the script's own location / env (r14 advice) so the
 # script survives a different checkout dir or Spark install.
+# Plan-identity check between two checkouts: dump `graft.Trace explain` from
+# each (same regex, same sfDir) and compare the operator trees, which masks
+# expression ids, lambda class names and file:line RDD names:
+#   tools/run_main.sh graft.Trace explain '^x0' <sfDir> > after.txt
+#   python3 tools/plan_skeleton.py before.txt after.txt [--details]
 REPO_ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 SPARK_JARS_DIR="${SPARK_JARS_DIR:-/opt/spark/jars}"
 MAIN="$1"; shift
