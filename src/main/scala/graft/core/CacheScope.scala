@@ -15,8 +15,8 @@ import org.apache.spark.storage.StorageLevel
   * }}}
   * Plans derived from a released frame keep working; they recompute
   * instead of reading cache. With no scope open, `keep` is a plain
-  * `persist(MEMORY_AND_DISK)` and the caller releases the session cache
-  * itself ([[graft.Engine.releaseCaches]]).
+  * `persist(MEMORY_AND_DISK)`: the caller unpersists the frames itself,
+  * or opens a scope.
   *
   * A plan already cached when `keep` runs stays with whoever cached it,
   * so closing an inner scope never drops an outer scope's frames. The

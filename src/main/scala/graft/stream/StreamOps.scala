@@ -96,19 +96,9 @@ object StreamOps {
     spark.readStream.schema(schema).parquet(staged.toString)
   }
 
-  /** run a streaming frame to completion into a memory sink, return the
-    * materialized result (driver-side table of the sink — small aggregate
-    * output only; the heavy lifting stays distributed)
-    */
-  /** fast checkpoint root: state-store commits and offset logs fsync every
-    * micro-batch, so checkpoint placement is a first-order streaming cost —
-    * tmpfs locally; on a cluster this is the fast-DFS checkpoint volume
-    */
   /** spill dirs pending exit-time deletion: ONE shutdown hook drains
-    * the queue (r11 advice — a hook per call accumulated thread objects
-    * without bound in a long-lived session), and [[cleanupSpillDirs]]
-    * lets a caller whose frames are fully materialized reclaim the
-    * RAM-backed space eagerly instead of waiting for exit.
+    * the queue (a hook per call accumulated thread objects without
+    * bound in a long-lived session)
     */
   private val spillDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
@@ -127,16 +117,10 @@ object StreamOps {
     rm(p.toFile)
   }
 
-  /** eagerly delete every spill/checkpoint dir registered so far — for
-    * long-lived sessions between ingest batches, AFTER all frames that
-    * read them (CC outputs, stream results) are materialized or
-    * discarded; frames still lazy over these files will fail on action.
+  /** fast checkpoint root: state-store commits and offset logs fsync every
+    * micro-batch, so checkpoint placement is a first-order streaming cost —
+    * tmpfs locally; on a cluster this is the fast-DFS checkpoint volume
     */
-  def cleanupSpillDirs(): Unit = {
-    var p = spillDirs.poll()
-    while (p != null) { rmTree(p); p = spillDirs.poll() }
-  }
-
   def checkpointDir(name: String): String = {
     val root = if (java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get("/dev/shm"))) "/dev/shm" else "/tmp"
@@ -146,9 +130,8 @@ object StreamOps {
     // no-ops on a non-empty directory, which leaked every checkpoint
     // and CC spill file (preferentially into RAM-backed /dev/shm)
     // until reboot. The returned frames read these files lazily, so
-    // eager deletion is not safe before exit; a long-lived session
-    // calls [[cleanupSpillDirs]] between batches once frames are
-    // materialized (one edge-set copy per CC invocation otherwise).
+    // eager deletion is not safe before exit: the exit hook is the one
+    // drain.
     spillHook
     spillDirs.add(d)
     d.toString
@@ -176,6 +159,10 @@ object StreamOps {
     }
   }
 
+  /** run a streaming frame to completion into a memory sink, return the
+    * materialized result (driver-side table of the sink — small aggregate
+    * output only; the heavy lifting stays distributed)
+    */
   def runToTable(df: DataFrame, name: String, mode: String): DataFrame = {
     val spark = df.sparkSession
     val prev = spark.conf.get("spark.sql.shuffle.partitions")

@@ -1,5 +1,7 @@
 package graft
 
+import java.lang.reflect.Modifier
+
 import graft.ops.MetaOps.SnapshotFilterParams
 
 /** end-to-end facade walk: the reference app's whole user journey through
@@ -7,7 +9,7 @@ import graft.ops.MetaOps.SnapshotFilterParams
   */
 class EngineSpec extends SparkSpec {
 
-  private lazy val eng = Engine.fixture(spark)
+  private lazy val eng = new Engine(spark, graft.meta.FixtureCatalog.default)
 
   test("browse → search → open → inspect → dashboard round trip") {
     assert(eng.tables.count() == 8)
@@ -21,69 +23,23 @@ class EngineSpec extends SparkSpec {
     assert(eng.schemaEvolution("c_glue", "ml", "training_runs").count() == 5)
     assert(eng.partitionFields.count() == 6)
     assert(eng.timeTravel(graft.meta.Model.AsOfMs).count() == 5)
+    assert(eng.metrics.count() == 6)
     assert(eng.healthScores.count() == 6)
+    assert(eng.subScores.count() == 6)
     assert(eng.alerts.count() == 4)
     assert(eng.recommendations.count() == 9)
     assert(eng.trends.count() == 5) // scratch has no history
   }
 
-  test("pipeline extensions through the facade") {
-    val docs = graft.core.Tables
-      .load(spark, "/root/testdata/sf0.001", "documents")
-    val embs = graft.core.Tables
-      .load(spark, "/root/testdata/sf0.001", "embeddings")
-    assert(eng.exactDupGroups(docs).count() == 500)
-    assert(eng.tokenStats(docs).count() == 500)
-    assert(eng.similarTopK(embs, nQueries = 2, k = 3).count() == 6)
-    assert(eng.temperatureResample(docs).count() == 500)
-    assert(eng.vocabularyCoverage(docs, topK = 10).count() == 10)
-    val merges = eng.bpeTrain(docs, nMerges = 2).collect()
-    assert(merges.length == 2)
-    val pairs = merges.sortBy(_.getAs[Long]("rank"))
-      .map(r => (r.getAs[String]("left"), r.getAs[String]("right"))).toSeq
-    assert(eng.bpeEncode(docs, pairs).count() == 500)
-    spark.catalog.clearCache()
-  }
-
-  test("graph + budget curation surface through the facade") {
-    val docs = graft.core.Tables
-      .load(spark, "/root/testdata/sf0.001", "documents")
-    val embs = graft.core.Tables
-      .load(spark, "/root/testdata/sf0.001", "embeddings")
-    assert(eng.knnGraph(embs).count() > 0)
-    val comms = eng.knnCommunities(embs)
-    assert(comms.count() == embs.count())
-    assert(eng.communityQuality(embs).count() > 0)
-    val corpus = embs.filter(org.apache.spark.sql.functions
-      .col("vec_id") % 10 =!= 0)
-    assert(eng.assignToCommunities(corpus, eng.knnCommunities(corpus)
-        .select("vec_id", "community_id"),
-      embs.filter(org.apache.spark.sql.functions.col("vec_id") % 10 === 0))
-      .count() == 50)
-    assert(eng.selectByTokenBudget(docs).count() == 500)
-    assert(eng.clusterSafeSplit(docs).count() == 500)
-    assert(eng.tokenBalancedShards(docs).count() == 500)
-    assert(eng.epochSchedule(docs).count() > 0)
-    assert(eng.takedownPropagate(docs).count() > 0)
-    spark.catalog.clearCache()
-  }
-
-  test("perceptual media surface through the facade") {
-    val s = spark
-    import s.implicits._
-    val media = graft.llm.Multimodal.mediaRows.toDS().toDF()
-    val nMedia = graft.llm.Multimodal.mediaRows.size.toLong
-    assert(eng.imagePhash(media).count() == nMedia)
-    assert(eng.imageNearDup(media).count() > 0)
-    assert(eng.audioNearDup(media).count() > 0)
-    assert(eng.videoNearDup(media).count() > 0)
-    assert(eng.videoPhash(media).count() > 0)
-    assert(eng.mediaDedupKeep(media).count() == nMedia)
-    assert(eng.sceneChanges(media).count() > 0)
-    assert(eng.mediaQualityGate(media).count() == nMedia)
-    assert(eng.pngTextChunks(media).count() == 3)
-    assert(eng.stripTextAudit(media).count() == nMedia)
-    assert(eng.mediaCurationFunnel(media).count() == 6)
-    spark.catalog.clearCache()
+  test("the facade declares exactly the journey's methods") {
+    // a method added without a step in the walk above fails here
+    val declared = classOf[Engine].getDeclaredMethods.toSeq
+      .filter(m => Modifier.isPublic(m.getModifiers) &&
+        !Modifier.isStatic(m.getModifiers))
+      .map(_.getName).sorted
+    assert(declared == Seq("alerts", "filterSnapshots", "healthScores",
+      "metrics", "partitionFields", "recommendations", "schemaEvolution",
+      "searchTables", "snapshots", "subScores", "tables", "timeTravel",
+      "treeCounts", "trends"))
   }
 }

@@ -389,6 +389,51 @@ class RestHttpCatalogSpec extends SparkSpec with BeforeAndAfterAll {
     } finally srv.stop(0)
   }
 
+  test("multi-level listing rows follow the depth-first namespace walk") {
+    val US = "\u001F"
+    // pre-order (sales, sales.eu, ads) differs from breadth-first and
+    // from sorted order; sales's listing lands last, so the fanned-out
+    // listings finish out of walk order
+    val nsKids = Map("" -> Seq("sales", "ads"), "sales" -> Seq("sales.eu"))
+    val tables = Map("sales" -> Seq("returns", "orders"),
+      "sales.eu" -> Seq("orders_eu"), "ads" -> Seq("imps", "clicks"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    srv.setExecutor(pool)
+    srv.createContext("/", { (ex: HttpExchange) =>
+      val parent = Option(ex.getRequestURI.getQuery)
+        .flatMap(_.split("&").collectFirst {
+          case kv if kv.startsWith("parent=") => java.net.URLDecoder
+            .decode(kv.stripPrefix("parent="), "UTF-8").replace(US, ".")
+        })
+      val resp = ex.getRequestURI.getPath match {
+        case "/v1/namespaces" => Some(RestWire.namespacesJson(
+          nsKids.getOrElse(parent.getOrElse(""), Seq.empty)))
+        case TablesRe(enc) =>
+          val ns = enc.replace(US, ".")
+          if (ns == "sales") Thread.sleep(200)
+          Some(RestWire.tableIdentsJson(ns, tables(ns)))
+        case _ => None
+      }
+      resp.map(_.getBytes("UTF-8")) match {
+        case Some(b) =>
+          ex.sendResponseHeaders(200, b.length.toLong)
+          ex.getResponseBody.write(b)
+        case None => ex.sendResponseHeaders(404, -1)
+      }
+      ex.close()
+    })
+    srv.start()
+    try {
+      val c = new RestHttpCatalog(Seq(ConfigFx("c_rest", "rest", Map(
+        "uri" -> s"http://127.0.0.1:${srv.getAddress.getPort}"))))
+      val listing = c.listing(spark).collect().toSeq
+        .map(r => (r.getAs[String]("namespace"), r.getAs[String]("table_name")))
+      assert(listing == Seq(("sales", "returns"), ("sales", "orders"),
+        ("sales.eu", "orders_eu"), ("ads", "imps"), ("ads", "clicks")))
+    } finally { srv.stop(0); pool.shutdown() }
+  }
+
   test("a 5xx is retried once; a dead endpoint fails with a clear message") {
     val failedOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)
