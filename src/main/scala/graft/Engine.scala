@@ -32,7 +32,7 @@ class Engine(spark: SparkSession, catalog: MetaCatalog,
   def searchTables(query: String): DataFrame =
     MetaOps.searchTables(tables, query)
   def treeCounts(query: String): DataFrame =
-    MetaOps.treeFilterCounts(tables, query)
+    MetaOps.treeFilterCountsMulti(tables, Seq(query))
 
   // ---- snapshot exploration (S7, F1-F4, O1, J8) ----------------------
   def snapshots: DataFrame = snaps

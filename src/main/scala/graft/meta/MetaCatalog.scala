@@ -52,9 +52,10 @@ private[meta] abstract class WalkedCatalog extends MetaCatalog {
   protected def walk(cfg: ConfigFx): Seq[((String, String), Option[Loaded])]
 
   /** every catalog's listing rows and loaded tables, walked once. The
-    * memo locks its own holder, not this catalog: a lazy val of the
-    * transport first read on a walk worker locks the catalog, and the
-    * walk would hold that lock while it waits for the worker.
+    * memo locks its own holder, not this catalog: a subclass's lazy val
+    * (the payload catalogs' `registry`, or a transport's own state)
+    * locks the catalog when first read, and one first read on a walk
+    * worker would wait for the walk.
     */
   private object memo {
     lazy val walked: (Seq[ListingFx], Seq[Loaded]) = {

@@ -1,9 +1,8 @@
 package graft.meta
 
 import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import java.time.Duration
 import java.util.concurrent.ConcurrentHashMap
 
 import Model._
@@ -22,16 +21,16 @@ import Model._
   * frames.
   *
   * The walk runs in the calling JVM, not in Spark tasks, memoized per
-  * instance. Each catalog's `/v1/config` fetch, first token mint and
-  * namespace walk run serially and first: every later request reads the
-  * prefix and bearer they memoized, and each namespace level names the
-  * next. The two per-item phases then fan out ([[Paging.fanOut]], at
-  * most 8 requests in flight): the per-namespace table listings, each
-  * paging its own token chain in order, and the per-identifier
-  * LoadTable probes, which parse as they land. A catalog connect is
-  * about one request per table, so run serially it is a chain of round
-  * trips. Results keep input order, so rows, request counts and error
-  * messages are those of a serial walk.
+  * instance. Each catalog's `/v1/config` fetch and first token mint run
+  * first, with the top-level listing: later requests read the prefix
+  * and bearer they memoized. Then each namespace level's `?parent=`
+  * listings, the per-namespace table listings (each paging its own
+  * token chain in order) and the per-identifier LoadTable probes fan out
+  * ([[Paging.fanOut]], at most 8 requests in flight). A catalog connect
+  * is about one request per table, so run serially it is a chain of
+  * round trips. Results keep walk order, so rows and request counts are
+  * those of a serial walk; of several failures in one fan-out, the one
+  * earliest in its order is raised.
   */
 abstract class RestClientCatalog extends WalkedCatalog {
 
@@ -59,30 +58,37 @@ abstract class RestClientCatalog extends WalkedCatalog {
     */
   protected val maxNsDepth: Int = 8
 
-  /** every namespace of `cfg`, multi-level included: list the top
-    * level, then list each namespace's children (`?parent=`) until the
-    * frontier is empty. Children that don't strictly extend their
-    * parent (a server echoing the parent back, or returning an
-    * unrelated branch) are dropped — they would otherwise loop or
-    * double-count; each level paginates independently.
+  /** every namespace of `cfg`, multi-level included, in depth-first
+    * pre-order: list the top level, then each namespace's children
+    * (`?parent=`), a whole level side by side ([[Paging.fanOut]]), until
+    * a level is empty. Children that don't strictly extend their parent
+    * (a server echoing the parent back, or returning an unrelated
+    * branch) and namespaces already listed are dropped — they would
+    * otherwise loop or double-count; each listing paginates on its own.
     */
   private def allNamespaces(cfg: ConfigFx): Seq[String] = {
-    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    def walk(parent: Option[String], depth: Int): Unit = {
-      if (depth > maxNsDepth) sys.error(
-        s"catalog ${cfg.name}: namespace hierarchy deeper than $maxNsDepth" +
-          s" under ${parent.getOrElse("<root>")} — refusing to recurse")
-      val label = parent.fold(s"${cfg.name} namespaces")(p =>
-        s"${cfg.name} namespaces(parent=$p)")
-      val here = Paging.collect(label,
+    def children(parent: Option[String]): Seq[String] =
+      Paging.collect(parent.fold(s"${cfg.name} namespaces")(p =>
+          s"${cfg.name} namespaces(parent=$p)"),
         namespacesDoc(cfg, parent, _), RestWire.parseNamespaces,
         RestWire.parseNextPageToken)
         .filter(ns => parent.forall(p => ns.startsWith(p + ".")))
-        .filterNot(seen.contains)
-      here.foreach { ns => seen += ns; walk(Some(ns), depth + 1) }
-    }
-    walk(None, 1)
-    seen.toSeq
+    val seen = scala.collection.mutable.HashSet.empty[String]
+    def levels(parents: Seq[Option[String]],
+        depth: Int): Map[Option[String], Seq[String]] =
+      if (parents.isEmpty) Map.empty else {
+        if (depth > maxNsDepth) sys.error(
+          s"catalog ${cfg.name}: namespace hierarchy deeper than " +
+            s"$maxNsDepth under ${parents.head.getOrElse("<root>")}" +
+            " — refusing to recurse")
+        val kids = parents.zip(Paging.fanOut(parents)(children))
+          .map { case (p, listed) => p -> listed.filter(seen.add) }
+        kids.toMap ++ levels(kids.flatMap(_._2.map(Some(_))), depth + 1)
+      }
+    val kids = levels(Seq(None), 1)
+    def preOrder(parent: Option[String]): Seq[String] =
+      kids.getOrElse(parent, Nil).flatMap(ns => ns +: preOrder(Some(ns)))
+    preOrder(None)
   }
 
   protected def walk(cfg: ConfigFx): Seq[((String, String), Option[Loaded])] = {
@@ -148,14 +154,15 @@ object RestPayloadCatalog {
   def default: RestPayloadCatalog = new RestPayloadCatalog(DefaultDir)
 }
 
-/** LIVE S1: [[RestClientCatalog]] over real HTTP (`java.net.http`,
-  * JDK-native — no added dependency). Each `rest`-typed registry entry
-  * is served from its configured `uri` with `Authorization: Bearer
-  * <auth_token>` when the config carries a token; a 404 load response
-  * classifies the identifier "unknown" (the probe), any other non-200
-  * fails fast with the status in the message. Non-`rest` entries (Glue)
-  * contribute nothing here — that transport needs the AWS SDK, which
-  * stays the one documented seam (SURVEY §0, offline build).
+/** LIVE S1: [[RestClientCatalog]] over real HTTP through
+  * [[HttpRetry.exchange]]: the JDK's `HttpURLConnection`, blocking the
+  * walk thread that asks (no added dependency). Each `rest`-typed
+  * registry entry is served from its configured `uri` with
+  * `Authorization: Bearer <auth_token>` when the config carries a
+  * token; a 404 load response classifies the identifier "unknown" (the
+  * probe), any other non-200 fails fast with the status in the message.
+  * Non-`rest` entries contribute nothing here ([[GlueHttpCatalog]]
+  * serves the glue ones).
   *
   * r17: the client fetches `GET /v1/config` once per catalog (with the
   * `warehouse` query param when configured) and adopts the server's
@@ -179,21 +186,18 @@ object RestPayloadCatalog {
   *   - MULTI-LEVEL NAMESPACES: namespace path/`parent` parameters are
   *     encoded per spec as levels joined by the 0x1F unit separator
   *     (`%1F` on the wire — the client splits its dotted display form
-  *     on '.'), and the listing WALK recurses `GET
-  *     /v1/namespaces?parent=...` per discovered namespace, so nested
+  *     on '.'), and the listing WALK asks `GET
+  *     /v1/namespaces?parent=...` of every discovered namespace, so nested
   *     hierarchies (Polaris/Tabular-style) enumerate completely. A
   *     404 for a parented listing means "no children" (flat servers).
   *
   * RestHttpCatalogSpec drives this client against real localhost HTTP
   * servers serving the golden wire payloads — auth header, 404 probe,
   * pagination, retry, prefix adoption, OAuth mint + 401 re-mint,
-  * nested-namespace walk, and error path included.
+  * nested-namespace walk, redirect and error paths included.
   */
 class RestHttpCatalog(override protected val registry: Seq[ConfigFx])
     extends RestClientCatalog {
-
-  private lazy val client: HttpClient = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofSeconds(10)).build()
 
   // one /v1/config fetch per catalog (the reference SDK does this at
   // client construction); "" = unprefixed, "p/" = every endpoint under
@@ -206,9 +210,7 @@ class RestHttpCatalog(override protected val registry: Seq[ConfigFx])
 
   private def prefixOf(cfg: ConfigFx): String =
     prefixMemo.computeIfAbsent((cfg.name, cfg.config.getOrElse("uri", "")), _ => {
-      val q = cfg.config.get("warehouse").map(w => "?warehouse=" +
-        java.net.URLEncoder.encode(w,
-          java.nio.charset.StandardCharsets.UTF_8)).getOrElse("")
+      val q = cfg.config.get("warehouse").fold("")(w => s"?warehouse=${enc(w)}")
       get(cfg, s"/v1/config$q") match {
         case Some(body) => RestWire.parseConfig(body).get("prefix")
           .filter(_.nonEmpty).map(_.stripSuffix("/") + "/").getOrElse("")
@@ -216,8 +218,7 @@ class RestHttpCatalog(override protected val registry: Seq[ConfigFx])
       }
     })
 
-  private def enc(s: String): String =
-    java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
+  private def enc(s: String): String = java.net.URLEncoder.encode(s, UTF_8)
 
   /** spec namespace encoding: dotted display form → levels joined by
     * the 0x1F unit separator, percent-encoded (`a.b` → `a%1Fb`). The
@@ -248,14 +249,10 @@ class RestHttpCatalog(override protected val registry: Seq[ConfigFx])
       "scope" -> cfg.config.getOrElse("scope", "catalog")) ++
       clientId.map("client_id" -> _))
       .map { case (k, v) => s"${enc(k)}=${enc(v)}" }.mkString("&")
-    val req = HttpRequest.newBuilder(URI.create(tokenUri))
-      .timeout(Duration.ofSeconds(30))
-      .header("Content-Type", "application/x-www-form-urlencoded")
-      .POST(HttpRequest.BodyPublishers.ofString(form)).build()
-    HttpRetry.sendTwice(s"POST $tokenUri", () => {
-      val r = client.send(req, HttpResponse.BodyHandlers.ofString())
-      (r.statusCode(), r.body())
-    }) match {
+    HttpRetry.sendTwice(s"POST $tokenUri", () => HttpRetry.exchange(
+      URI.create(tokenUri),
+      Seq("Content-Type" -> "application/x-www-form-urlencoded"),
+      Some(form.getBytes(UTF_8)))) match {
       case (200, body) => RestWire.parseAccessToken(body).getOrElse(
         sys.error(s"POST $tokenUri -> 200 with no access_token"))
       case (code, _) => sys.error(s"POST $tokenUri -> HTTP $code")
@@ -285,16 +282,10 @@ class RestHttpCatalog(override protected val registry: Seq[ConfigFx])
       sys.error(s"catalog ${cfg.name}: no uri in registry config"))
     val q = pageToken.fold("")(t => (if (path.contains("?")) "&" else "?") +
       "pageToken=" + enc(t))
-    def send(bearer: Option[String]): (Int, String) = {
-      val b = HttpRequest.newBuilder(
-          URI.create(base.stripSuffix("/") + path + q))
-        .timeout(Duration.ofSeconds(30)).GET()
-      bearer.foreach(t => b.header("Authorization", s"Bearer $t"))
-      HttpRetry.sendTwice(s"GET $base$path$q", () => {
-        val r = client.send(b.build(), HttpResponse.BodyHandlers.ofString())
-        (r.statusCode(), r.body())
-      })
-    }
+    def send(bearer: Option[String]): (Int, String) =
+      HttpRetry.sendTwice(s"GET $base$path$q", () => HttpRetry.exchange(
+        URI.create(base.stripSuffix("/") + path + q),
+        bearer.map(t => "Authorization" -> s"Bearer $t").toSeq, None))
     val sent = bearerOf(cfg, base)
     val res = send(sent) match {
       case (401, _) if cfg.config.contains("credential") &&

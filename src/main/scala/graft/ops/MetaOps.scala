@@ -92,41 +92,15 @@ object MetaOps {
       .limit(10)
   }
 
-  /** F10 + A18 — hierarchical tree filter counts (`main.rs:839-940`):
-    * a table is listed iff its NAME matches; a namespace is shown iff its
-    * name matches OR it has matching tables; a catalog is shown iff its
-    * name matches OR it has shown namespaces. Expressed as the semi-join
-    * cascade of SURVEY J7 (bottom-up aggregation of match bits), not a
-    * driver-side loop — at scale this is two shuffles on (catalog, ns).
-    */
-  def treeFilterCounts(listing: DataFrame, query: String): DataFrame = {
-    val q = query.toLowerCase
-    val tablesMatch = listing.filter(lower(col("table_name")).contains(q))
-    val namespaces = listing.select("catalog_name", "namespace").distinct()
-    val nsWithTables = tablesMatch.select("catalog_name", "namespace").distinct()
-    val nsShown = namespaces
-      .join(nsWithTables.withColumn("has_tbl", lit(true)),
-        Seq("catalog_name", "namespace"), "left")
-      .filter(lower(col("namespace")).contains(q) || col("has_tbl").isNotNull)
-    val catalogs = listing.select("catalog_name").distinct()
-    val catShown = catalogs
-      .join(nsShown.select("catalog_name").distinct()
-        .withColumn("has_ns", lit(true)), Seq("catalog_name"), "left")
-      .filter(lower(col("catalog_name")).contains(q) || col("has_ns").isNotNull)
-    catShown.agg(count(lit(1)).as("n_catalogs"))
-      .crossJoin(nsShown.agg(count(lit(1)).as("n_namespaces")))
-      .crossJoin(tablesMatch.agg(count(lit(1)).as("n_tables")))
-      .select(lit(query).as("query"), col("n_catalogs"), col("n_namespaces"),
-        col("n_tables"))
-  }
-
-  /** [[treeFilterCounts]] for a BATCH of filter queries in one pass: the
-    * listing is scanned once against the exploded query set and the match
-    * bits aggregate bottom-up (table → namespace → catalog → query) with
-    * three hash aggregations total — vs one whole plan-tree (≈6 scans,
-    * 2 joins, 3 single-row aggregates) per query for the single-query
-    * form, which made m18 pure job-overhead (r3 verdict task 8). At scale
-    * N concurrent filter queries cost one scan, not N.
+  /** F10 + A18 — hierarchical tree filter counts (`main.rs:839-940`),
+    * for a BATCH of filter queries in one pass: a table is listed iff
+    * its NAME matches; a namespace is shown iff its name matches OR it
+    * has matching tables; a catalog is shown iff its name matches OR it
+    * has shown namespaces. The listing is scanned once against the
+    * exploded query set and the match bits aggregate bottom-up (table →
+    * namespace → catalog → query) with three hash aggregations total,
+    * so N concurrent filter queries cost one scan, not N (r3 verdict
+    * task 8). One row per query; over an empty listing its counts are 0.
     */
   def treeFilterCountsMulti(listing: DataFrame,
       queries: Seq[String]): DataFrame = {
@@ -146,7 +120,12 @@ object MetaOps {
         sum(when(col("ns_shown"), 1L).otherwise(0L)).as("n_ns"))
       .withColumn("cat_shown",
         lower(col("catalog_name")).contains(col("q")) || col("n_ns") > 0)
-    cat.groupBy(col("query"))
+    // one zero row per query, so a query with no listing rows still counts
+    val zeros = listing.sparkSession
+      .createDataFrame(queries.map(q => (q, 0L, 0L, false)))
+      .toDF("query", "n_tbl", "n_ns", "cat_shown")
+    cat.select("query", "n_tbl", "n_ns", "cat_shown").unionByName(zeros)
+      .groupBy(col("query"))
       .agg(sum(when(col("cat_shown"), 1L).otherwise(0L)).as("n_catalogs"),
         sum(col("n_ns")).as("n_namespaces"),
         sum(col("n_tbl")).as("n_tables"))

@@ -325,6 +325,126 @@ class RestHttpCatalogSpec extends SparkSpec with BeforeAndAfterAll {
     } finally srv.stop(0)
   }
 
+  // ---- transport edges ----------------------------------------------------
+
+  /** c_rest served unpaged behind a client-credentials token endpoint:
+    * the n-th mint answers `tok-n`, and a data request whose bearer
+    * `ok(path, query, bearer)` refuses gets a 401 with a Bearer
+    * challenge; `f` gets the base uri and the server's mint count
+    */
+  private def withMintServer(ok: (String, String, String) => Boolean)(
+      f: (String, java.util.concurrent.atomic.AtomicInteger) => Unit): Unit = {
+    val mints = new java.util.concurrent.atomic.AtomicInteger(0)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    srv.setExecutor(pool)
+    srv.createContext("/", { (ex: HttpExchange) =>
+      val path = ex.getRequestURI.getPath
+      if (path == "/v1/oauth/tokens" && ex.getRequestMethod == "POST") {
+        val b = s"""{"access_token":"tok-${mints.incrementAndGet()}"}"""
+          .getBytes("UTF-8")
+        ex.sendResponseHeaders(200, b.length.toLong)
+        ex.getResponseBody.write(b)
+      } else {
+        val bearer = Option(ex.getRequestHeaders.getFirst("Authorization"))
+          .getOrElse("").stripPrefix("Bearer ")
+        if (!ok(path, Option(ex.getRequestURI.getQuery).getOrElse(""), bearer)) {
+          ex.getResponseHeaders.set("WWW-Authenticate",
+            """Bearer realm="catalog", error="invalid_token"""")
+          ex.sendResponseHeaders(401, -1)
+        } else routeUnpaged(path) match {
+          case Some(b) =>
+            ex.sendResponseHeaders(200, b.length.toLong)
+            ex.getResponseBody.write(b)
+          case None => ex.sendResponseHeaders(404, -1)
+        }
+      }
+      ex.close()
+    })
+    srv.start()
+    try f(s"http://127.0.0.1:${srv.getAddress.getPort}", mints)
+    finally { srv.stop(0); pool.shutdown() }
+  }
+
+  private def credClient(uri: String) = new RestHttpCatalog(Seq(ConfigFx(
+    "c_rest", "rest", Map("uri" -> uri, "warehouse" -> "s3://warehouse",
+      "credential" -> "cid:sec"))))
+
+  test("a 401 carrying a WWW-Authenticate: Bearer challenge still re-mints once") {
+    val tok1Budget = new java.util.concurrent.atomic.AtomicInteger(1)
+    withMintServer((_, _, bearer) => bearer == "tok-2" ||
+        (bearer == "tok-1" && tok1Budget.getAndDecrement() > 0)) {
+      (uri, mints) =>
+        assert(rows(credClient(uri).listing(spark)) ===
+          rows(fix.listing(spark).filter(col("catalog_name") === "c_rest")))
+        assert(mints.get() == 2)
+    }
+  }
+
+  test("one mint per 401 cycle, counted at the server") {
+    // each phase of the walk accepts only its own token generation: the
+    // config fetch and top-level listing tok-1, the parent= probes tok-2,
+    // the table listings and LoadTables tok-3 — two expiries, each seen
+    // by several requests in flight at once
+    def generation(path: String, query: String): Int =
+      if (path == "/v1/config") 1
+      else if (path == "/v1/namespaces") if (query.contains("parent=")) 2 else 1
+      else 3
+    withMintServer((path, query, bearer) =>
+        bearer == s"tok-${generation(path, query)}") { (uri, mints) =>
+      assert(credClient(uri).listing(spark).count() == 4)
+      assert(mints.get() == 3)
+    }
+  }
+
+  test("a 401 on the token POST fails with its status, not as a dead connection") {
+    val posts = new java.util.concurrent.atomic.AtomicInteger(0)
+    val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    srv.createContext("/", { (ex: HttpExchange) =>
+      if (ex.getRequestMethod == "POST") {
+        posts.incrementAndGet()
+        ex.getRequestBody.readAllBytes()
+        ex.getResponseHeaders.set("WWW-Authenticate", """Basic realm="oauth"""")
+      }
+      ex.sendResponseHeaders(401, -1)
+      ex.close()
+    })
+    srv.start()
+    try {
+      val uri = s"http://127.0.0.1:${srv.getAddress.getPort}"
+      val e = intercept[RuntimeException](credClient(uri).listing(spark))
+      assert(e.getMessage == s"POST $uri/v1/oauth/tokens -> HTTP 401")
+      assert(posts.get() == 1) // a 401 is an answer: no retry, no re-send
+    } finally srv.stop(0)
+  }
+
+  test("a 302 is not followed: the request fails with its status") {
+    val elsewhere = new java.util.concurrent.atomic.AtomicInteger(0)
+    val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    srv.createContext("/", { (ex: HttpExchange) =>
+      ex.getRequestURI.getPath match {
+        case "/v1/namespaces" =>
+          ex.getResponseHeaders.set("Location", "/v1/elsewhere")
+          ex.sendResponseHeaders(302, -1)
+        case "/v1/elsewhere" =>
+          elsewhere.incrementAndGet()
+          val b = body("c_rest/namespaces.json").get
+          ex.sendResponseHeaders(200, b.length.toLong)
+          ex.getResponseBody.write(b)
+        case _ => ex.sendResponseHeaders(404, -1)
+      }
+      ex.close()
+    })
+    srv.start()
+    try {
+      val uri = s"http://127.0.0.1:${srv.getAddress.getPort}"
+      val e = intercept[RuntimeException](new RestHttpCatalog(Seq(ConfigFx(
+        "c_rest", "rest", Map("uri" -> uri)))).listing(spark))
+      assert(e.getMessage == s"GET $uri/v1/namespaces -> HTTP 302")
+      assert(elsewhere.get() == 0)
+    } finally srv.stop(0)
+  }
+
   test("multi-level namespaces: %1F paths + parent walk enumerate the tree") {
     val US = "\u001F"
     val seenParents = scala.collection.concurrent.TrieMap.empty[String, Int]
@@ -431,6 +551,58 @@ class RestHttpCatalogSpec extends SparkSpec with BeforeAndAfterAll {
         .map(r => (r.getAs[String]("namespace"), r.getAs[String]("table_name")))
       assert(listing == Seq(("sales", "returns"), ("sales", "orders"),
         ("sales.eu", "orders_eu"), ("ads", "imps"), ("ads", "clicks")))
+    } finally { srv.stop(0); pool.shutdown() }
+  }
+
+  test("one namespace level's parent= probes are in flight together") {
+    val US = "\u001F"
+    val nsKids = Map("" -> Seq("a", "b", "c"),
+      "a" -> Seq("a.x", "a.y"), "b" -> Seq("b.z"))
+    // a level's probes wait until the whole level has arrived: a walk
+    // that probed them one by one would time out on every latch
+    val levels = Map(1 -> new java.util.concurrent.CountDownLatch(3),
+      2 -> new java.util.concurrent.CountDownLatch(3))
+    val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    srv.setExecutor(pool)
+    srv.createContext("/", { (ex: HttpExchange) =>
+      val parent = Option(ex.getRequestURI.getQuery)
+        .flatMap(_.split("&").collectFirst {
+          case kv if kv.startsWith("parent=") => java.net.URLDecoder
+            .decode(kv.stripPrefix("parent="), "UTF-8").replace(US, ".")
+        })
+      val resp = ex.getRequestURI.getPath match {
+        case "/v1/namespaces" =>
+          parent.foreach { p =>
+            val level = levels(p.count(_ == '.') + 1)
+            level.countDown()
+            if (!level.await(5, java.util.concurrent.TimeUnit.SECONDS))
+              timedOut.set(true)
+          }
+          nsKids.get(parent.getOrElse("")).map(RestWire.namespacesJson(_))
+        case TablesRe(enc) =>
+          val ns = enc.replace(US, ".")
+          Some(RestWire.tableIdentsJson(ns, Seq("t")))
+        case _ => None
+      }
+      resp.map(_.getBytes("UTF-8")) match {
+        case Some(b) =>
+          ex.sendResponseHeaders(200, b.length.toLong)
+          ex.getResponseBody.write(b)
+        case None => ex.sendResponseHeaders(404, -1)
+      }
+      ex.close()
+    })
+    srv.start()
+    try {
+      val c = new RestHttpCatalog(Seq(ConfigFx("c_rest", "rest", Map(
+        "uri" -> s"http://127.0.0.1:${srv.getAddress.getPort}"))))
+      val listing = c.listing(spark).collect().toSeq
+        .map(r => r.getAs[String]("namespace"))
+      assert(listing == Seq("a", "a.x", "a.y", "b", "b.z", "c"))
+      assert(!timedOut.get)
+      assert(levels.values.forall(_.getCount == 0))
     } finally { srv.stop(0); pool.shutdown() }
   }
 

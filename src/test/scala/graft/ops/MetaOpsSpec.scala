@@ -39,16 +39,23 @@ class MetaOpsSpec extends SparkSpec {
     assert(nsHit == Set("tmp.scratch", "tmp.export_job"))
   }
 
+  private def treeCounts(listing: org.apache.spark.sql.DataFrame,
+      q: String): (Long, Long, Long) = {
+    val Array(r) = MetaOps.treeFilterCountsMulti(listing, Seq(q)).collect()
+    (r.getAs[Long]("n_catalogs"), r.getAs[Long]("n_namespaces"),
+      r.getAs[Long]("n_tables"))
+  }
+
   test("tree filter counts: namespace-only and catalog-only matches") {
-    def counts(q: String) = {
-      val r = MetaOps.treeFilterCounts(cat.listing(spark), q).collect()(0)
-      (r.getAs[Long]("n_catalogs"), r.getAs[Long]("n_namespaces"),
-        r.getAs[Long]("n_tables"))
-    }
+    def counts(q: String) = treeCounts(cat.listing(spark), q)
     assert(counts("ml") == ((1L, 1L, 0L))) // ns match, no table named *ml*
     assert(counts("train") == ((1L, 1L, 1L)))
     assert(counts("glue") == ((1L, 0L, 0L))) // catalog-only
     assert(counts("zzz") == ((0L, 0L, 0L)))
+  }
+
+  test("tree filter counts over an empty listing: one row of zeros") {
+    assert(treeCounts(cat.listing(spark).limit(0), "ml") == ((0L, 0L, 0L)))
   }
 
   test("time travel picks the latest snapshot at-or-before the pin, tags current") {
