@@ -6,22 +6,26 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
 /** Owner of the intermediates an operator persists for intra-query branch
-  * reuse. [[CacheScope.keep]] persists at MEMORY_AND_DISK and registers
-  * the frame with the scope open on the calling thread; `close()`
-  * unpersists what that scope registered (blocking) and reopens the scope
-  * that was open before it, so scopes nest:
+  * reuse, and the only code that persists or releases them.
+  * [[CacheScope.keep]] persists at MEMORY_AND_DISK and registers the frame
+  * with the scope open on the calling thread; `close()` unpersists what
+  * that scope registered (blocking) and reopens the scope that was open
+  * before it, so scopes nest:
   * {{{
   * Using.resource(CacheScope.open()) { _ => op(df).collect() }
   * }}}
   * Plans derived from a released frame keep working; they recompute
-  * instead of reading cache. With no scope open, `keep` is a plain
-  * `persist(MEMORY_AND_DISK)`: the caller unpersists the frames itself,
-  * or opens a scope.
+  * instead of reading cache. An operator that is done with a frame before
+  * the query ends (a loop's superseded round) hands it back with
+  * [[CacheScope.release]], a non-blocking unpersist that also drops the
+  * frame from the scope, so `close()` does not touch it again. With no
+  * scope open, `keep` is a plain `persist(MEMORY_AND_DISK)` and `release`
+  * a plain `unpersist`.
   *
   * A plan already cached when `keep` runs stays with whoever cached it,
-  * so closing an inner scope never drops an outer scope's frames. The
-  * scope is per thread: operators call `keep` on the thread that runs
-  * the query.
+  * so neither `release` nor closing an inner scope ever drops an outer
+  * scope's frames. The scope is per thread: operators call `keep` and
+  * `release` on the thread that runs the query.
   */
 final class CacheScope private (outer: Option[CacheScope])
     extends AutoCloseable {
@@ -54,5 +58,15 @@ object CacheScope {
     ds.persist(StorageLevel.MEMORY_AND_DISK)
     owner.foreach(_.kept += ds)
     ds
+  }
+
+  /** unpersists `ds` now (non-blocking) if the open scope owns it, and
+    * drops it from that scope; with no scope open, a plain `unpersist`
+    */
+  def release(ds: Dataset[_]): Unit = current.get match {
+    case None => ds.unpersist(blocking = false)
+    case Some(s) =>
+      val i = s.kept.indexWhere(_ eq ds)
+      if (i >= 0) s.kept.remove(i).unpersist(blocking = false)
   }
 }

@@ -107,7 +107,7 @@ object Bpe {
     * drives the loop) → one `regexp_replace` map over the dict with the
     * winner quoted (`Pattern.quote`) and space-boundary lookarounds.
     * Round N's argmax is also round N's materializer: dict N caches on
-    * that collect, and only THEN does dict N−1 unpersist — one job per
+    * that collect, and only THEN is dict N−1 released — one job per
     * round, never a dedicated `count()`, and the live set stays at two
     * vocab-sized tables with O(1) recompute depth. The open
     * [[graft.core.CacheScope]] releases the last one.
@@ -123,7 +123,7 @@ object Bpe {
     while (round <= nMerges && !done) {
       val top = pairCounts(dict)
         .orderBy(col("cnt").desc, col("pair").asc).limit(1).collect()
-      if (prev != null) { prev.unpersist(blocking = false); prev = null }
+      if (prev != null) { CacheScope.release(prev); prev = null }
       if (top.isEmpty || top(0).getAs[Long]("cnt") < 2L) done = true
       else {
         val pair = top(0).getAs[String]("pair")

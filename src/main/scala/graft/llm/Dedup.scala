@@ -398,14 +398,14 @@ object Dedup {
           .parallelize(back.indices.map(i => (back(i), minOf(find(i)))),
             math.max(1, back.length >> 16))
           .toDF("doc_id", "label")
-        edgesCached.unpersist()
+        CacheScope.release(edgesCached)
         return finish(labelsLocal, labelsLocal.select(col("doc_id")))
       }
     }
     // over the cap (or non-long ids): the distributed loop — spill the
-    // edge set to parquet off the cache, then drop the cache
+    // edge set to parquet off the cache, then release the cache
     val edges = spill(edgesCached, "edges")
-    edgesCached.unpersist()
+    CacheScope.release(edgesCached)
     def verts = edges.select(col("lo").as("doc_id"))
       .union(edges.select(col("hi").as("doc_id"))).distinct()
     // directed view (u, v): both orientations, so one groupBy(u) sees

@@ -555,6 +555,20 @@ object LlmQueries extends QueryPack {
        / (sqrt(list_reduce(list_transform(qv, x -> x*x), (x,y) -> x+y))
         * sqrt(list_reduce(list_transform(v, x -> x*x), (x,y) -> x+y)))"""
 
+  /** [[COS]] over any two list expressions. The spacing inside the literal
+    * is part of the emitted oracle SQL, so it stays as it is.
+    */
+  private def cos(a: String, b: String) =
+    s"""list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]), (x,y) -> x+y)
+           / (sqrt(list_reduce(list_transform($a, x -> x*x), (x,y) -> x+y))
+            * sqrt(list_reduce(list_transform($b, x -> x*x), (x,y) -> x+y)))"""
+
+  /** int8 dot product widened to BIGINT per term, as a DOUBLE (mirror of
+    * [[graft.functions.CosineSimI8]]'s integer accumulation)
+    */
+  private def idot(a: String, b: String) =
+    s"CAST(list_reduce(list_transform(generate_series(1, len($a)), i -> CAST($a[i] AS BIGINT) * $b[i]), (x,y) -> x+y) AS DOUBLE)"
+
   /** oracle rendering of [[Similarity.bandBucket]]: the SAME md5-seeded
     * ±1 hyperplanes (generated once in Scala), STAGED through a VALUES
     * CTE so each literal list is constructed once and joined — not
@@ -915,10 +929,6 @@ object LlmQueries extends QueryPack {
           FROM m""",
 
     "x14_ivf_centroid_topk" -> {
-      def cos(a: String, b: String) =
-        s"""list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform($a, x -> x*x), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform($b, x -> x*x), (x,y) -> x+y)))"""
       s"""WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
           cents AS (SELECT vec_id AS cid, v AS cv FROM ev
                     WHERE vec_id IN (${CentroidIds.mkString(", ")})),
@@ -947,10 +957,6 @@ object LlmQueries extends QueryPack {
     // cells — the IVF recall/cost knob demonstrated against the same
     // centroid set as x14
     "x20_ivf_nprobe_topk" -> {
-      def cos(a: String, b: String) =
-        s"""list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform($a, x -> x*x), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform($b, x -> x*x), (x,y) -> x+y)))"""
       s"""WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
           cents AS (SELECT vec_id AS cid, v AS cv FROM ev
                     WHERE vec_id IN (${CentroidIds.mkString(", ")})),
@@ -1253,10 +1259,6 @@ object LlmQueries extends QueryPack {
     // native cosine_sim ≡ list_reduce equivalence is the x15/x32
     // precedent), then x54's chi-square pipeline over cluster occupancy
     "x55_embedding_drift" -> {
-      def cos(a: String, b: String) =
-        s"""list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform($a, x -> x*x), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform($b, x -> x*x), (x,y) -> x+y)))"""
       s"""WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
           c0 AS (SELECT vec_id AS cid, v AS cv FROM ev
                  WHERE vec_id IN (${CentroidIds.mkString(", ")})),
@@ -1357,8 +1359,6 @@ object LlmQueries extends QueryPack {
     // division must (and does) agree; exact float cosine rides along to
     // expose the quantization error
     "x19_quantized_topk" -> {
-      def idot(a: String, b: String) =
-        s"CAST(list_reduce(list_transform(generate_series(1, len($a)), i -> CAST($a[i] AS BIGINT) * $b[i]), (x,y) -> x+y) AS DOUBLE)"
       s"""WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
           qz AS (SELECT vec_id, v,
                    list_max(list_transform(v, x -> abs(x))) AS ma FROM ev),
@@ -1612,10 +1612,6 @@ object LlmQueries extends QueryPack {
     // bit-for-bit; empty clusters fall back to the previous centroid in
     // both engines
     "x32_kmeans" -> {
-      def cos(a: String, b: String) =
-        s"""list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform($a, x -> x*x), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform($b, x -> x*x), (x,y) -> x+y)))"""
       s"""WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
           c0 AS (SELECT vec_id AS cid, v AS cv FROM ev
                  WHERE vec_id IN (${CentroidIds.mkString(", ")})),
@@ -1677,10 +1673,6 @@ object LlmQueries extends QueryPack {
     // list_reduce accumulation as the native cosine_sim, so the tau
     // comparison lands identically in both engines
     "x34_semdedup" -> {
-      def cos(a: String, b: String) =
-        s"""list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform($a, x -> x*x), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform($b, x -> x*x), (x,y) -> x+y)))"""
       s"""WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                       FROM embeddings),
           c0 AS (SELECT vec_id AS cid, v AS cv FROM ev
@@ -1706,10 +1698,6 @@ object LlmQueries extends QueryPack {
     // means), then x34's within-cluster lower-id scan on the REFINED
     // assignment — the composed semDedupRefinedExact
     "x56_semdedup_refined" -> {
-      def cos(a: String, b: String) =
-        s"""list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform($a, x -> x*x), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform($b, x -> x*x), (x,y) -> x+y)))"""
       s"""WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                       FROM embeddings),
           c0 AS (SELECT vec_id AS cid, v AS cv FROM ev
@@ -1784,12 +1772,6 @@ object LlmQueries extends QueryPack {
     // IVF CTE (all at k=5) intersected per query — counts are exact
     // integers, recall one double division
     "x59_ann_recall_audit" -> {
-      def cos(a: String, b: String) =
-        s"""list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform($a, x -> x*x), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform($b, x -> x*x), (x,y) -> x+y)))"""
-      def idot(a: String, b: String) =
-        s"CAST(list_reduce(list_transform(generate_series(1, len($a)), i -> CAST($a[i] AS BIGINT) * $b[i]), (x,y) -> x+y) AS DOUBLE)"
       s"""WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                       FROM embeddings),
           q AS (SELECT vec_id AS q_id, v AS qv FROM ev WHERE vec_id < 10),
@@ -1884,10 +1866,6 @@ object LlmQueries extends QueryPack {
     // candidate set cut to each query's 2 nearest coarse cosine cells
     // (ties → lowest cid, matching the Spark window order)
     "x61_ivfpq_topk" -> {
-      def cos(a: String, b: String) =
-        s"""list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform($a, x -> x*x), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform($b, x -> x*x), (x,y) -> x+y)))"""
       s"""WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                       FROM embeddings),
           $PqAdcCtes,
@@ -2135,10 +2113,6 @@ object LlmQueries extends QueryPack {
     // diverse selection: x14's assignment CTE + per-cluster centrality
     // rank + round-robin pick over the unique (rank, cid) key
     "x68_diverse_select" -> {
-      def cos(a: String, b: String) =
-        s"""list_reduce(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform($a, x -> x*x), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform($b, x -> x*x), (x,y) -> x+y)))"""
       s"""WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                       FROM embeddings),
           cents AS (SELECT vec_id AS cid, v AS cv FROM ev

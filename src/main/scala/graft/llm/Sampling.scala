@@ -433,7 +433,7 @@ object Sampling {
         - rangeBits)
     val hiCol = shiftright(col("doc_id"), dshift)
     // the previous level's cell is superseded once THIS level's grouped
-    // collect has materialized from the new cell's cache — unpersist it
+    // collect has materialized from the new cell's cache — release it
     // then (r12 advice): a deep refinement otherwise accumulates cached
     // copies of every shrinking cell until its CacheScope closes. The
     // wholesale `parts` built from it recompute through the caller's
@@ -448,7 +448,7 @@ object Sampling {
         .map(r => (r.getDouble(0), r.getLong(1), r.getLong(2)))
       collectProbe("level", grouped.length)
       if (superseded != null) {
-        superseded.unpersist(false)
+        CacheScope.release(superseded)
         superseded = null
       }
       val zeroWidth = cellHi - cellLo <= 0d ||

@@ -156,24 +156,16 @@ object Similarity {
     * verdict "What's wrong #2"): `vecs` is the widened vector table,
     * `buckets` the long-form (vec_id, band, bucket) hyperplane-sign
     * table. Build once, run [[lshNearDup(idx:VecBandIndex*]] (or probe
-    * ad-hoc batches against `buckets`) any number of times, `close()`
-    * when done — the handle OWNS both cached blocks, and builds through
-    * [[graft.core.CacheScope.keep]], so an open scope also releases
-    * them. The one-shot [[lshNearDup(embeddings:DataFrame*]]
+    * ad-hoc batches against `buckets`) any number of times; both frames
+    * build through [[graft.core.CacheScope.keep]] and are released by the
+    * open scope. The one-shot [[lshNearDup(embeddings:DataFrame*]]
     * remains truly persist-free (its bucket table is consumed inline).
     */
   final case class VecBandIndex(vecs: DataFrame, buckets: DataFrame)
-      extends AutoCloseable {
-    override def close(): Unit = {
-      vecs.unpersist(blocking = true)
-      buckets.unpersist(blocking = true)
-      ()
-    }
-  }
 
   /** build the band index once: at deployment scale this is "write the
     * bucket table next to the corpus"; locally both frames persist
-    * MEMORY_AND_DISK until `close()` or the open CacheScope closes.
+    * MEMORY_AND_DISK until the open CacheScope closes.
     */
   def buildVecBandIndex(embeddings: DataFrame, nBands: Int = 4,
       bitsPerBand: Int = 16, dim: Int = 64): VecBandIndex = {
@@ -814,24 +806,21 @@ object Similarity {
     *
     * Cache contract (r7 verdict task 5): the explicit
     * [[buildQuantizedIndex]]/[[quantizedTopK(idx:VecIndex*]] pair is the
-    * library contract — the caller owns the [[VecIndex]] handle and
-    * `close()`s it when done. This one-shot overload exists for the
+    * library contract — the caller builds the [[VecIndex]] once and
+    * queries it many times. This one-shot overload exists for the
     * driver's single-query entry (x19): it builds the index inline and
-    * drops the handle, so the index stays cached until the open
+    * drops the handle. Either way the index stays cached until the open
     * [[graft.core.CacheScope]] closes.
     */
   def quantizedTopK(embeddings: DataFrame, nQueries: Int,
       k: Int): DataFrame =
     quantizedTopK(buildQuantizedIndex(embeddings), nQueries, k)
 
-  /** a persisted, reusable vector index: the handle OWNS the cached
-    * block — `close()` (or the AutoCloseable protocol) unpersists it.
-    * Plans already derived from `df` keep working after close (lineage
+  /** a persisted, reusable vector index, released by the open scope.
+    * Plans already derived from `df` keep working after that (lineage
     * recomputes); they just stop hitting cache.
     */
-  final case class VecIndex(df: DataFrame) extends AutoCloseable {
-    override def close(): Unit = { df.unpersist(blocking = true); () }
-  }
+  final case class VecIndex(df: DataFrame)
 
   /** build the int8-quantized index once: per-vector codes materialized
     * next to the float vectors (at deployment scale: write the quantized
@@ -1104,13 +1093,11 @@ object Similarity {
     * contract for the SemDeDup path (r8 verdict "What's wrong #2"):
     * build once against a centroid table, run [[semDedup(idx:SemIndex*]]
     * at as many `tau` settings as curation needs (the assignment — the
-    * corpus-scan-heavy part — is shared), `close()` when done. The
-    * one-shot [[semDedup(embeddings:DataFrame*]] builds inline and
-    * leaves the assignment to the open scope.
+    * corpus-scan-heavy part — is shared); the assignment is released by
+    * the open scope, as for the one-shot
+    * [[semDedup(embeddings:DataFrame*]], which builds it inline.
     */
-  final case class SemIndex(assigned: DataFrame) extends AutoCloseable {
-    override def close(): Unit = { assigned.unpersist(blocking = true); () }
-  }
+  final case class SemIndex(assigned: DataFrame)
 
   /** one broadcast-centroid 1-NN corpus scan, persisted — `cents` is
     * (cid, cv) with cv already double-widened
@@ -1377,16 +1364,15 @@ object Similarity {
     * the [[Dedup.bandKeyIndex]] store-and-reload discipline for the
     * vector side: a deployment trains once (on a sample), writes the
     * index next to the corpus, and every later query session loads it
-    * without touching the embeddings. `close()` drops the cached code
-    * table ([[VecIndex]] contract).
+    * without touching the embeddings. The cached code table is released
+    * by the open scope ([[VecIndex]] contract).
     */
   final case class PqIndex(codebook: Map[Int, Seq[Seq[Double]]],
-      codes: DataFrame, dim: Int) extends AutoCloseable {
-    override def close(): Unit = { codes.unpersist(blocking = true); () }
-  }
+      codes: DataFrame, dim: Int)
 
   /** train + encode in one pass over the corpus; the code table persists
-    * until `close()` (locally — at deployment it is [[savePqIndex]]'d)
+    * until the open scope closes (locally — at deployment it is
+    * [[savePqIndex]]'d)
     */
   def buildPqIndex(embeddings: DataFrame, initIds: Seq[Long],
       nSub: Int = 4, dim: Int = 64, iters: Int = 2): PqIndex = {

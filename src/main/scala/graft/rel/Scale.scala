@@ -187,7 +187,7 @@ object Scale {
         }
       }
     }
-    vals.unpersist()
+    CacheScope.release(vals)
     val out = ranks.map { case (p, rn, frn, crn) =>
       val vlo = resolved(frn)
       val v = if (crn == frn) vlo
@@ -344,7 +344,7 @@ object Scale {
         }
       }
     }
-    vals.unpersist()
+    CacheScope.release(vals)
     val out = ranks.map { case (g, p, rn, frn, crn) =>
       val vlo = resolved((g, frn))
       val v = if (crn == frn) vlo

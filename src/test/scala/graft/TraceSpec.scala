@@ -52,7 +52,6 @@ class TraceSpec extends SparkSpec {
   }
 
   test("explain: frames a query keeps are released after its plan") {
-    spark.catalog.clearCache()
     val keeps: SparkEntry.QueryFn = (s, _) =>
       CacheScope.keep(s.range(10).toDF("id")).filter(col("id") > 3)
     val plans = Trace.explain(spark, Seq("keeps" -> keeps), "-")

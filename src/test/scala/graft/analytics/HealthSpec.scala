@@ -14,7 +14,7 @@ class HealthSpec extends SparkSpec {
   private lazy val cat = FixtureCatalog.default
   private lazy val metrics =
     Health.tableMetrics(cat.snapshots(spark), cat.tableMeta(spark),
-      Model.AsOfMs).cache()
+      Model.AsOfMs)
 
   private def byTable[T](df: org.apache.spark.sql.DataFrame, col: String): Map[String, Any] =
     df.collect().map(r =>

@@ -1,6 +1,9 @@
 package graft.core
 
-import scala.util.Using
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import scala.util.{Try, Using}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -11,8 +14,9 @@ import graft.llm.{Dedup, Multimodal, Similarity}
 
 /** Every persisting library entry point, run once inside a CacheScope,
   * leaves no cached block behind once the scope closes; and the scope
-  * itself nests, survives a throwing body, and is a plain persist when
-  * none is open.
+  * itself nests, survives a throwing body, releases early on request, and
+  * is a plain persist and unpersist when none is open. The scope is the
+  * only owner: no other main source persists or unpersists.
   */
 class CacheScopeSpec extends SparkSpec {
 
@@ -39,25 +43,33 @@ class CacheScopeSpec extends SparkSpec {
     Multimodal.mediaRows.toDS().toDF()
   }
 
-  /** builds and materializes `op` inside one scope: the call must have
-    * live persists before close and none after; returns the row count
+  /** runs `body` on a new thread, where no scope is open */
+  private def onFreshThread[T](body: => T): T = {
+    var out: Try[T] = null
+    val t = new Thread(() => out = Try(body))
+    t.start()
+    t.join()
+    out.get
+  }
+
+  /** builds and materializes `op` inside one scope: the call must add
+    * live persists before close and leave none of them after; returns the
+    * row count
     */
   private def releasedAfterClose(op: => DataFrame): Long = {
-    spark.catalog.clearCache()
-    assert(persisted.isEmpty)
+    val before = persisted.keySet.toSet
     val n = Using.resource(CacheScope.open()) { _ =>
       val n = op.collect().length.toLong
-      assert(persisted.nonEmpty,
+      assert(persisted.size > before.size,
         "the call should have live intra-query persists before close")
       n
     }
-    assert(persisted.isEmpty,
+    assert(persisted.keySet == before,
       s"close() must release every cache the call registered: $persisted")
     n
   }
 
   test("communityQuality releases its persists; its result recomputes after close") {
-    spark.catalog.clearCache()
     val out = Using.resource(CacheScope.open()) { _ =>
       val out = Similarity.communityQuality(embs, minCos = 0.3, k = 3,
         nBands = 4, bitsPerBand = 8, dim = 4)
@@ -157,18 +169,76 @@ class CacheScopeSpec extends SparkSpec {
       rows.toDF("media_id", "phash64"), "phash64", 7, 8, 2000)) > 0)
   }
 
+  test("the index handles are released by the open scope") {
+    assert(releasedAfterClose(Similarity.buildVecBandIndex(embs, nBands = 4,
+      bitsPerBand = 8, dim = 4).buckets) > 0)
+    val cents = embs.filter(col("vec_id").isin(0L, 2L))
+      .select(col("vec_id").as("cid"),
+        Similarity.asDouble(col("embedding")).as("cv"))
+    assert(releasedAfterClose(
+      Similarity.buildSemIndex(embs, cents).assigned) == 6)
+    val ids = Seq(0L, 2L, 4L)
+    assert(releasedAfterClose(
+      Similarity.buildPqIndex(embs, ids, nSub = 2, dim = 4).codes) == 6)
+    val dir = Files.createTempDirectory("pq_scope").toString
+    Using.resource(CacheScope.open()) { _ =>
+      Similarity.savePqIndex(
+        Similarity.buildPqIndex(embs, ids, nSub = 2, dim = 4), dir)
+    }
+    assert(releasedAfterClose(Similarity.loadPqIndex(spark, dir).codes) == 6)
+  }
+
   test("keep with no scope open is a plain persist") {
-    spark.catalog.clearCache()
-    val df = CacheScope.keep(spark.range(0, 17).toDF("x"))
+    val df = spark.range(0, 17).toDF("x")
+    onFreshThread(CacheScope.keep(df).count())
     assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
-    df.count()
     assert(persisted.nonEmpty)
-    spark.catalog.clearCache()
+    // no scope owns it, so the scope this test runs in leaves it alone
+    CacheScope.release(df)
+    assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    onFreshThread(CacheScope.release(df))
+    assert(persisted.isEmpty)
+  }
+
+  test("release with no scope open is a plain unpersist") {
+    val df = spark.range(0, 41).toDF("x").persist()
+    df.count()
+    onFreshThread(CacheScope.release(df))
+    assert(df.storageLevel == StorageLevel.NONE)
+    assert(persisted.isEmpty)
+  }
+
+  test("release inside a scope unpersists at once; close leaves the frame alone") {
+    val df = spark.range(0, 31).toDF("x")
+    Using.resource(CacheScope.open()) { _ =>
+      CacheScope.keep(df).count()
+      CacheScope.release(df)
+      assert(df.storageLevel == StorageLevel.NONE)
+      assert(persisted.isEmpty)
+      // cached again by a caller with no scope: no longer this scope's
+      onFreshThread(CacheScope.keep(df).count())
+    }
+    assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    onFreshThread(CacheScope.release(df))
+    assert(persisted.isEmpty)
+  }
+
+  test("release never drops a frame an outer scope kept") {
+    val df = spark.range(0, 37).toDF("x")
+    Using.resource(CacheScope.open()) { _ =>
+      CacheScope.keep(df).count()
+      Using.resource(CacheScope.open()) { _ =>
+        CacheScope.keep(df)
+        CacheScope.release(df)
+        assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      }
+      assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    }
+    assert(df.storageLevel == StorageLevel.NONE)
     assert(persisted.isEmpty)
   }
 
   test("closing an inner scope keeps the outer scope's frames") {
-    spark.catalog.clearCache()
     val a = spark.range(0, 19).toDF("x")
     val b = spark.range(0, 23).toDF("x")
     Using.resource(CacheScope.open()) { _ =>
@@ -189,7 +259,6 @@ class CacheScopeSpec extends SparkSpec {
   }
 
   test("a body that throws still releases, and the scope closes") {
-    spark.catalog.clearCache()
     val df = spark.range(0, 29).toDF("x")
     intercept[IllegalStateException] {
       Using.resource(CacheScope.open()) { _ =>
@@ -199,10 +268,29 @@ class CacheScopeSpec extends SparkSpec {
     }
     assert(df.storageLevel == StorageLevel.NONE)
     assert(persisted.isEmpty)
-    // no scope is left open on this thread
+    // the thrown-out scope is no longer current: this keep goes to the
+    // scope the test runs in, which releases it
     CacheScope.keep(df)
     Using.resource(CacheScope.open())(_ => ())
     assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
-    spark.catalog.clearCache()
+  }
+
+  test("no main source but CacheScope and Sweep persists or unpersists") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    val owners = Set("core/CacheScope.scala", "Sweep.scala")
+    val call = raw"\.(persist|unpersist)\(|\.cache\(\)".r
+    val hits = Using.resource(Files.walk(root)) { paths =>
+      paths.iterator.asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filterNot(p => owners.exists(o => p.endsWith(Path.of(o))))
+        .toSeq.flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (l, i) if call.findFirstIn(l).nonEmpty => s"$p:${i + 1}: ${l.trim}"
+          }
+        }
+    }
+    assert(hits.isEmpty, hits.mkString(
+      "persist outside CacheScope (use CacheScope.keep/release):\n", "\n", ""))
   }
 }

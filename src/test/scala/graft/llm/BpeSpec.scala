@@ -31,7 +31,6 @@ class BpeSpec extends SparkSpec {
       (1L, "a", "a", "aa", 6L),
       (2L, "a", "b", "ab", 5L),
       (3L, "aa", "ab", "aaab", 3L)))
-    spark.catalog.clearCache()
   }
 
   test("bpeTrain: greedy leftmost — a run of four merges to two pairs") {
@@ -44,7 +43,6 @@ class BpeSpec extends SparkSpec {
         r.getAs[Long]("cnt"))).sortBy(_._1)
     // r1: (a,a)=6 → "aa"; r2 over "aa aa": (aa,aa)=2 → "aaaa"
     assert(m1.toSeq == Seq((1L, "aa", 6L), (2L, "aaaa", 2L)))
-    spark.catalog.clearCache()
   }
 
   test("bpeTrain: regex metacharacters in symbols are inert") {
@@ -54,7 +52,6 @@ class BpeSpec extends SparkSpec {
         r.getAs[String]("merged"), r.getAs[Long]("cnt")))
     // ($,$) cnt 2 merges first; (.,.) cnt 1 stops the loop (< 2)
     assert(m.toSeq == Seq(("$", "$", "$$", 2L)))
-    spark.catalog.clearCache()
   }
 
   test("encode with trained merges reproduces the trainer's sequences") {
@@ -69,7 +66,6 @@ class BpeSpec extends SparkSpec {
     // after (a,a) then (a,b): aaab → [aa, ab]; ab → [ab]
     assert(enc(0L) == Seq("aa", "ab", "aa", "ab", "ab"))
     assert(enc(1L) == Seq("aa", "ab", "ab"))
-    spark.catalog.clearCache()
   }
 
   test("pairRanking: overlap counting and deterministic tie order") {
@@ -85,7 +81,6 @@ class BpeSpec extends SparkSpec {
     val df = docsDf(Seq((0L, "x y z", "s")))
     assert(Bpe.pairRanking(df, topK = 10).collect().isEmpty)
     assert(Bpe.bpeTrain(df, nMerges = 3).collect().isEmpty)
-    spark.catalog.clearCache()
   }
 
   private def mergeTable(df: org.apache.spark.sql.DataFrame) =
@@ -104,15 +99,12 @@ class BpeSpec extends SparkSpec {
     }
     val df = docsDf(rows)
     val full = mergeTable(Bpe.bpeTrain(df, nMerges = 10))
-    spark.catalog.clearCache()
     val inc = mergeTable(Bpe.bpeTrainIncremental(df, nMerges = 10))
-    spark.catalog.clearCache()
     assert(full.nonEmpty && inc == full)
     // the r13 local finish (default cap) and the forced distributed
     // loop must produce the same table as the recount ground truth
     val dist = mergeTable(Bpe.bpeTrainIncremental(df, nMerges = 10,
       localDictCap = 0))
-    spark.catalog.clearCache()
     assert(dist == full)
   }
 
@@ -128,12 +120,9 @@ class BpeSpec extends SparkSpec {
     val df = docsDf(Seq(
       (0L, s"${astral}a ${astral}a ${bmp}a ${bmp}a", "s")))
     val full = mergeTable(Bpe.bpeTrain(df, nMerges = 2))
-    spark.catalog.clearCache()
     val local = mergeTable(Bpe.bpeTrainIncremental(df, nMerges = 2))
-    spark.catalog.clearCache()
     val dist = mergeTable(Bpe.bpeTrainIncremental(df, nMerges = 2,
       localDictCap = 0))
-    spark.catalog.clearCache()
     assert(full.size == 2 && local == full && dist == full)
     // the UTF-8-smaller pair (the BMP replacement char) must win round 1
     assert(full.head._2 == bmp,
@@ -154,7 +143,6 @@ class BpeSpec extends SparkSpec {
     val sizes = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int)]
     Bpe.bpeTrainIncremental(docsDf(rows), nMerges = 12,
       planProbe = (r, n, d) => sizes += ((r, n, d)), localDictCap = 0)
-    spark.catalog.clearCache()
     val later = sizes.toSeq.filter(_._1 >= 2).map(_._2)
     assert(later.nonEmpty, "expected at least 2 rounds")
     assert(later.distinct.size == 1,
@@ -175,10 +163,8 @@ class BpeSpec extends SparkSpec {
   test("bpeTrainIncremental: early stop and empty corpus behave like bpeTrain") {
     val single = docsDf(Seq((0L, "x y z", "s")))
     assert(Bpe.bpeTrainIncremental(single, nMerges = 3).collect().isEmpty)
-    spark.catalog.clearCache()
     val df = docsDf(Seq((0L, "$$ $$ ..", "s")))
     assert(mergeTable(Bpe.bpeTrainIncremental(df, nMerges = 2)) ==
       Seq((1L, "$", "$", "$$", 2L)))
-    spark.catalog.clearCache()
   }
 }

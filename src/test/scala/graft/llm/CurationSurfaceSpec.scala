@@ -27,7 +27,6 @@ class CurationSurfaceSpec extends SparkSpec {
     val pairs = merges.sortBy(_.getAs[Long]("rank"))
       .map(r => (r.getAs[String]("left"), r.getAs[String]("right"))).toSeq
     assert(Bpe.encode(docs, pairs).count() == 500)
-    spark.catalog.clearCache()
   }
 
   test("graph + budget curation surface through graft.llm") {
@@ -46,7 +45,6 @@ class CurationSurfaceSpec extends SparkSpec {
     assert(Sampling.tokenShards(docs).count() == 500)
     assert(Pipeline.epochSchedule(docs).count() > 0)
     assert(Dedup.takedownPropagate(docs).count() > 0)
-    spark.catalog.clearCache()
   }
 
   test("perceptual media surface through graft.llm") {
@@ -65,6 +63,5 @@ class CurationSurfaceSpec extends SparkSpec {
     assert(Multimodal.pngTextChunks(media).count() == 3)
     assert(Multimodal.stripTextAudit(media).count() == nMedia)
     assert(Multimodal.mediaCurationFunnel(media).count() == 6)
-    spark.catalog.clearCache()
   }
 }

@@ -208,7 +208,7 @@ class PipelineOpsSpec extends SparkSpec {
       dim = 4).isEmpty, "the 2k default reports nothing here")
   }
 
-  test("quantized index: build/query matches one-shot; close unpersists") {
+  test("quantized index: build/query matches one-shot") {
     import org.apache.spark.storage.StorageLevel
     val rnd = new scala.util.Random(3)
     val df = embDf((0L until 40L).map(i =>
@@ -218,12 +218,9 @@ class PipelineOpsSpec extends SparkSpec {
         r.getAs[Int]("rank"))).toSet
     val oneShot = key(Similarity.quantizedTopK(df, nQueries = 3, k = 5)
       .collect())
-    spark.catalog.clearCache() // the one-shot form leaves the index cached
     val idx = Similarity.buildQuantizedIndex(df)
     assert(idx.df.storageLevel != StorageLevel.NONE, "index is persisted")
     assert(key(Similarity.quantizedTopK(idx, 3, 5).collect()) == oneShot)
-    idx.close()
-    assert(idx.df.storageLevel == StorageLevel.NONE, "close unpersists")
   }
 
   test("dupSpans finds shared k-token runs via gaps-and-islands") {
@@ -363,7 +360,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(res.toSeq == Seq(
       (1L, "a", 5L, 5L, 0.5),
       (2L, "b", 3L, 8L, 0.8)))
-    spark.catalog.clearCache()
   }
 
   test("vocabCoverage: count ties rank alphabetically, topK truncates") {
@@ -372,7 +368,6 @@ class PipelineOpsSpec extends SparkSpec {
       .collect().map(r => (r.getAs[Long]("rank"), r.getAs[String]("tok")))
     // y and z tie at 2 — y wins alphabetically; topK=1 keeps only it
     assert(res.toSeq == Seq((1L, "y")))
-    spark.catalog.clearCache()
   }
 
   test("temperatureResample: smallest domain keeps all, p_keep = sqrt ratio") {
@@ -394,7 +389,6 @@ class PipelineOpsSpec extends SparkSpec {
       .filter(_.getAs[Boolean]("kept")).map(_.getAs[Long]("doc_id")).toSet
     assert(again == res.filter(_.getAs[Boolean]("kept"))
       .map(_.getAs[Long]("doc_id")).toSet)
-    spark.catalog.clearCache()
   }
 
   test("sourceOverlap: exact pairwise Jaccard incl. a zero-overlap pair") {
@@ -410,7 +404,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(res(("s1", "s2")) == ((4L, 3L, 2L, 0.4)))       // {c,d} / 5
     assert(res(("s1", "s3")) == ((4L, 2L, 0L, 0.0)))
     assert(res(("s2", "s3")) == ((3L, 2L, 0L, 0.0)))
-    spark.catalog.clearCache()
   }
 
   test("incrementalDedup: corpus hit, lower-id in-batch rule, short-doc pass") {
@@ -433,7 +426,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(res(3L) == ((false, true, false)))
     assert(res(4L) == ((false, false, true)))
     assert(res(5L) == ((false, false, true))) // no bands, never a dup
-    spark.catalog.clearCache()
   }
 
   test("incrementalDedup ≡ gate against a parquet-round-tripped band index") {
@@ -452,7 +444,6 @@ class PipelineOpsSpec extends SparkSpec {
     val direct = Dedup.incrementalDedup(corpus, batch)
       .collect().map(_.toSeq).toSet
     assert(viaIndex == direct && viaIndex.nonEmpty)
-    spark.catalog.clearCache()
   }
 
   test("pqQuery ≡ pqTopK, including through a saved/loaded index") {
@@ -470,12 +461,9 @@ class PipelineOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("pq_index").toString
     Similarity.savePqIndex(built, dir)
-    built.close()
     val loaded = Similarity.loadPqIndex(spark, dir)
     assert(loaded.dim == 64 && loaded.codebook == built.codebook)
     assert(rows(Similarity.pqQuery(loaded, queries, k = 3)) == direct)
-    loaded.close()
-    spark.catalog.clearCache()
   }
 
   test("lshRecallAudit: identical pair hits decile 9, disjoint pairs miss") {
@@ -491,7 +479,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(out.size == 2)
     assert(out(9) == ((1L, 1L, 1.0)))
     assert(out(0) == ((2L, 0L, 0.0)))
-    spark.catalog.clearCache()
   }
 
   test("corpusDrift: hand-computed chi-square, count-then-token ranking") {
@@ -505,7 +492,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(out.size == 2)
     assert(out("a") == ((1L, 3L, 1L, 1.0)))  // tie on count → token asc
     assert(out("b") == ((2L, 1L, 3L, 1.0)))
-    spark.catalog.clearCache()
   }
 
   test("communityQuality matches a driver-side recomputation on sf0.001") {
@@ -570,7 +556,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(out.map(_.getAs[Long]("n_internal")).sum > 0)
     assert(out.map(_.getAs[Long]("n_cut")).sum > 0,
       "tau must leave some weak cross-community edges")
-    spark.catalog.clearCache()
   }
 
   test("curationFunnel: sequential attrition consistent with the gates") {
@@ -591,7 +576,6 @@ class PipelineOpsSpec extends SparkSpec {
     val nQuality = TextOps.qualityGate(docs).filter(col("keep")).count()
     assert(rows(0)._4 == nQuality)
     assert(rows(3)._4 > 0, "some docs must survive the whole funnel")
-    spark.catalog.clearCache()
   }
 
   test("budgetSelect equals the global greedy rule incl. boundary bucket") {
@@ -620,7 +604,6 @@ class PipelineOpsSpec extends SparkSpec {
       rows.foreach { case (id, _, _) =>
         assert(out(id) == expect(id), s"frac=$frac doc=$id")
       }
-      spark.catalog.clearCache()
     }
   }
 
@@ -630,7 +613,6 @@ class PipelineOpsSpec extends SparkSpec {
     val out = Sampling.tokenShards(docs, shardTokens = 512L,
       nBuckets = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    spark.catalog.clearCache()
     // driver ground truth: global hash-order first-fit
     val ordered = out.sortBy { case (id, u, _, _) => (u, id) }
     var acc = 0L
@@ -723,7 +705,6 @@ class PipelineOpsSpec extends SparkSpec {
     val oneShot = Similarity.communityQuality(embs, minCos = 0.3, k = 5,
       nBands = 4, bitsPerBand = 8).collect()
       .map(r => r.toSeq.toList).toSet
-    spark.catalog.clearCache()
     // the stored artifacts a deployment would materialize
     val g = Similarity.knnGraph(embs, k = 5, nBands = 4, bitsPerBand = 8)
     val ua = g.select(least(col("src"), col("dst")).as("doc_a"),
@@ -736,7 +717,6 @@ class PipelineOpsSpec extends SparkSpec {
       comms.select(col("vec_id"), col("community_id"))).collect()
       .map(r => r.toSeq.toList).toSet
     assert(stored == oneShot)
-    spark.catalog.clearCache()
   }
 
   test("graphRefreshCycleWith(stored artifacts) equals the in-query build") {
@@ -751,7 +731,6 @@ class PipelineOpsSpec extends SparkSpec {
     val oneShot = graft.llm.Similarity.graphRefreshCycle(docs, newDocs,
         embs, minCos = 0.3, k = 5, nBands = 4, bitsPerBand = 8)
       .collect().map(_.toSeq.toList).toSet
-    spark.catalog.clearCache()
     // the stored artifacts a deployment materializes at full rebuild
     val changed = graft.llm.Dedup.snapshotDiff(docs, newDocs)
       .filter(col("status") === "changed")
@@ -769,7 +748,6 @@ class PipelineOpsSpec extends SparkSpec {
         comms, minCos = 0.3, nBands = 4, bitsPerBand = 8)
       .collect().map(_.toSeq.toList).toSet
     assert(stored == oneShot && oneShot.nonEmpty)
-    spark.catalog.clearCache()
   }
 
   test("corpusDrift: an empty incoming slice yields finite chi2, no crash") {
@@ -788,7 +766,6 @@ class PipelineOpsSpec extends SparkSpec {
         s"empty slice must contribute zero drift: $r")
       assert(r.getAs[Long]("c_b") == 0L)
     }
-    spark.catalog.clearCache()
   }
 
   test("embeddingDrift: an empty slice yields finite chi2, no crash") {
@@ -802,7 +779,6 @@ class PipelineOpsSpec extends SparkSpec {
       val chi2 = r.getAs[Double]("chi2")
       assert(!chi2.isNaN && !chi2.isInfinite && chi2 == 0.0, s"$r")
     }
-    spark.catalog.clearCache()
   }
 
   test("embeddingDrift: hand-computed cluster-occupancy chi-square") {
@@ -819,7 +795,6 @@ class PipelineOpsSpec extends SparkSpec {
     // cluster 0: {0,2,4 | 5}: e=2 each → 1/2 + 1/2; cluster 1: {∅ | 1,3}
     assert(out(0L) == ((3L, 1L, 1.0)))
     assert(out(1L) == ((0L, 2L, 2.0)))
-    spark.catalog.clearCache()
   }
 
   /** independent md5 reference for Sampling.hashSplit (seed "split") */
@@ -896,10 +871,8 @@ class PipelineOpsSpec extends SparkSpec {
     val inits = Seq(0L, 1L)
     val exact = semKey(Similarity.semDedupRefinedExact(df, inits,
       iters = 3, tau = 0.9).collect())
-    spark.catalog.clearCache()
     val scaled = semKey(Similarity.semDedupRefined(df, inits, tau = 0.9,
       maxIters = 3).collect())
-    spark.catalog.clearCache()
     assert(scaled == exact, "partial-agg means land in the same clusters")
     // the refinement separated the groups: 10's cluster differs from 0's
     assert(exact(10L)._1 != exact(0L)._1)
@@ -907,16 +880,14 @@ class PipelineOpsSpec extends SparkSpec {
     assert(exact(0L)._3 && exact(10L)._3 && !exact(11L)._3)
   }
 
-  test("sem index: build/reuse at two taus matches one-shots; close unpersists") {
+  test("sem index: build/reuse at two taus matches one-shots") {
     import org.apache.spark.storage.StorageLevel
     val rnd = new scala.util.Random(11)
     val df = embDf((0L until 30L).map(i =>
       i -> Seq.fill(6)(rnd.nextFloat() - 0.5f)))
     val inits = Seq(0L, 7L, 14L)
     val strict = semKey(Similarity.semDedup(df, inits, tau = 0.95).collect())
-    spark.catalog.clearCache()
     val loose = semKey(Similarity.semDedup(df, inits, tau = 0.5).collect())
-    spark.catalog.clearCache()
     val e = df.select(col("vec_id"),
       Similarity.asDouble(col("embedding")).as("v"))
     val cents = e.filter(col("vec_id").isin(inits: _*))
@@ -927,11 +898,9 @@ class PipelineOpsSpec extends SparkSpec {
       Dedup.MaxBucket).collect()) == strict)
     assert(semKey(Similarity.semDedup(idx, 0.5,
       Dedup.MaxBucket).collect()) == loose)
-    idx.close()
-    assert(idx.assigned.storageLevel == StorageLevel.NONE)
   }
 
-  test("vec band index: build/query matches one-shot; close unpersists") {
+  test("vec band index: build/query matches one-shot") {
     import org.apache.spark.storage.StorageLevel
     val rnd = new scala.util.Random(5)
     val df = embDf((0L until 60L).map(i =>
@@ -946,9 +915,6 @@ class PipelineOpsSpec extends SparkSpec {
     assert(idx.buckets.storageLevel != StorageLevel.NONE)
     assert(key(Similarity.lshNearDup(idx, 0.2,
       Dedup.MaxBucket).collect()) == oneShot)
-    idx.close()
-    assert(idx.vecs.storageLevel == StorageLevel.NONE)
-    assert(idx.buckets.storageLevel == StorageLevel.NONE)
   }
 
   test("embIngestGate flags only batch vectors with a close corpus neighbor") {
@@ -1026,7 +992,6 @@ class PipelineOpsSpec extends SparkSpec {
         nBuckets, lo = 0.0, hi = 1.0, maxId = (n - 1).toLong,
         (k, c) => collects += k -> c)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    spark.catalog.clearCache()
     assert(out.size == n)
     val expect = greedyExpect(rows, budget)
     rows.foreach { case (id, _, _) => assert(out(id) == expect(id), id) }
@@ -1064,7 +1029,6 @@ class PipelineOpsSpec extends SparkSpec {
         nBuckets, lo = 0.0, hi = 1.0, maxId = (n - 1).toLong,
         (k, c) => collects += k -> c)
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    spark.catalog.clearCache()
     assert(out.size == n)
     val expect = greedyExpect(rows, budget)
     rows.foreach { case (id, _, _) => assert(out(id) == expect(id), id) }
@@ -1086,6 +1050,5 @@ class PipelineOpsSpec extends SparkSpec {
     assert(labels == full)
     assert(Dedup.clusterLabels(ids, pairs).columns.toSeq ==
       Seq("doc_id", "cluster_id"))
-    spark.catalog.clearCache()
   }
 }

@@ -157,7 +157,6 @@ class PipelinePropsSpec extends SparkSpec {
         .map(r => (r.getAs[String]("left"), r.getAs[String]("right"),
           r.getAs[String]("merged"), r.getAs[Long]("cnt"))).toSeq
       assert(got == expected, s"trial $trial: merge tables diverge")
-      spark.catalog.clearCache()
     }
   }
 
@@ -184,7 +183,6 @@ class PipelinePropsSpec extends SparkSpec {
       assert(r.getAs[Double]("u") == u)
       assert(r.getAs[Boolean]("kept") == (u < pKeep))
     }
-    spark.catalog.clearCache()
   }
 
   test("domainCapAtScale is bitwise-identical to domainCap on random " +
@@ -218,7 +216,6 @@ class PipelinePropsSpec extends SparkSpec {
       assert(out((a, b)) == ((va.size.toLong, vb.size.toLong, inter, j)))
       assert(j >= 0.0 && j <= 1.0)
     }
-    spark.catalog.clearCache()
   }
 
   test("tokenDiversity matches an independent count-based recomputation") {
@@ -263,7 +260,6 @@ class PipelinePropsSpec extends SparkSpec {
       if (id % 2 == 0 && text.split(" ").length >= 3)
         assert(dvc, s"copied doc $id must flag vs corpus")
     }
-    spark.catalog.clearCache()
   }
 
   test("corpusDrift: chi2 >= 0 and bitwise-symmetric under slice swap") {
@@ -286,6 +282,5 @@ class PipelinePropsSpec extends SparkSpec {
       // addition is commutative; both expected values swap roles)
       assert(rev(tok) == ((rank, cb, ca, chi2)), s"$tok")
     }
-    spark.catalog.clearCache()
   }
 }

@@ -50,7 +50,6 @@ class TopKPlanSpec extends SparkSpec {
   test("x45 vocabCoverage plans a TakeOrderedAndProject pre-cut") {
     assertTopKShape(TextOps.vocabCoverage(docs, topK = 5, minCount = 1L),
       "vocabCoverage")
-    spark.catalog.clearCache()
   }
 
   test("x54 corpusDrift plans a TakeOrderedAndProject pre-cut") {
@@ -59,7 +58,6 @@ class TopKPlanSpec extends SparkSpec {
         (3L, "the slow brown dog naps under the quick tree"),
         (4L, "x y z the fox"))), topK = 5, minCount = 1L),
       "corpusDrift")
-    spark.catalog.clearCache()
   }
 
   test("x47 Bpe.pairRanking plans a TakeOrderedAndProject pre-cut") {
@@ -123,6 +121,5 @@ class TopKPlanSpec extends SparkSpec {
     val got = TextOps.vocabCoverage(docs, topK = 5, minCount = 1L)
     assert(got.collect().toSeq.sortBy(_.getAs[Long]("rank")) ==
       ref.collect().toSeq.sortBy(_.getAs[Long]("rank")))
-    spark.catalog.clearCache()
   }
 }

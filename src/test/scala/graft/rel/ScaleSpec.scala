@@ -75,7 +75,6 @@ class ScaleSpec extends SparkSpec {
         val ref = quantileContRef(sorted, p)
         assert(out(p) == ref, s"case $ci p=$p: ${out(p)} != $ref")
       }
-      spark.catalog.clearCache()
     }
   }
 
@@ -94,7 +93,6 @@ class ScaleSpec extends SparkSpec {
     val out = Scale.exactQuantilesByGroup(df, "grp", "value", probs,
         nBuckets = 32).collect()
       .map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-    spark.catalog.clearCache()
     rows.groupBy(_._1).foreach { case (g, gv) =>
       val sorted = gv.map(_._2).toArray.sorted
       probs.foreach { p =>
@@ -118,7 +116,6 @@ class ScaleSpec extends SparkSpec {
       .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     val sorted = vs.filterNot(_.isNaN).toArray.sorted
     probs.foreach(p => assert(out(p) == quantileContRef(sorted, p)))
-    spark.catalog.clearCache()
   }
 
   test("exactQuantiles resolves ulp-adjacent subnormals via the exact " +
@@ -136,7 +133,6 @@ class ScaleSpec extends SparkSpec {
       .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     val sorted = vs.toArray.sorted
     probs.foreach(p => assert(out(p) == quantileContRef(sorted, p)))
-    spark.catalog.clearCache()
   }
 
   test("exactQuantilesByGroup keeps the NULL group (null-safe match)") {
@@ -152,7 +148,6 @@ class ScaleSpec extends SparkSpec {
         nBuckets = 16).collect()
       .map(r => (Option(r.getString(0)), r.getDouble(1)) -> r.getDouble(2))
       .toMap
-    spark.catalog.clearCache()
     assert(out.size == 6)
     rows.groupBy(_._1).foreach { case (g, gv) =>
       val sorted = gv.map(_._2).toArray.sorted
@@ -174,7 +169,6 @@ class ScaleSpec extends SparkSpec {
     val empty = Scale.exactQuantiles(df.filter(col("id") < 0L), "value",
       Seq(0.5))
     assert(empty.collect().isEmpty)
-    spark.catalog.clearCache()
   }
 }
 

@@ -78,7 +78,6 @@ class FileStreamSpec extends SparkSpec {
     val all = StreamOps.budgetGateStream(spark, dir, budgetFrac = 1.0)
     assert(all.filter(col("action") === "train").count() == 60L,
       "full budget must admit every incoming doc")
-    spark.catalog.clearCache()
   }
 
   test("restaging self-heals stale directory links from the pre-fix layout") {

@@ -110,6 +110,5 @@ class StreamCleanSpec extends SparkSpec {
         d.filter(col("doc_id") % 10 =!= 0), d.filter(col("doc_id") % 10 === 0))
       .filter(col("dup_vs_corpus")).collect().map(_.getLong(0)).toSet
     assert(streamedDocs == batchDup && streamedDocs.nonEmpty)
-    spark.catalog.clearCache()
   }
 }
