@@ -34,9 +34,9 @@ trait SparkSpec extends AnyFunSuite {
       spark.catalog.clearCache()
       rdds.foreach(_.unpersist(blocking = true))
       outcome match {
-        case Succeeded => Failed(s"left cached after its scope closed: " +
-          s"RDDs ${rdds.map(r => s"${r.id} (${r.name})").mkString(", ")}" +
-          (if (plans) "; CacheManager entries" else ""))
+        case Succeeded => Failed("left cached after its scope closed: " +
+          s"RDDs ${rdds.map(_.id).mkString("[", ", ", "]")}, " +
+          s"CacheManager entries: $plans")
         case failed => failed
       }
     }

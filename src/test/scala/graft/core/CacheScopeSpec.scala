@@ -193,16 +193,7 @@ class CacheScopeSpec extends SparkSpec {
     onFreshThread(CacheScope.keep(df).count())
     assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
     assert(persisted.nonEmpty)
-    // no scope owns it, so the scope this test runs in leaves it alone
-    CacheScope.release(df)
-    assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK)
-    onFreshThread(CacheScope.release(df))
-    assert(persisted.isEmpty)
-  }
-
-  test("release with no scope open is a plain unpersist") {
-    val df = spark.range(0, 41).toDF("x").persist()
-    df.count()
+    // and release is a plain unpersist
     onFreshThread(CacheScope.release(df))
     assert(df.storageLevel == StorageLevel.NONE)
     assert(persisted.isEmpty)
@@ -290,7 +281,6 @@ class CacheScopeSpec extends SparkSpec {
           }
         }
     }
-    assert(hits.isEmpty, hits.mkString(
-      "persist outside CacheScope (use CacheScope.keep/release):\n", "\n", ""))
+    assert(hits.isEmpty, "; persist through CacheScope.keep and release")
   }
 }

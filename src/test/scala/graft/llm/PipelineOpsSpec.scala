@@ -1,7 +1,10 @@
 package graft.llm
 
+import scala.util.Using
+
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.core.CacheScope
 
 /** Round-7 pipeline operators: segment-level boilerplate removal,
   * SemDeDup, per-domain caps, fuzzy (MinHash) decontamination.
@@ -216,8 +219,9 @@ class PipelineOpsSpec extends SparkSpec {
     def key(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
       (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
         r.getAs[Int]("rank"))).toSet
-    val oneShot = key(Similarity.quantizedTopK(df, nQueries = 3, k = 5)
-      .collect())
+    // the one-shot form's index stays cached until its scope closes
+    val oneShot = Using.resource(CacheScope.open())(_ =>
+      key(Similarity.quantizedTopK(df, nQueries = 3, k = 5).collect()))
     val idx = Similarity.buildQuantizedIndex(df)
     assert(idx.df.storageLevel != StorageLevel.NONE, "index is persisted")
     assert(key(Similarity.quantizedTopK(idx, 3, 5).collect()) == oneShot)
@@ -886,8 +890,9 @@ class PipelineOpsSpec extends SparkSpec {
     val df = embDf((0L until 30L).map(i =>
       i -> Seq.fill(6)(rnd.nextFloat() - 0.5f)))
     val inits = Seq(0L, 7L, 14L)
-    val strict = semKey(Similarity.semDedup(df, inits, tau = 0.95).collect())
-    val loose = semKey(Similarity.semDedup(df, inits, tau = 0.5).collect())
+    def oneShot(tau: Double) = Using.resource(CacheScope.open())(_ =>
+      semKey(Similarity.semDedup(df, inits, tau = tau).collect()))
+    val (strict, loose) = (oneShot(0.95), oneShot(0.5))
     val e = df.select(col("vec_id"),
       Similarity.asDouble(col("embedding")).as("v"))
     val cents = e.filter(col("vec_id").isin(inits: _*))
